@@ -21,6 +21,9 @@ import org.apache.spark.sql.SparkSession
   * Each query is timed SPARK_GRAFT_REPS times (default 3) and the best is
   * reported — single-run numbers at this scale swing ±30-50% with JIT and
   * page-cache state, which made round-over-round comparisons unattributable.
+  * A query whose rep throws is not timed at all: it is left out of
+  * `queries` and `total` and listed with its first message in `errors`,
+  * counted in `failed`.
   * The full metrics JSON is also written to `target/bench.json` so the
   * artifact survives log-tail truncation of the (long) stdout line.
   */
@@ -70,6 +73,45 @@ object Bench {
           s"bad SPARK_GRAFT_SWEEP_FLOORS entry '$kv': expected name=sec")
       }
     }
+
+  /** A JSON string literal: quotes, backslashes and control characters
+    * escaped, so an exception message can never break the artifact. */
+  private[graft] def jsonString(raw: String): String = {
+    val b = new StringBuilder("\"")
+    raw.foreach {
+      case '"' => b ++= "\\\""
+      case '\\' => b ++= "\\\\"
+      case c if c < ' ' => b += '\\'; b ++= f"u${c.toInt}%04x"
+      case c => b += c
+    }
+    (b += '"').toString
+  }
+
+  /** Best-of-`reps` seconds for `q` through the noop sink, each rep
+    * inside a CacheScope after `beforeRep` (the off-clock clear) — or, if
+    * a rep throws, the first message (≤300 chars). A throwing rep is
+    * never timed: it would read as a fast query. The first failure ends
+    * the query's reps. */
+  private[graft] def timeQuery(
+      spark: SparkSession,
+      q: graft.queries.OpQuery,
+      dir: String,
+      reps: Int,
+      beforeRep: () => Unit = () => ()): Either[String, Double] = {
+    val times = scala.collection.mutable.ArrayBuffer.empty[Double]
+    var error: Option[String] = None
+    while (times.size < reps && error.isEmpty) {
+      beforeRep()
+      graft.core.CacheScope.run {
+        val t0 = System.nanoTime()
+        try {
+          force(q.run(spark, dir))
+          times += (System.nanoTime() - t0) / 1e9
+        } catch { case e: Throwable => error = Some(e.toString.take(300)) }
+      }
+    }
+    error.toLeft(times.min)
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -242,42 +284,32 @@ object Bench {
       offClockClear()
     }
 
-    val results = SparkEntry.catalog.map { q =>
-      // immutable fixture prep (streaming source splits etc.) runs OFF
-      // the clock: it is harness cost, not stream/query execution. A
-      // failed prep must not abort the bench, but it MUST be visible —
-      // silently falling through pushes the prep cost back inside the
-      // timed run, inflating exactly the numbers this hook stabilizes
+    // immutable fixture prep (streaming source splits etc.) runs OFF the
+    // clock: it is harness cost, not stream/query execution. A failed
+    // prep must not abort the bench, but it MUST be visible — silently
+    // falling through pushes the prep cost back inside the timed run,
+    // inflating exactly the numbers this hook stabilizes.
+    //
+    // Every rep is preceded by an off-clock clear (r16): a query that
+    // .cache()s an intermediate for its multiple consumers used to hand
+    // that cache to its next rep, so best-of-N reported a cached rerun
+    // rather than a from-parquet computation — exactly the "persisted
+    // intermediates" class the round rules name as gaming. Within-rep
+    // multi-consumer caching (the legitimate optimization) is untouched,
+    // and each rep's CacheScope releases the query's caches when the rep
+    // ends, off the clock (r17).
+    val outcomes = SparkEntry.catalog.map { q =>
       try q.prepare.foreach(_(spark, sfDir)) catch {
         case e: Throwable =>
           System.err.println(
             s"[bench] prepare failed for ${q.name} (cost lands in-run): $e")
       }
       val qReps = if (streamingReps(q.name)) math.min(2, reps) else reps
-      val times = (1 to qReps).map { _ =>
-        // clear BETWEEN reps as well (r16): a query that .cache()s an
-        // intermediate for its multiple consumers used to hand that cache
-        // to its next rep, so best-of-N reported a cached rerun rather
-        // than a from-parquet computation — exactly the "persisted
-        // intermediates" class the round rules name as gaming. With the
-        // clear, every rep computes from the parquet inputs; within-rep
-        // multi-consumer caching (the legitimate optimization) is
-        // untouched. The clear itself runs off the clock.
-        // r17: the rep additionally runs inside a CacheScope — the
-        // query's registered caches unpersist when the rep ends (guide §5
-        // "unpersist when done"; the scope release sits OFF the clock,
-        // after dt is read).
-        offClockClear()
-        var dt = 0.0
-        graft.core.CacheScope.run {
-          val t0 = System.nanoTime()
-          try { force(q.run(spark, sfDir)) } catch { case _: Throwable => () }
-          dt = (System.nanoTime() - t0) / 1e9
-        }
-        dt
-      }
-      q.name -> times.min
+      q.name -> timeQuery(spark, q, sfDir, qReps, () => offClockClear())
     }
+    val results = outcomes.collect { case (n, Right(t)) => n -> t }
+    val errors = outcomes.collect { case (n, Left(e)) => n -> e }
+    errors.foreach { case (n, e) => System.err.println(s"[bench] $n failed: $e") }
     val canaryPost = canary(spark)
 
     // 0.1ms resolution keeps the artifact line compact enough to survive
@@ -286,6 +318,9 @@ object Bench {
     val qs = results.map { case (k, v) => "\"" + k + "\":" + r4(v) }
       .mkString("{", ",", "}")
     val total = r4(results.map(_._2).sum)
+    val failed = errors.size
+    val errorsJson = errors.map { case (n, e) => jsonString(n) + ":" + jsonString(e) }
+      .mkString("{", ",", "}")
     // The artifact self-adjudicates: drift=true whenever either canary
     // reading sits above the controlled band, and total_normalized
     // rescales the total by the band midpoint over the mean canary —
@@ -309,7 +344,7 @@ object Bench {
     }.mkString("{", ",", "}")
     val canaryJson =
       s""","canary":{"pre":${r4(canaryPre)},"post":${r4(canaryPost)},"pre_readings":$preJson,"band":[$bandLo,$bandHi],"pre_attempts":$preAttempts},"sweep_canary":{"ratio":${r4(sweepRatio)},"measured_vs_floor":$sweepJson},"drift":$drift,"total_normalized":$totalNormalized"""
-    // end-to-end incremental pipeline tick (typed obs + bucketed sink):
+    // end-to-end incremental pipeline tick (bucketed sink):
     // full build vs delta tick wall time and write volume
     val tick =
       if (sys.env.getOrElse("SPARK_GRAFT_TICK", "1") == "0") ""
@@ -321,13 +356,10 @@ object Bench {
           // a failed equivalence gate is a correctness signal, not an
           // environment hiccup — it must survive into the artifact
           System.err.println(s"tick bench failed: $e")
-          val msg = String.valueOf(e.getMessage)
-            .replace("\\", "\\\\").replace("\"", "\\\"")
-            .replace("\n", " ").take(300)
-          s""","tick_error":"$msg""""
+          ",\"tick_error\":" + jsonString(String.valueOf(e.getMessage).take(300))
       }
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"queries":$qs$canaryJson$tick,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"queries":$qs,"failed":$failed,"errors":$errorsJson$canaryJson$tick,"sf":"$sfDir"}"""
     val out = java.nio.file.Paths.get("target/bench.json")
     java.nio.file.Files.createDirectories(out.getParent)
     java.nio.file.Files.write(out, (json + "\n").getBytes("UTF-8"))
@@ -340,22 +372,25 @@ object Bench {
     // [success] chatter.
     spark.stop()
     println(json)
-    println(summaryLine(total, reps, tick, results.size, sfDir, canaryJson))
+    println(summaryLine(total, reps, tick, SparkEntry.catalog.size, sfDir, canaryJson, failed))
     System.out.flush()
   }
 
   /** The driver-facing final line. Must stay complete inside a ~2 KB
     * log tail even with sbt epilogue lines after it. The canary rides
     * in the summary so the drift measurement survives the log-tail
-    * scrape even when the per-query line does not. */
+    * scrape even when the per-query line does not; `failed` counts the
+    * catalog queries that threw (named, with messages, in the
+    * queries_file's `errors`) and are missing from `value`. */
   def summaryLine(total: Double, reps: Int, tickJson: String,
-      nQueries: Int, sfDir: String, canaryJson: String = ""): String = {
+      nQueries: Int, sfDir: String, canaryJson: String = "",
+      failed: Int = 0): String = {
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"n_queries":$nQueries$canaryJson$tickJson,"queries_file":"target/bench.json","sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"n_queries":$nQueries,"failed":$failed$canaryJson$tickJson,"queries_file":"target/bench.json","sf":"$sfDir"}"""
     // tick holds a handful of scalar metrics; if it ever grows past the
     // scrape budget, drop it here rather than ship an unparseable tail
     if (line.length <= 1000) line
     else
-      s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"n_queries":$nQueries$canaryJson,"queries_file":"target/bench.json","sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"n_queries":$nQueries,"failed":$failed$canaryJson,"queries_file":"target/bench.json","sf":"$sfDir"}"""
   }
 }

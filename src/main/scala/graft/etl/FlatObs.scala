@@ -56,16 +56,15 @@ object FlatObs {
     * the entry string "!!<concept>=<date>!!", which with concept equal is
     * exactly comparing the date string — the struct's last field.
     */
-  private def obsAggs(typed: Boolean = false): Seq[Column] = {
+  private def obsAggs: Seq[Column] = {
     val rendered = renderedValue
     val keyed = struct(
       col("concept_id").as("c"), col("value_coded").as("vc"), rendered.as("r"),
       to_date(col("obs_datetime")).cast("string").as("d"))
     // GROUP_CONCAT skips rows whose entry is NULL — which in MySQL's
     // CONCAT('!!', concept_id, '=', rendered, '!!') means a null rendered
-    // value OR a null concept_id. The concept guard also keeps the typed
-    // map free of null keys (map_from_entries would throw); the row still
-    // counts toward max_date_created, exactly as in MySQL's GROUP BY.
+    // value OR a null concept_id; the row still counts toward
+    // max_date_created, exactly as in MySQL's GROUP BY.
     val collected = sort_array(collect_list(
       when(rendered.isNotNull && col("concept_id").isNotNull, keyed)))
     val obsEntries = transform(collected,
@@ -80,39 +79,8 @@ object FlatObs {
     Seq(
       when(size(obsEntries) > 0, array_join(obsEntries, ObsMap.Sep)).as("obs"),
       when(size(dtEntries) > 0, array_join(dtEntries, ObsMap.Sep)).as("obs_datetimes"),
-      max(col("date_created")).as("max_date_created")) ++
-      (if (typed)
-        Seq(entriesMap(transform(collected,
-          x => struct(x.getField("c").as("c"), x.getField("r").as("r"))))
-          .as("obs_entries"))
-      else Nil)
+      max(col("date_created")).as("max_date_created"))
   }
-
-  /** Typed obs is the PIPELINE DEFAULT (round-5 change): flat_obs carries
-    * `obs_entries: map<int, array<string>>` (values in entry order),
-    * derived from the SAME sorted collect as the obs string — downstream
-    * [[FlatVisitSummary.build]] then decodes via map lookups instead of
-    * ~180 per-row string scans (the 1.2-1.5x q73-vs-q56 gain, SCALE.md).
-    * `graft.etl.typedObs=false` opts back into the string-only fidelity
-    * mode (the reference-faithful schema, byte-for-byte). Toggling the
-    * flag on an existing table requires a rebuild: incremental merges
-    * union the new columns with the stored schema.
-    */
-  val TypedConfKey = "graft.etl.typedObs"
-  private def typedObs(df: DataFrame): Boolean =
-    df.sparkSession.conf.getOption(TypedConfKey).forall(_.toBoolean)
-
-  /** map<int, array<string>> from a sorted array<struct<c,r>> of
-    * (concept, rendered) pairs; null when there are no entries, matching
-    * the obs string's null-when-empty. The HOF build runs once per
-    * aggregated row (never in the decode projection — see
-    * FlatVisitSummary's typed-path note).
-    */
-  private def entriesMap(pairs: Column): Column =
-    when(size(pairs) > 0, map_from_entries(
-      transform(array_distinct(transform(pairs, _.getField("c"))),
-        c => struct(c.as("k"),
-          transform(filter(pairs, p => p.getField("c") === c), _.getField("r")).as("v")))))
 
   /** Salt-bucket count for the obs-map aggregation (SURVEY §4's named skew:
     * one hot patient with thousands of encounters lands a single reducer).
@@ -139,18 +107,12 @@ object FlatObs {
         rendered.as("k2"), vDt.as("v")))
   }
 
-  private def joinEntries(df: DataFrame, typed: Boolean = false): DataFrame = {
-    val base = df.withColumn("obs", when(size(col("__obs")) > 0,
+  private def joinEntries(df: DataFrame): DataFrame =
+    df.withColumn("obs", when(size(col("__obs")) > 0,
         array_join(transform(col("__obs"), _.getField("v")), ObsMap.Sep)))
       .withColumn("obs_datetimes", when(size(col("__dt")) > 0,
         array_join(transform(col("__dt"), _.getField("v")), ObsMap.Sep)))
-    val withTyped =
-      if (typed) base.withColumn("obs_entries", entriesMap(
-        transform(col("__obs"),
-          e => struct(e.getField("k0").as("c"), e.getField("k2").as("r")))))
-      else base
-    withTyped.drop("__obs", "__dt")
-  }
+      .drop("__obs", "__dt")
 
   /** Aggregate with-encounter obs rows (already filtered) to flat rows. */
   private def aggWithEncounter(obsRows: DataFrame, encounter: DataFrame): DataFrame = {
@@ -159,7 +121,6 @@ object FlatObs {
       .join(encounter.select("encounter_id", "visit_id", "encounter_datetime",
         "encounter_type", "location_id"), Seq("encounter_id"))
     val n = saltBuckets(obsRows)
-    val typed = typedObs(obsRows)
     val agged =
       if (n > 1)
         joinEntries(Skew.saltedSortedAggs(
@@ -171,7 +132,7 @@ object FlatObs {
             "encounter_type" -> col("encounter_type"),
             "location_id" -> col("location_id"),
             "max_date_created" -> col("date_created")),
-          saltBuckets = n), typed)
+          saltBuckets = n))
       else
         joined.groupBy("encounter_id")
           .agg(
@@ -180,13 +141,13 @@ object FlatObs {
               max(col("visit_id")).as("real_visit_id"),
               max(col("encounter_datetime")).as("encounter_datetime"),
               max(col("encounter_type")).as("encounter_type"),
-              max(col("location_id")).as("location_id")) ++ obsAggs(typed = typed)): _*)
+              max(col("location_id")).as("location_id")) ++ obsAggs): _*)
     agged
       .withColumn("visit_id",
         coalesce(col("real_visit_id"), (lit(FakeVisitBase) + col("encounter_id")).cast("int")))
-      .select((Seq("person_id", "visit_id", "encounter_id", "encounter_datetime",
+      .select("person_id", "visit_id", "encounter_id", "encounter_datetime",
         "encounter_type", "location_id", "obs", "obs_datetimes",
-        "max_date_created") ++ (if (typed) Seq("obs_entries") else Nil)).map(col): _*)
+        "max_date_created")
   }
 
   /** Aggregate encounter-less obs rows to flat rows at the
@@ -194,14 +155,13 @@ object FlatObs {
   private def aggEncounterless(obsRows: DataFrame): DataFrame = {
     val rows = obsRows.filter(col("encounter_id").isNull && col("voided") === 0)
     val n = saltBuckets(obsRows)
-    val typed = typedObs(obsRows)
     val agged =
       if (n > 1)
         joinEntries(Skew.saltedSortedAggs(
           rows, Seq("person_id", "obs_datetime"), obsEntryStructs,
           maxCols = Seq("max_date_created" -> col("date_created")),
           saltBuckets = n,
-          minCols = Seq("__min_obs_id" -> col("obs_id"))), typed)
+          minCols = Seq("__min_obs_id" -> col("obs_id"))))
           .withColumn("encounter_id",
             (col("__min_obs_id") + lit(SyntheticEncounterBase)).cast("int"))
           .drop("__min_obs_id")
@@ -209,24 +169,22 @@ object FlatObs {
         rows.groupBy("person_id", "obs_datetime")
           .agg(
             (min(col("obs_id")) + lit(SyntheticEncounterBase)).cast("int").as("encounter_id"),
-            obsAggs(typed = typed): _*)
-    agged.select(Seq(
+            obsAggs: _*)
+    agged.select(
       col("person_id"),
       (lit(FakeVisitBase) + col("encounter_id")).cast("int").as("visit_id"),
       col("encounter_id"),
       col("obs_datetime").as("encounter_datetime"),
       lit(99999).as("encounter_type"),
       lit(null).cast("int").as("location_id"),
-      col("obs"), col("obs_datetimes"), col("max_date_created")) ++
-      (if (typed) Seq(col("obs_entries")) else Nil): _*)
+      col("obs"), col("obs_datetimes"), col("max_date_created"))
   }
 
-  /** Canonical schema; the optional typed `obs_entries` column rides along
-    * when present. */
-  private def canon(df: DataFrame): DataFrame = {
-    val extra = if (df.columns.contains("obs_entries")) Seq(col("obs_entries")) else Nil
-    df.select(Schemas.flatObs.fieldNames.map(col).toIndexedSeq ++ extra: _*)
-  }
+  /** Canonical schema: exactly [[Schemas.flatObs]]'s columns, so a
+    * stored table carrying any other column (an older layout's extras)
+    * sheds it on the next merge. */
+  private def canon(df: DataFrame): DataFrame =
+    df.select(Schemas.flatObs.fieldNames.map(col).toIndexedSeq: _*)
 
   /** Full rebuild: every obs group, both grains, voided persons removed. */
   def build(obs: DataFrame, encounter: DataFrame, person: DataFrame): DataFrame = {

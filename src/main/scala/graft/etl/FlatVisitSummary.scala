@@ -3,7 +3,6 @@ package graft.etl
 import java.sql.Timestamp
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.functions.ObsMap
 
 /** Stage 2: decode flat_obs into the wide per-visit clinical summary — the
   * Spark rebuild of `generate_visit_summary()`
@@ -11,11 +10,12 @@ import graft.functions.ObsMap
   *
   * The reference's ~320 lines of searched-CASE regexp decode
   * (flat_visit_summary_v1.0.sql:211-523) are driven here from declarative
-  * (concept, code → label) tables; each decode arm is a `contains` on the
-  * encoded obs string (the parens in the reference's regexp patterns are
-  * no-op groups — SURVEY §2.8). First match wins, preserving arm order —
-  * including the reference's unreachable arms (who_stage 2-4 §7.4.3,
-  * refferal 'Other' §7.4.4, currentregmen second 6297).
+  * (concept, code → label) tables; each decode arm is an exact
+  * `concept=code` entry match on the encoded obs string (the parens in
+  * the reference's regexp patterns are no-op groups — SURVEY §2.8). First
+  * match wins, preserving arm order — including the reference's
+  * unreachable arms (who_stage 2-4 §7.4.3, refferal 'Other' §7.4.4,
+  * currentregmen second 6297).
   *
   * Value extraction (weight/height/enrollment/tca/patient_source fallback)
   * reproduces the SUBSTRING_INDEX surgery's actual semantics: because the
@@ -28,10 +28,10 @@ import graft.functions.ObsMap
   * can be staged via `withLabRows`; no_of_day_hospitalized reproduces the
   * mismatched-key extraction (yields '' when concept 1534 present, §7.4.5).
   *
-  * Scale: one wide whole-stage-codegen projection over flat_obs ⟕
-  * flat_orders; the reference's 5,000-person chunk loop (:119-127)
-  * disappears — partitioned execution bounds memory. The person dimension
-  * joins broadcast.
+  * Scale: one projection over flat_obs that parses each obs string once
+  * ([[graft.functions.ObsDecode]]); the reference's 5,000-person chunk
+  * loop (:119-127) disappears — partitioned execution bounds memory. The
+  * person dimension joins broadcast.
   */
 object FlatVisitSummary {
 
@@ -158,248 +158,7 @@ object FlatVisitSummary {
   val stiScreened: Seq[(String, String)] = Seq(
     "6780=1065" -> "Yes", "6780=1066" -> "No", "6780=1175" -> "N/A")
 
-  // ---- column builders ----
-
-  private def decode(obs: Column, table: Seq[(String, String)], default: Column = lit(null))
-      : Column =
-    graft.functions.MysqlFunctions.regexpDecode(obs, table, default)
-
-  /** All values of `concept` joined " ## " — the SUBSTRING_INDEX surgery's
-    * actual yield on a concept-sorted map (flat_visit_summary_v1.0.sql:202).
-    *
-    * Implemented as ONE codegen'd regexp_extract_all scan rather than
-    * [[ObsMap.valuesFor]]: the array-parse form re-splits and re-parses the
-    * whole map per extraction call inside interpreted HOF lambdas, and this
-    * projection extracts six times per row. The entry-boundary lookahead
-    * keeps values containing "!!" intact, matching the split-based parser.
-    */
-  private def extractAll(obs: Column, concept: Int): Column =
-    when(obs.contains(s"!!$concept="),
-      array_join(
-        regexp_extract_all(obs,
-          lit(s"(?:^| ## )!!$concept=(.*?)!!(?= ## |$$)"), lit(1)),
-        " ## "))
-
-  /** "Tests ordered" membership decode: 1271=<code> → Yes else No
-    * (flat_visit_summary_v1.0.sql:425-449). */
-  private def testDone(obs: Column, code: Int): Column =
-    when(obs.contains(s"!!1271=$code!!"), "Yes").otherwise("No")
-
-  /** The decode projection: flat_obs(+orders) columns → the 41 summary
-    * columns (flat_visit_summary_v1.0.sql:188-523 + insert :533-577). */
-  def decodeColumns(obs: Column): Seq[Column] = Seq(
-    // try_to_timestamp: a multi-valued extraction ("d1 ## d2") is not a
-    // date — MySQL would coerce to NULL/garbage; we null it (ANSI-safe).
-    try_to_timestamp(extractAll(obs, 6746)).as("enrollment_date"),
-    // §7.4.2: hiv_start_date is fed enrollment_date (insert :543-544)
-    try_to_timestamp(extractAll(obs, 6746)).as("hiv_start_date"),
-    decode(obs, patientSource, extractAll(obs, 1353)).as("patient_source"),
-    extractAll(obs, 6743).as("weight"),
-    extractAll(obs, 6744).as("height"),
-    decode(obs, curArvAdherence).as("cur_arv_adherence"),
-    decode(obs, pregnant).as("pregnant"),
-    decode(obs, fpStatus).as("fp_status"),
-    decode(obs, fpMethod).as("fp_method"),
-    decode(obs, whyNotOnFp).as("why_not_on_fp"),
-    decode(obs, tbStatus).as("tb_status"),
-    decode(obs, sideEffects).as("side_effects"),
-    decode(obs, whoStage).as("who_stage"),
-    decode(obs, ctxAdherence).as("ctx_adherence"),
-    decode(obs, ctxDispensed).as("ctx_dispensed"),
-    decode(obs, inhDispensed).as("inh_dispensed"),
-    decode(obs, otherMedsDispensed).as("other_medications_dispensed"),
-    decode(obs, arvsAdherence).as("arvs_adherence"),
-    decode(obs, whyArvsAdherencePoor).as("why_arvs_adherence_poor"),
-    decode(obs, pmtctPpct).as("pmtct_ppct"),
-    decode(obs, currentRegimen).as("currentregmen"),
-    testDone(obs, 5497).as("cd4_cd4percentage_done"),
-    testDone(obs, 21).as("hgb_done"),
-    testDone(obs, 1569).as("rpr_done"),
-    testDone(obs, 1883).as("tb_sputum_done"),
-    testDone(obs, 5622).as("other_test_done"),
-    decode(obs, refferalHospitalized).as("refferal_hospitalized"),
-    // §7.4.5: mismatched keys — guard '!!1534=' but extract '!!(1534)='
-    // which never matches ⇒ empty string when 1534 present, else null.
-    when(obs.contains("!!1534="), lit("")).as("no_of_day_hospitalized"),
-    decode(obs, breastfingMode).as("breastfing_mode"),
-    decode(obs, atRiskPopulation).as("at_risk_population"),
-    decode(obs, pwpDisclosure).as("pwp_disclosure"),
-    decode(obs, pwpPartnerTested).as("pwp_partner_tested"),
-    decode(obs, condomsDispensed).as("condoms_dispensed"),
-    decode(obs, stiScreened).as("sti_screened"),
-    try_to_timestamp(extractAll(obs, 5096)).as("tca"))
-
-  // ---- typed decode path ----
-  //
-  // The string decode above re-scans the encoded obs text once per guard
-  // and per matching arm (~180 contains scans per row) because the string
-  // IS the reference's interface. When the input carries the obs map in
-  // typed form — `obs_entries: map<int, array<string>>`, values in entry
-  // order — the same decode runs as one map lookup per table plus
-  // array_contains on a tiny array per arm. All codegen'd (GetMapValue /
-  // ArrayContains; repeated lookups dedup via subexpression elimination),
-  // and crucially NO per-row string parse anywhere: the map is built at
-  // the source (or in flat_obs's aggregation, which already collects the
-  // entry structs). A parse-the-string-back variant was measured SLOWER
-  // than the contains chain — interpreted HOF parsing deoptimizes the
-  // wide codegen'd projection; the typed path only wins because the map
-  // arrives materialized.
-
-  /** First-match decode against the typed obs map. `try_element_at` yields
-    * null for absent concepts; array_contains(null, x) is null, so a
-    * missing concept falls through every arm to the default — the same
-    * short-circuit the string path's presence guard provides.
-    */
-  private def decodeT(m: Column, table: Seq[(String, String)], default: Column = lit(null))
-      : Column =
-    table.foldRight(default) { case ((kv, label), acc) =>
-      val Array(c, code) = kv.split("=", 2)
-      when(array_contains(try_element_at(m, lit(c.toInt)), code), lit(label)).otherwise(acc)
-    }
-
-  /** Typed [[extractAll]]: the concept's values joined " ## ". */
-  private def extractAllT(m: Column, concept: Int): Column = {
-    val vals = try_element_at(m, lit(concept))
-    when(vals.isNotNull, array_join(vals, ObsMap.Sep))
-  }
-
-  private def testDoneT(m: Column, code: Int): Column =
-    when(array_contains(try_element_at(m, lit(1271)), code.toString), "Yes").otherwise("No")
-
-  /** [[decodeColumns]] over `obs_entries: map<int, array<string>>` —
-    * column-for-column identical output (q73 shares q56's oracle; the
-    * equivalence spec fuzzes both paths against each other).
-    */
-  def decodeColumnsTyped(m: Column): Seq[Column] = Seq(
-    try_to_timestamp(extractAllT(m, 6746)).as("enrollment_date"),
-    try_to_timestamp(extractAllT(m, 6746)).as("hiv_start_date"),
-    decodeT(m, patientSource, extractAllT(m, 1353)).as("patient_source"),
-    extractAllT(m, 6743).as("weight"),
-    extractAllT(m, 6744).as("height"),
-    decodeT(m, curArvAdherence).as("cur_arv_adherence"),
-    decodeT(m, pregnant).as("pregnant"),
-    decodeT(m, fpStatus).as("fp_status"),
-    decodeT(m, fpMethod).as("fp_method"),
-    decodeT(m, whyNotOnFp).as("why_not_on_fp"),
-    decodeT(m, tbStatus).as("tb_status"),
-    decodeT(m, sideEffects).as("side_effects"),
-    decodeT(m, whoStage).as("who_stage"),
-    decodeT(m, ctxAdherence).as("ctx_adherence"),
-    decodeT(m, ctxDispensed).as("ctx_dispensed"),
-    decodeT(m, inhDispensed).as("inh_dispensed"),
-    decodeT(m, otherMedsDispensed).as("other_medications_dispensed"),
-    decodeT(m, arvsAdherence).as("arvs_adherence"),
-    decodeT(m, whyArvsAdherencePoor).as("why_arvs_adherence_poor"),
-    decodeT(m, pmtctPpct).as("pmtct_ppct"),
-    decodeT(m, currentRegimen).as("currentregmen"),
-    testDoneT(m, 5497).as("cd4_cd4percentage_done"),
-    testDoneT(m, 21).as("hgb_done"),
-    testDoneT(m, 1569).as("rpr_done"),
-    testDoneT(m, 1883).as("tb_sputum_done"),
-    testDoneT(m, 5622).as("other_test_done"),
-    decodeT(m, refferalHospitalized).as("refferal_hospitalized"),
-    // §7.4.5 quirk: presence of 1534 yields '' (never a value)
-    when(map_contains_key(m, lit(1534)), lit("")).as("no_of_day_hospitalized"),
-    decodeT(m, breastfingMode).as("breastfing_mode"),
-    decodeT(m, atRiskPopulation).as("at_risk_population"),
-    decodeT(m, pwpDisclosure).as("pwp_disclosure"),
-    decodeT(m, pwpPartnerTested).as("pwp_partner_tested"),
-    decodeT(m, condomsDispensed).as("condoms_dispensed"),
-    decodeT(m, stiScreened).as("sti_screened"),
-    try_to_timestamp(extractAllT(m, 5096)).as("tca"))
-
-  // ---- staged typed decode (the pipeline-default fast path) ----
-  //
-  // [[decodeColumnsTyped]] is a single projection, so every decode arm's
-  // `try_element_at(m, concept)` sits in a CONDITIONAL position (a `when`
-  // branch) — and Catalyst's subexpression elimination only extracts
-  // subexpressions that are evaluated unconditionally. Measured result
-  // (ProfileDecode, sf0.1): the one-projection decode pays ~80 map scans
-  // per row (~9.5 s of a 10.9 s projection) while 29 unconditional
-  // lookups cost 1.1 s. Staging fixes it structurally: projection 1 binds
-  // one lookup column per distinct concept (unconditional, each a single
-  // O(|map|) scan), projection 2 runs the arm chains over the bound
-  // arrays. CollapseProject will not merge the two (ElementAt is not in
-  // its cheap-to-duplicate set when referenced more than once), so the
-  // lookups stay shared in codegen.
-
-  /** Every distinct concept the typed decode reads. */
-  private val typedConcepts: Seq[Int] = {
-    val tables = Seq(patientSource, curArvAdherence, pregnant, fpStatus,
-      fpMethod, whyNotOnFp, tbStatus, sideEffects, whoStage, ctxAdherence,
-      ctxDispensed, inhDispensed, otherMedsDispensed, arvsAdherence,
-      whyArvsAdherencePoor, pmtctPpct, currentRegimen, refferalHospitalized,
-      breastfingMode, atRiskPopulation, pwpDisclosure, pwpPartnerTested,
-      condomsDispensed, stiScreened)
-    (tables.flatMap(_.map(_._1.split("=", 2)(0).toInt)) ++
-      Seq(6746, 1353, 6743, 6744, 5096, 1271, 1534)).distinct.sorted
-  }
-
-  private def lkName(c: Int): String = s"__c$c"
-
-  /** Stage-1 projection: one unconditional `try_element_at` per distinct
-    * concept, named `__c<concept>`. Append to the pre-decode projection,
-    * then decode with [[decodeColumnsFromLookups]].
-    */
-  def typedLookupColumns(m: Column): Seq[Column] =
-    typedConcepts.map(c => try_element_at(m, lit(c)).as(lkName(c)))
-
-  private def decodeL(table: Seq[(String, String)], default: Column = lit(null)): Column =
-    table.foldRight(default) { case ((kv, label), acc) =>
-      val Array(c, code) = kv.split("=", 2)
-      when(array_contains(col(lkName(c.toInt)), code), lit(label)).otherwise(acc)
-    }
-
-  private def extractAllL(concept: Int): Column = {
-    val vals = col(lkName(concept))
-    when(vals.isNotNull, array_join(vals, ObsMap.Sep))
-  }
-
-  private def testDoneL(code: Int): Column =
-    when(array_contains(col(lkName(1271)), code.toString), "Yes").otherwise("No")
-
-  /** Stage-2 decode over the bound lookup columns — output identical to
-    * [[decodeColumnsTyped]] / [[decodeColumns]] (q73 shares q56's oracle;
-    * the equivalence spec fuzzes all three paths). `__c1534.isNotNull`
-    * replaces `map_contains_key`: entry arrays are non-empty by
-    * construction on every producer, so presence ≡ non-null lookup.
-    */
-  def decodeColumnsFromLookups: Seq[Column] = Seq(
-    try_to_timestamp(extractAllL(6746)).as("enrollment_date"),
-    try_to_timestamp(extractAllL(6746)).as("hiv_start_date"),
-    decodeL(patientSource, extractAllL(1353)).as("patient_source"),
-    extractAllL(6743).as("weight"),
-    extractAllL(6744).as("height"),
-    decodeL(curArvAdherence).as("cur_arv_adherence"),
-    decodeL(pregnant).as("pregnant"),
-    decodeL(fpStatus).as("fp_status"),
-    decodeL(fpMethod).as("fp_method"),
-    decodeL(whyNotOnFp).as("why_not_on_fp"),
-    decodeL(tbStatus).as("tb_status"),
-    decodeL(sideEffects).as("side_effects"),
-    decodeL(whoStage).as("who_stage"),
-    decodeL(ctxAdherence).as("ctx_adherence"),
-    decodeL(ctxDispensed).as("ctx_dispensed"),
-    decodeL(inhDispensed).as("inh_dispensed"),
-    decodeL(otherMedsDispensed).as("other_medications_dispensed"),
-    decodeL(arvsAdherence).as("arvs_adherence"),
-    decodeL(whyArvsAdherencePoor).as("why_arvs_adherence_poor"),
-    decodeL(pmtctPpct).as("pmtct_ppct"),
-    decodeL(currentRegimen).as("currentregmen"),
-    testDoneL(5497).as("cd4_cd4percentage_done"),
-    testDoneL(21).as("hgb_done"),
-    testDoneL(1569).as("rpr_done"),
-    testDoneL(1883).as("tb_sputum_done"),
-    testDoneL(5622).as("other_test_done"),
-    decodeL(refferalHospitalized).as("refferal_hospitalized"),
-    when(col(lkName(1534)).isNotNull, lit("")).as("no_of_day_hospitalized"),
-    decodeL(breastfingMode).as("breastfing_mode"),
-    decodeL(atRiskPopulation).as("at_risk_population"),
-    decodeL(pwpDisclosure).as("pwp_disclosure"),
-    decodeL(pwpPartnerTested).as("pwp_partner_tested"),
-    decodeL(condomsDispensed).as("condoms_dispensed"),
-    decodeL(stiScreened).as("sti_screened"),
-    try_to_timestamp(extractAllL(5096)).as("tca"))
+  // ---- decode projection ----
 
   /** Output order of the struct-backed decode columns between `height`
     * and `tca` (struct field names equal output column names there). */
@@ -414,10 +173,13 @@ object FlatVisitSummary {
     "breastfing_mode", "at_risk_population", "pwp_disclosure",
     "pwp_partner_tested", "condoms_dispensed", "sti_screened")
 
-  /** Unpack [[graft.functions.ObsDecode.decodeAll]]'s one-pass struct to
-    * the 35 output columns — identical output to the other decode paths
-    * (same oracle, same fuzz gate). Dates go through `try_to_timestamp`
-    * HERE so timestamp parsing stays in stock Spark expressions.
+  /** Unpack [[graft.functions.ObsDecode.decodeAllString]]'s one-pass
+    * struct to the 35 output columns (flat_visit_summary_v1.0.sql:188-523
+    * + insert :533-577). Dates go through `try_to_timestamp` HERE so
+    * timestamp parsing stays in stock Spark expressions: a multi-valued
+    * extraction ("d1 ## d2") is not a date — MySQL would coerce to
+    * NULL/garbage; we null it (ANSI-safe). §7.4.2: hiv_start_date is fed
+    * enrollment_date (insert :543-544).
     */
   def decodeColumnsFromStruct(s: Column): Seq[Column] =
     Seq(
@@ -469,10 +231,12 @@ object FlatVisitSummary {
     * side's uniqueness is unprovable) and is skipped; `flatOrders` stays
     * in the signature for the reference-shaped call sites.
     *
-    * Decode path auto-selects on the input: when flat_obs carries the
-    * typed `obs_entries` map column, decoding runs the map-lookup form
-    * ([[decodeColumnsTyped]]); otherwise the reference-faithful string
-    * scan ([[decodeColumns]]).
+    * The decode parses each row's encoded obs string ONCE
+    * ([[graft.functions.ObsDecode.decodeAllString]]) and evaluates every
+    * decode table, test membership and value extraction over the parsed
+    * entries; the reference-shaped `contains`/regexp chain it replaces
+    * lives in the test sources as the independent oracle
+    * (DecodePathEquivalenceSpec).
     */
   def build(
       flatObs: DataFrame,
@@ -496,31 +260,9 @@ object FlatVisitSummary {
     val baseNames = Seq("person_id", "uuid", "visit_id", "encounter_id",
       "encounter_datetime", "encounter_type", "is_clinical_encounter",
       "location_id")
-    // one-pass expression decode by default ([[graft.functions
-    // .ObsDecode]]); `graft.etl.decodeExpr=false` falls back to the
-    // stock-Catalyst forms (staged lookups for the typed map, the
-    // reference-faithful contains chain for the string interface)
-    val useExpr = flatObs.sparkSession.conf
-      .getOption("graft.etl.decodeExpr").forall(_.toBoolean)
-    if (flatObs.columns.contains("obs_entries")) {
-      if (useExpr)
-        joined.select(base :+
-          graft.functions.ObsDecode.decodeAll(col("obs_entries")).as("__dec"): _*)
-          .select(baseNames.map(col) ++ decodeColumnsFromStruct(col("__dec")): _*)
-      else
-        joined.select(base ++ typedLookupColumns(col("obs_entries")): _*)
-          .select(baseNames.map(col) ++ decodeColumnsFromLookups: _*)
-    } else if (useExpr)
-      // string interface: the same one-pass decode, parsing the encoded
-      // obs text ONCE per row (ObsStringDecodeAll) instead of the ~180
-      // contains/regexp scans of [[decodeColumns]] — output identical
-      // (DecodePathEquivalenceSpec fuzz-gates all paths; q56 and q109
-      // share one oracle verbatim)
-      joined.select(base :+
-        graft.functions.ObsDecode.decodeAllString(col("obs")).as("__dec"): _*)
-        .select(baseNames.map(col) ++ decodeColumnsFromStruct(col("__dec")): _*)
-    else
-      joined.select(base ++ decodeColumns(col("obs")): _*)
+    joined.select(base :+
+      graft.functions.ObsDecode.decodeAllString(col("obs")).as("__dec"): _*)
+      .select(baseNames.map(col) ++ decodeColumnsFromStruct(col("__dec")): _*)
   }
 
   /** Incremental: queue = persons with changed encounters ∪ persons whose

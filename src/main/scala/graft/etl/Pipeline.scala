@@ -157,8 +157,8 @@ class Pipeline(
   // stage code per micro-batch with a batch-derived watermark; these
   // give it the tick's write discipline without the flat_log plumbing.
 
-  /** Touched-key delta state for one bucketed stage merge: cache the
-    * queue, collect its bucket ids, prune the stored table to them. */
+  /** Touched-key delta state for one bucketed stage merge: checkpoint
+    * the queue, collect its bucket ids, prune the stored table to them. */
   private[graft] def stageDelta(name: String, queue: DataFrame): BucketedDelta =
     bucketedDelta(name, queue)
 
@@ -305,15 +305,7 @@ class Pipeline(
     // their executor; the durable equivalent is re-reading the stage's
     // just-committed delta epoch. The frame is O(delta persons), so
     // either is cheap.)
-    // `graft.cascade.queueCheckpoint=false` reverts to the r8 cache()
-    // form — A/B instrumentation for SCALE.md's pricing of this
-    // component, not a user knob (CascadeToggles scaladoc; default-on
-    // pinned by CascadeTogglesSpec).
-    val q =
-      if (graft.streaming.CascadeToggles.on(spark,
-          graft.streaming.CascadeToggles.QueueCheckpoint))
-        queue.localCheckpoint()
-      else queue.cache()
+    val q = queue.localCheckpoint()
     val p = bucketedDataPath(name).toString
     val buckets = BucketedSink.collectBuckets(q, sinkBuckets)
     BucketedDelta(q, buckets, BucketedSink.readBuckets(spark, p, buckets))

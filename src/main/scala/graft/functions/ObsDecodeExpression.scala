@@ -6,62 +6,27 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.{ArrayData, MapData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** One-pass visit-summary decode over the typed obs map — the (b)-tier
-  * custom `Expression` for the engine's single hottest projection.
+/** One-pass visit-summary decode over flat_obs's encoded obs string —
+  * the custom `Expression` for the engine's single hottest projection.
+  * Parses the string's entries ONCE (boundary split + prefix strip,
+  * exactly the entry grammar the reference's regexp extraction encodes)
+  * into concept slots (a direct int-indexed table, no hashing), then
+  * evaluates every decode table, test membership and extraction as tight
+  * JVM loops over UTF8String references — zero regex, one parse per row
+  * instead of the ~180 `contains`/regexp scans of the reference-shaped
+  * projection. Date fields are emitted as the raw joined strings; the
+  * caller applies `try_to_timestamp`, keeping timestamp semantics in
+  * stock Spark.
   *
-  * The staged form (FlatVisitSummary.typedLookupColumns +
-  * decodeColumnsFromLookups) already fixed the conditional-CSE blowup,
-  * but still evaluates ~80 `array_contains` arms and 29 materialized
-  * lookup columns per row through Catalyst expression dispatch. This
-  * expression walks the map's entries ONCE into concept slots (a direct
-  * int-indexed table, no hashing) and evaluates every decode table, test
-  * membership, and extraction as tight JVM loops over UTF8String
-  * references — zero regex, zero per-arm map scans, one allocation per
-  * row (the output struct). Date fields are emitted as the raw joined
-  * strings; the caller applies `try_to_timestamp`, keeping timestamp
-  * semantics in stock Spark.
-  *
-  * Output-equivalence is triple-gated: q73 shares q56's DuckDB oracle
-  * verbatim, the fuzz spec diffs this path against the string and staged
-  * projections row-for-row, and the pipeline's bucketed stages are
-  * signature-checked against from-scratch rebuilds in the bench.
-  */
-case class ObsMapDecodeAll(child: Expression)
-  extends UnaryExpression with CodegenFallback {
-
-  override def dataType: DataType = ObsDecode.schema
-  override def nullable: Boolean = false
-
-  // reject a mistyped input at analysis time with the expected type
-  // spelled out, not per-row ClassCastExceptions at execution
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case MapType(IntegerType, ArrayType(StringType, _), _) =>
-      TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"obs_decode_all requires map<int,array<string>>, got ${other.catalogString}")
-  }
-
-  override def eval(input: InternalRow): Any = {
-    val m = child.eval(input)
-    ObsDecode.decodeRow(if (m == null) null else m.asInstanceOf[MapData])
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): ObsMapDecodeAll =
-    copy(child = newChild)
-  override def prettyName: String = "obs_decode_all"
-}
-
-/** [[ObsMapDecodeAll]] for STRING-only flat_obs — the shape a table
-  * produced by the reference itself has. Parses the encoded obs string's
-  * entries ONCE (boundary split + prefix strip, exactly the entry grammar
-  * the regexp extraction encodes) into the same concept slots, then runs
-  * the shared decode core. Semantics equal the typed path — and equal the
-  * contains-scan projection on well-formed obs strings, which is the only
-  * shape any producer emits (the fuzz spec diffs all paths).
+  * Output-equivalence is gated twice: q56 runs it under the DuckDB
+  * oracle, and DecodePathEquivalenceSpec diffs it row for row against
+  * the reference-shaped contains chain (kept in the test sources) on
+  * fuzzed obs strings. Malformed tokens are skipped — they can never
+  * match a contains arm either.
   */
 case class ObsStringDecodeAll(child: Expression)
   extends UnaryExpression with CodegenFallback {
@@ -200,25 +165,6 @@ object ObsDecode {
     default
   }
 
-  private[functions] def decodeRow(m: MapData): InternalRow = {
-    val slots = new Array[ArrayData](nSlots)
-    if (m != null) {
-      val ks = m.keyArray()
-      val vs = m.valueArray()
-      var i = 0
-      val n = m.numElements()
-      while (i < n) {
-        val c = ks.getInt(i)
-        if (c >= 0 && c < slotOf.length) {
-          val s = slotOf(c)
-          if (s >= 0) slots(s) = if (vs.isNullAt(i)) null else vs.getArray(i)
-        }
-        i += 1
-      }
-    }
-    decodeSlots(slots)
-  }
-
   /** One-pass entry parse of the encoded obs string ("!!c=v!! ## …") into
     * concept slots; malformed tokens are skipped (they can never match a
     * contains arm either). Entry order is preserved per concept. */
@@ -290,10 +236,6 @@ object ObsDecode {
   }
 
   /** Column surface. */
-  def decodeAll(m: Column): Column =
-    GraftColumnBridge.column(ObsMapDecodeAll(GraftColumnBridge.expression(m)))
-
-  /** Column surface for the string-input form. */
   def decodeAllString(obs: Column): Column =
     GraftColumnBridge.column(ObsStringDecodeAll(GraftColumnBridge.expression(obs)))
 }

@@ -58,17 +58,24 @@ object Watermark {
       .getOrElse(Epoch)
   }
 
-  /** Append one run row (flat_obs_v1.0.sql:344-346): the new watermark is
-    * the run's start time, so changes racing the run are re-read next run.
+  /** Append one run row (flat_obs_v1.0.sql:344-346). `watermark` lands in
+    * `date_updated`, the column [[resolve]] reads back as the next run's
+    * high-water mark. It is NOT the run's start time: the caller passes
+    * the max source `date_created` it saw (captured before the stage
+    * ran, as the reference's `@last_date_created`, :26-28), floored at
+    * the watermark the run started from so it never regresses — so
+    * source rows committing while the run is in flight stay above it and
+    * are re-read next run. `date_created` records the wall-clock time of
+    * the append.
     */
   def appendRun(
       spark: SparkSession,
       path: String,
       tableVersion: String,
-      runStart: Timestamp,
+      watermark: Timestamp,
       seconds: Short): Unit = {
     import spark.implicits._
-    Seq((new Timestamp(System.currentTimeMillis()), runStart, tableVersion, seconds))
+    Seq((new Timestamp(System.currentTimeMillis()), watermark, tableVersion, seconds))
       .toDF("date_created", "date_updated", "table_name", "seconds_to_complete")
       .write.mode("append").parquet(path)
   }

@@ -147,10 +147,10 @@ object EtlPipelineQueries {
     s"CASE ${keySql(key)} % ${codes.size} $whens END AS $colName"
   }
 
-  /** The q56/q73 oracle: expected visit-summary output recomputed from
-    * the same modular-key code tables the Spark inputs derive from. Shared
-    * verbatim by the string-decode (q56) and typed-decode (q73) queries —
-    * the two paths must produce identical output.
+  /** The q56/q73/q109 oracle: expected visit-summary output recomputed
+    * from the same modular-key code tables the Spark inputs derive from.
+    * Shared verbatim by the stage build (q56, q73) and the bare decode
+    * projection (q109).
     */
   private val visitSummaryOracle: String =
     s"""SELECT CAST(o_custkey AS INT) person_id, c_name uuid,
@@ -175,43 +175,6 @@ object EtlPipelineQueries {
            .mkString(",\n       |  ")}
        |FROM orders JOIN customer ON o_custkey = c_custkey
        |WHERE o_orderstatus IN ('F', 'O')""".stripMargin
-
-  /** The q73 typed fixture: the flat_obs scaffold carrying
-    * `obs_entries: map<int, array<string>>` built at the source (never
-    * parsed from the obs string). Package-visible so the decode profiler
-    * ([[graft.tools.ProfileDecode]]) can materialize the exact bench input.
-    */
-  private[graft] def visitSummaryTypedInput(s: SparkSession, dir: String): DataFrame = {
-    val o = load(s, dir, "orders")
-    def one(v: Column): Column = array(v)
-    val entryStructs: Seq[Column] =
-      conceptPicks.map { case (cpt, codes, key) =>
-        struct(lit(cpt).as("k"), one(pickedCode(codes, key)).as("v"))
-      } ++ Seq(
-        struct(lit(1271).as("k"), filter(array(
-          when(col("o_orderkey") % 2 === 0, "5497"),
-          when(col("o_orderkey") % 3 === 0, "21"),
-          when(col("o_orderkey") % 5 === 0, "1569"),
-          when(col("o_orderkey") % 7 === 0, "1883"),
-          when(col("o_orderkey") % 11 === 0, "5622")), x => x.isNotNull).as("v")),
-        struct(lit(1592).as("k"),
-          when(col("o_orderkey") % 4 === 0, one(lit("1405"))).as("v")),
-        struct(lit(1534).as("k"),
-          when(col("o_orderkey") % 6 === 0, one(lit("3"))).as("v")),
-        struct(lit(6743).as("k"),
-          one((lit(50) + col("o_orderkey") % 70).cast("string")).as("v")),
-        struct(lit(6744).as("k"),
-          one((lit(150) + col("o_custkey") % 40).cast("string")).as("v")),
-        struct(lit(6746).as("k"),
-          one(to_date(col("o_orderdate")).cast("string")).as("v")),
-        struct(lit(5096).as("k"),
-          one(date_add(to_date(col("o_orderdate")), 30).cast("string")).as("v")))
-    val obsEntries = map_from_entries(filter(array(entryStructs: _*),
-      e => e.getField("v").isNotNull && size(e.getField("v")) > 0))
-    visitSummaryBase(o)
-      .withColumn("obs_entries", obsEntries)
-      .drop("o_orderkey", "o_custkey", "o_orderdate")
-  }
 
   /** The q56/q109 STRING fixture: the flat_obs scaffold carrying the
     * encoded obs string (the reference's interface). */
@@ -238,10 +201,6 @@ object EtlPipelineQueries {
       .withColumn("obs", concat_ws(" ## ", entries: _*))
       .drop("o_orderkey", "o_custkey", "o_orderdate")
   }
-
-  /** Concepts the typed decode looks up — one per distinct map key. */
-  private[graft] val profileConcepts: Seq[Int] =
-    (conceptPicks.map(_._1) ++ Seq(1271, 1592, 1534, 6743, 6744, 6746, 5096)).distinct
 
   /** The q56/q73 flat_obs scaffold minus the obs column(s). */
   private def visitSummaryBase(o: DataFrame): DataFrame = o.select(
@@ -317,10 +276,7 @@ object EtlPipelineQueries {
       flatObsStageOracle) {
       (s, dir) =>
         val (obs, encounter, person) = eavSources(s, dir)
-        // the typed obs_entries map is the pipeline-internal stage
-        // interface; the driver's oracle speaks the string columns (no-op
-        // when the fidelity mode is on)
-        FlatObs.build(obs, encounter, person).drop("obs_entries")
+        FlatObs.build(obs, encounter, person)
     },
 
     // The latest-row stage (W2 fix) through the real stage code.
@@ -512,10 +468,10 @@ object EtlPipelineQueries {
           visitSummaryStringInput(s, dir), visitSummaryOrders(o), person)
     },
 
-    // The one-pass STRING-input decode Expression over q56's exact fixture
-    // and oracle — the migration path for tables the REFERENCE produced
-    // (string obs only, no typed map): same output, parsed once per row
-    // instead of ~180 contains scans.
+    // The one-pass string decode Expression alone — the bare projection,
+    // without the stage's queue scoping — over q56's exact fixture and
+    // oracle: the obs string parsed once per row instead of ~180
+    // contains scans.
     OpQuery.sql("q109_visit_summary_string_expr", visitSummaryOracle) {
       (s, dir) =>
         val c = load(s, dir, "customer")
@@ -538,12 +494,9 @@ object EtlPipelineQueries {
             FlatVisitSummary.decodeColumnsFromStruct(col("__dec")): _*)
     },
 
-    // The SAME decode projection through the typed path: flat_obs carries
-    // `obs_entries map<int, array<string>>` (built at the source — never
-    // parsed from the string) and FlatVisitSummary.build decodes it with
-    // map lookups + array_contains instead of ~180 per-row string scans.
-    // The oracle is q56's VERBATIM — the two decode paths must emit
-    // identical output, and the bench shows the typed form's speedup.
+    // q56's fixture and oracle VERBATIM through FlatVisitSummary.build;
+    // the name outlives its typed-map input so the catalog's timings
+    // stay comparable across rounds.
     OpQuery.sql("q73_visit_summary_typed", visitSummaryOracle) {
       (s, dir) =>
         val o = load(s, dir, "orders")
@@ -551,7 +504,7 @@ object EtlPipelineQueries {
         val person = c.select(
           col("c_custkey").cast("int").as("person_id"), col("c_name").as("uuid"))
         FlatVisitSummary.build(
-          visitSummaryTypedInput(s, dir), visitSummaryOrders(o), person)
+          visitSummaryStringInput(s, dir), visitSummaryOrders(o), person)
     },
 
     // The STREAMED ETL cascade under the driver's oracle: see
@@ -569,7 +522,7 @@ object EtlPipelineQueries {
         // same code path (streamedCascade) on the real fixture — outside
         // this timed body, which round 6 showed was paying ~3 extra
         // batch rebuilds per bench invocation.
-        streamedCascade(s, dir).readFlat("flat_obs").get.drop("obs_entries")
+        streamedCascade(s, dir).readFlat("flat_obs").get
     },
 
     // The SAME streamed cascade against the BUCKETED sink (round-7
@@ -591,7 +544,7 @@ object EtlPipelineQueries {
         // and the steady-state pruning claim is carried by the clinic
         // regime in ProfileCascade/SCALE.md where deltas are ~2%.
         streamedCascade(s, dir, buckets = 64, cuts = BucketedCascadeCuts)
-          .readFlat("flat_obs").get.drop("obs_entries")
+          .readFlat("flat_obs").get
     }
   )
 

@@ -340,12 +340,6 @@ object IncrementalEtlStream {
       // (person is static within a run)
       voidedBucketsOnce: () => Set[Int],
       memo: CascadeRunMemo): Unit = {
-    // A/B instrumentation (SCALE.md round-11 pricing of the r9-retained
-    // O(delta) machinery): default true = the shipped shape; false
-    // reverts the component to its r8 form. Not a user knob
-    // (CascadeToggles scaladoc; default-on pinned by CascadeTogglesSpec).
-    val prunedProbe =
-      CascadeToggles.on(spark, CascadeToggles.PrunedPurgeProbe)
     def t[A](label: String)(f: => A): A = timed(spark, label)(f)
     val batch = rawBatch.persist()
     try {
@@ -453,9 +447,7 @@ object IncrementalEtlStream {
         else t("purge probe") {
           val p = FlatObs.voidedPurgeSet(
             person,
-            Some(if (prunedProbe)
-              pipeline.readFlatBuckets("flat_obs", voidedBucketsOnce())
-            else pipeline.readFlat("flat_obs").get)) // r8 form: full scan
+            Some(pipeline.readFlatBuckets("flat_obs", voidedBucketsOnce())))
             .localCheckpoint()
           memo.purge = p
           p

@@ -4,12 +4,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** End-to-end pipeline tick bench: a full five-stage build at t1, then an
-  * incremental tick at t2 over a ~2% active-person delta, with the typed
-  * obs path and the manifest-committed bucketed sinks on every
-  * person-keyed stage — the configuration a production deployment would
-  * run. Reports wall seconds per tick and per-stage bytes written (full
-  * epoch vs delta epochs), proving the incremental write volume is
-  * O(delta), not O(table). Every bucketed stage is hash-checked against
+  * incremental tick at t2 over a ~2% active-person delta, with the
+  * manifest-committed bucketed sinks on every person-keyed stage — the
+  * configuration a production deployment would run. Reports wall seconds
+  * per tick and per-stage bytes written (full epoch vs delta epochs),
+  * proving the incremental write volume is O(delta), not O(table).
+  * Every bucketed stage is hash-checked against
   * a from-scratch rebuild on the t2 sources before any number is
   * reported — a fast bench that drifted from the batch semantics would
   * be worse than no bench.
@@ -28,10 +28,9 @@ object PipelineBench {
       finally s.close()
     }
 
-  /** count + order-independent content hash, typed column excluded (maps
-    * don't hash; the string obs columns cover the same content). */
+  /** count + order-independent content hash. */
   private def signature(df: DataFrame): (Long, Long) = {
-    val cols = df.columns.filter(_ != "obs_entries").sorted
+    val cols = df.columns.sorted
     val r = df.select(hash(cols.toIndexedSeq.map(col): _*).cast("long").as("h"))
       .agg(count(lit(1)).as("n"), sum(col("h")).as("s")).collect()(0)
     (r.getLong(0), r.getLong(1))
@@ -54,13 +53,9 @@ object PipelineBench {
     val buckets = sys.env.getOrElse("SPARK_GRAFT_TICK_BUCKETS",
       math.max(64, nPersons / 5).toString)
     val root = java.nio.file.Files.createTempDirectory("graft-tickbench")
-    val prevConf = Seq("graft.etl.typedObs", "graft.sink.buckets",
+    val prevConf = Seq("graft.sink.buckets",
       graft.etl.FlatObs.SaltConfKey).map(k => k -> spark.conf.getOption(k))
     try {
-      // typed obs is the pipeline default; SPARK_GRAFT_TICK_TYPED=0
-      // benches the string-only fidelity mode for the A/B record
-      spark.conf.set("graft.etl.typedObs",
-        (sys.env.getOrElse("SPARK_GRAFT_TICK_TYPED", "1") == "1").toString)
       spark.conf.set("graft.sink.buckets", buckets)
       if (salt != "0") spark.conf.set(graft.etl.FlatObs.SaltConfKey, salt)
       // SPARK_GRAFT_TICK_DEBUG=1 prints per-phase wall/bytes for every

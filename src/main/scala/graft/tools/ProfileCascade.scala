@@ -48,7 +48,6 @@ object ProfileCascade {
       case "bucketed" => Seq(-1) // resolved per regime below
       case _ => Seq(0, -1)
     }
-    if (regime == "ab") { abMain(args.drop(1)); return }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -60,133 +59,6 @@ object ProfileCascade {
     spark.sparkContext.setLogLevel("ERROR")
     spark.conf.set("graft.debug.cascadeTiming", "true")
     if (regime == "tpch") tpch(spark, shapes) else clinic(spark, shapes)
-    spark.stop()
-  }
-
-  /** Same-session A/B pricing of the r9-retained O(delta) components
-    * (round-10 verdict #1): the shipped r10 shape vs r10 minus the
-    * per-batch queue localCheckpoint, minus the voided-bucket purge
-    * probe (r8's full-table scan instead), and minus both — on BOTH
-    * regimes. Configs interleave round-robin inside one JVM so ambient
-    * drift hits every config equally; per config we report each rep and
-    * the best (the controlled-floor convention from SCALE.md's LSH
-    * table).
-    *
-    *   runMain graft.tools.ProfileCascade ab [tpch|clinic|both] [reps]
-    */
-  private def abMain(args: Array[String]): Unit = {
-    val which = args.headOption.getOrElse("both")
-    val reps = if (args.length > 1) args(1).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val configs = Seq(
-      ("r10", true, true),
-      ("no-ckpt", false, true),
-      ("no-probe", true, false),
-      ("neither", false, false))
-    def withConf[A](ckpt: Boolean, probe: Boolean)(f: => A): A = {
-      spark.conf.set("graft.cascade.queueCheckpoint", ckpt.toString)
-      spark.conf.set("graft.cascade.prunedPurgeProbe", probe.toString)
-      try f finally {
-        spark.conf.set("graft.cascade.queueCheckpoint", "true")
-        spark.conf.set("graft.cascade.prunedPurgeProbe", "true")
-      }
-    }
-    def rmRf(p: java.nio.file.Path): Unit = if (java.nio.file.Files.exists(p)) {
-      val s = java.nio.file.Files.walk(p)
-      try s.sorted(java.util.Comparator.reverseOrder())
-        .forEach(java.nio.file.Files.deleteIfExists(_))
-      finally s.close()
-    }
-    val results = scala.collection.mutable.Map
-      .empty[(String, String), Vector[Double]].withDefaultValue(Vector.empty)
-
-    if (which == "tpch" || which == "both") {
-      val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-      val cuts = graft.queries.EtlPipelineQueries.BucketedCascadeCuts
-      graft.queries.EtlPipelineQueries.preparedChunks(spark, sfDir, cuts)
-      val tmp = java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"))
-      for (rep <- 1 to reps; (name, ckpt, probe) <- configs) {
-        val before = java.nio.file.Files.list(tmp).toArray.toSet
-        val t0 = System.nanoTime()
-        withConf(ckpt, probe) {
-          graft.queries.EtlPipelineQueries.streamedCascade(spark, sfDir, 64, cuts)
-        }
-        val secs = (System.nanoTime() - t0) / 1e9
-        println(f"[ab tpch] rep $rep $name%-8s $secs%7.2f s")
-        results(("tpch", name)) :+= secs
-        // sweep this run's temp roots so reps don't fill the disk
-        java.nio.file.Files.list(tmp).toArray.toSet.diff(before).foreach {
-          case p: java.nio.file.Path
-            if p.getFileName.toString.startsWith("graft-q94") => rmRf(p)
-          case _ => ()
-        }
-      }
-    }
-
-    if (which == "clinic" || which == "both") {
-      val nPersons = sys.env.getOrElse("SPARK_GRAFT_TICK_PERSONS", "2000").toInt
-      val buckets = sys.env.getOrElse("SPARK_GRAFT_TICK_BUCKETS",
-        math.max(64, nPersons / 5).toString).toInt
-      val src = BenchFixtures.sources(spark, nPersons)
-      val days = Seq(60, 70, 80, 90)
-      val chunkRoot = java.nio.file.Files.createTempDirectory("graft-ab-chunks")
-      days.zipWithIndex.foreach { case (d, i) =>
-        val t = BenchFixtures.asOf(d)
-        val versions =
-          if (i == 0) BenchFixtures.obsAsOf(src("obs"), t)
-          else {
-            val prev = lit(BenchFixtures.asOf(days(i - 1)))
-            BenchFixtures.obsAsOf(src("obs"), t).filter(
-              col("date_created") > prev ||
-                (col("voided") === 1 && col("date_voided") > prev))
-          }
-        versions.write.mode("overwrite")
-          .parquet(chunkRoot.resolve(s"chunk_$i").toString)
-      }
-      val person = src("person")
-      val orders = BenchFixtures.ordersAsOf(src("orders"), BenchFixtures.asOf(60))
-      for (rep <- 1 to reps; (name, ckpt, probe) <- configs) {
-        val root = java.nio.file.Files.createTempDirectory("graft-ab-run")
-        val obsDir = root.resolve("obs")
-        val pipe = new graft.etl.Pipeline(spark, root.resolve("tables").toString,
-          Some(buckets))
-        var steady = 0.0
-        withConf(ckpt, probe) {
-          days.indices.foreach { i =>
-            graft.queries.EtlPipelineQueries.copyDir(
-              chunkRoot.resolve(s"chunk_$i"), obsDir.resolve(s"chunk_$i"))
-            val enc = BenchFixtures.encAsOf(src("encounter"), BenchFixtures.asOf(days(i)))
-            val t0 = System.nanoTime()
-            graft.streaming.IncrementalEtlStream.runCascadeOnce(
-              spark, obsDir.toString, enc, orders, person, pipe,
-              root.resolve("ckpt").toString)
-            val secs = (System.nanoTime() - t0) / 1e9
-            if (i > 0) steady += secs
-            if (i == 0)
-              graft.sources.BucketedLog.fold(spark, pipe.versionLogPath,
-                "person_id", buckets, graft.etl.Schemas.obs)
-          }
-        }
-        println(f"[ab clinic] rep $rep $name%-8s steady(3 ticks) $steady%7.2f s")
-        results(("clinic", name)) :+= steady
-        rmRf(root)
-      }
-    }
-
-    println("\n==== A/B summary (best | all reps) ====")
-    for (regime <- Seq("tpch", "clinic"); (name, _, _) <- configs;
-         v = results((regime, name)) if v.nonEmpty)
-      println(f"$regime%-7s $name%-8s best ${v.min}%7.2f s   reps " +
-        v.map(x => f"$x%.2f").mkString(" "))
     spark.stop()
   }
 

@@ -48,7 +48,8 @@ class BenchLineSpec extends AnyFunSuite {
 
   test("summary line survives a 2,000-char log tail with sbt epilogue") {
     val summary =
-      Bench.summaryLine(90.5997, 3, tick, 91, "/root/testdata/sf0.1", canary)
+      Bench.summaryLine(90.5997, 3, tick, 91, "/root/testdata/sf0.1", canary,
+        failed = 2)
     assert(summary.length <= 1000, s"summary is ${summary.length} chars")
     val log = Seq(
       "[info] running (fork) graft.Bench",
@@ -75,6 +76,9 @@ class BenchLineSpec extends AnyFunSuite {
     assert(lastJson.contains("\"drift\":false"))
     assert(lastJson.contains("\"total_normalized\":90.5997"))
     assert(lastJson.contains("\"queries_file\":\"target/bench.json\""))
+    // the failure count must survive too: a total missing failed
+    // queries is not comparable to one without
+    assert(lastJson.contains("\"failed\":2"))
   }
 
   test("oversized tick degrades to a tick-free summary, never an unparseable tail") {
@@ -85,6 +89,7 @@ class BenchLineSpec extends AnyFunSuite {
     assert(summary.length <= 1000)
     assert(balancedJson(summary))
     assert(!summary.contains("tick"))
+    assert(summary.contains("\"failed\":0"))
     // the drift measurement must survive even the degraded form
     assert(summary.contains("\"canary\":{"))
   }

@@ -17,7 +17,7 @@ import graft.tools.BenchFixtures
 class ChangeFeedSpec extends SparkSuite {
 
   private def signature(df: DataFrame): (Long, Long) = {
-    val cols = df.columns.filter(_ != "obs_entries").sorted
+    val cols = df.columns.sorted
     val r = df.select(hash(cols.toIndexedSeq.map(col): _*).cast("long").as("h"))
       .agg(count(lit(1)).as("n"), sum(col("h")).as("s")).first()
     (r.getLong(0), r.getLong(1))

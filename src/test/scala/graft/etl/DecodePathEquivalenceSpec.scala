@@ -3,16 +3,18 @@ package graft.etl
 import org.apache.spark.sql.functions._
 import graft.SparkSuite
 
-/** The string decode (reference interface) and the typed-map decode
-  * (scale path) must be indistinguishable: random obs maps — valid codes,
-  * junk values, multi-valued concepts, absent concepts, the 1534 quirk —
-  * run through both [[FlatVisitSummary.decodeColumns]] and
-  * [[FlatVisitSummary.decodeColumnsTyped]] and every one of the 36
+/** The one-pass string decode the stage runs must be indistinguishable
+  * from the reference-shaped contains chain: random obs strings — valid
+  * codes, junk values, multi-valued concepts, absent concepts, the 1534
+  * quirk — run through both [[ContainsChainDecode.decodeColumns]] (test
+  * sources, the independent oracle) and
+  * [[graft.functions.ObsDecode.decodeAllString]] +
+  * [[FlatVisitSummary.decodeColumnsFromStruct]], and every one of the 35
   * decoded columns must match row for row.
   */
 class DecodePathEquivalenceSpec extends SparkSuite {
 
-  test("string and typed decode projections agree on fuzzed obs maps") {
+  test("contains chain and one-pass string decode agree on fuzzed obs strings") {
     import spark.implicits._
     val rnd = new scala.util.Random(42)
     val concepts = Seq(
@@ -44,42 +46,19 @@ class DecodePathEquivalenceSpec extends SparkSuite {
 
     val df = rows.map { case (id, entries) =>
       val obs = entries.map { case (c, v) => s"!!$c=$v!!" }.mkString(" ## ")
-      val m = entries.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-      (id, if (obs.isEmpty) null else obs, m)
-    }.toDF("id", "obs", "obs_entries")
+      (id, if (obs.isEmpty) null else obs)
+    }.toDF("id", "obs")
 
-    val viaString = df.select(col("id") +: FlatVisitSummary.decodeColumns(col("obs")): _*)
-    val viaTyped = df.select(col("id") +: FlatVisitSummary.decodeColumnsTyped(col("obs_entries")): _*)
-    // the staged form build() actually runs: lookup projection, then chains
-    val viaStaged = df
-      .select(col("id") +: FlatVisitSummary.typedLookupColumns(col("obs_entries")): _*)
-      .select(col("id") +: FlatVisitSummary.decodeColumnsFromLookups: _*)
-    // the one-pass custom-Expression path build() defaults to
+    val viaChain = df.select(col("id") +: ContainsChainDecode.decodeColumns(col("obs")): _*)
     val viaExpr = df
-      .select(col("id"),
-        graft.functions.ObsDecode.decodeAll(col("obs_entries")).as("__dec"))
-      .select(col("id") +: FlatVisitSummary.decodeColumnsFromStruct(col("__dec")): _*)
-    // the one-pass STRING-input expression (for reference-produced tables)
-    val viaStrExpr = df
       .select(col("id"),
         graft.functions.ObsDecode.decodeAllString(col("obs")).as("__dec"))
       .select(col("id") +: FlatVisitSummary.decodeColumnsFromStruct(col("__dec")): _*)
-    val a = viaString.orderBy("id").collect().toSeq
-    val b = viaTyped.orderBy("id").collect().toSeq
-    val c = viaStaged.orderBy("id").collect().toSeq
-    val d = viaExpr.orderBy("id").collect().toSeq
+    val a = viaChain.orderBy("id").collect().toSeq
+    val b = viaExpr.orderBy("id").collect().toSeq
+    assert(a.size == 250)
     val diffs = a.zip(b).filter { case (x, y) => x != y }
-    assert(diffs.isEmpty, s"${diffs.size} typed-differing rows, first: ${diffs.headOption}")
-    val diffsS = a.zip(c).filter { case (x, y) => x != y }
-    assert(diffsS.isEmpty, s"${diffsS.size} staged-differing rows, first: ${diffsS.headOption}")
-    val diffsE = a.zip(d).filter { case (x, y) => x != y }
-    assert(diffsE.isEmpty, s"${diffsE.size} expr-differing rows, first: ${diffsE.headOption}")
-    val e = viaStrExpr.orderBy("id").collect().toSeq
-    val diffsSE = a.zip(e).filter { case (x, y) => x != y }
-    assert(diffsSE.isEmpty,
-      s"${diffsSE.size} string-expr-differing rows, first: ${diffsSE.headOption}")
-    // schema parity: the expression paths must emit the same column names
-    assert(viaExpr.columns.toSeq == viaString.columns.toSeq)
-    assert(viaStrExpr.columns.toSeq == viaString.columns.toSeq)
+    assert(diffs.isEmpty, s"${diffs.size} differing rows, first: ${diffs.headOption}")
+    assert(viaExpr.columns.toSeq == viaChain.columns.toSeq)
   }
 }

@@ -39,8 +39,7 @@ class IncrementalEquivalenceSpec extends SparkSuite {
         when(col("voided") === 1, col("date_voided")))
 
   private def sortedRows(df: DataFrame): Seq[String] =
-    { val d = df.drop("obs_entries") // map col: not orderable; obs string covers content
-    d.orderBy(d.columns.map(col): _*).collect().map(_.toString).toSeq }
+    df.orderBy(df.columns.map(col): _*).collect().map(_.toString).toSeq
 
   test("flat_obs / flat_orders / flat_lab_obs: chained incrementals == full rebuild") {
     val fx = OpenMrsFixture.generate(spark, nPersons = 30, seed = 7L)
@@ -202,14 +201,47 @@ class IncrementalEquivalenceSpec extends SparkSuite {
       Row(2, 1, 100, 6743, d1, null, 72.5, null, null, null, null, null, d1, 0, null),
       Row(3, 1, 100, null, d1, null, null, null, null, "stray", null, null, d2, 0, null)),
       Schemas.obs)
-    try {
-      spark.conf.set(FlatObs.TypedConfKey, "true") // typed path must not throw
-      val row = FlatObs.build(obs, enc, person).collect()(0)
-      assert(row.getAs[String]("obs") == "!!856=10000000!! ## !!6743=72.5!!")
-      assert(row.getAs[Timestamp]("max_date_created") == d2)
-      val entries = row.getAs[Map[Int, Seq[String]]]("obs_entries")
-      assert(entries == Map(856 -> Seq("10000000"), 6743 -> Seq("72.5")))
-    } finally spark.conf.unset(FlatObs.TypedConfKey)
+    val row = FlatObs.build(obs, enc, person).collect()(0)
+    assert(row.getAs[String]("obs") == "!!856=10000000!! ## !!6743=72.5!!")
+    assert(row.getAs[String]("obs_datetimes") ==
+      "!!856=2015-01-01!! ## !!6743=2015-01-01!!")
+    assert(row.getAs[Timestamp]("max_date_created") == d2)
+  }
+
+  test("flat_obs holds exactly the Schemas.flatObs columns after snapshot, bucketed and cascade writes") {
+    val fx = OpenMrsFixture.generate(spark, nPersons = 12, seed = 5L)
+    val (obs, enc, orders, person) =
+      (fx("obs").cache(), fx("encounter").cache(), fx("orders").cache(), fx("person"))
+    val t1 = ts("2015-03-01 00:00:00")
+    val want = Schemas.flatObs.fieldNames.toSeq
+    def fieldsOf(p: Pipeline): Seq[String] =
+      p.readFlat("flat_obs").get.schema.fieldNames.toSeq
+    val work = java.nio.file.Files.createTempDirectory("graft-schema-pin")
+
+    // snapshot mode and bucketed mode: a full-build tick, then a delta tick
+    Seq(None -> "snapshot", Some(8) -> "bucketed").foreach { case (buckets, mode) =>
+      val pipe = new Pipeline(spark, work.resolve(mode).toString, buckets)
+      pipe.tick(obsAsOf(obs, t1), encAsOf(enc, t1), ordersAsOf(orders, t1), person)
+      assert(fieldsOf(pipe) == want, s"$mode full tick")
+      pipe.tick(obs, enc, orders, person)
+      assert(fieldsOf(pipe) == want, s"$mode delta tick")
+    }
+
+    // the streamed cascade (bucketed): a bulk batch, then a delta batch
+    val obsDir = work.resolve("obs").toString
+    val pipe = new Pipeline(spark, work.resolve("cascade").toString, Some(8))
+    def runBatch(): Unit = graft.streaming.IncrementalEtlStream.runCascadeOnce(
+      spark, obsDir, enc, orders, person, pipe, work.resolve("ckpt").toString)
+    obsAsOf(obs, t1).write.parquet(s"$obsDir/batch1")
+    runBatch()
+    assert(fieldsOf(pipe) == want, "cascade first batch")
+    obs.filter(col("date_created") > lit(t1))
+      .withColumn("voided", lit(0))
+      .withColumn("date_voided", lit(null).cast("timestamp"))
+      .unionByName(obs.filter(col("voided") === 1 && col("date_voided") > lit(t1)))
+      .write.parquet(s"$obsDir/batch2")
+    runBatch()
+    assert(fieldsOf(pipe) == want, "cascade delta batch")
   }
 
   test("pipeline tick twice: idempotent on unchanged sources") {

@@ -59,8 +59,7 @@ class RetractionPropertySpec extends SparkSuite {
       .withColumn("date_voided", when(col("voided") === 1, col("date_voided")))
 
   private def canonical(df: DataFrame): Seq[String] =
-    { val d = df.drop("obs_entries") // map col: not orderable; obs string covers content
-    d.orderBy(d.columns.map(col): _*).collect().map(_.toString).toSeq }
+    df.orderBy(df.columns.map(col): _*).collect().map(_.toString).toSeq
 
   test("random timelines: chained incrementals == full rebuild (flat_obs/lab/orders)") {
     val prop = Prop.forAllNoShrink(Gen.listOfN(40, genEvent)) { events =>

@@ -61,8 +61,7 @@ class SaltedObsAggSpec extends SparkSuite {
   test("salted obs-map aggregation == unsalted on a hot-person fixture") {
     val (obs, enc, person) = hotFixture()
     def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
-      { val d = df.drop("obs_entries") // map col: not orderable; obs string covers content
-      d.orderBy(d.columns.map(col): _*).collect().map(_.toString).toSeq }
+      df.orderBy(df.columns.map(col): _*).collect().map(_.toString).toSeq
 
     spark.conf.unset(FlatObs.SaltConfKey)
     val unsalted = rows(FlatObs.build(obs, enc, person))

@@ -4,43 +4,16 @@ import org.apache.spark.sql.functions._
 import graft.SparkSuite
 import graft.etl.FlatVisitSummary
 
-/** Direct null/edge semantics of the one-pass decode expressions that the
-  * fuzz spec's generated maps cannot reach: a NULL map (ObsMap emits null
-  * for no entries — lab-union padded rows carry it), a null/empty obs
-  * string, and malformed string tokens (must be skipped, like a contains
-  * arm that can never match).
+/** Direct null/edge semantics of the one-pass decode expression that the
+  * fuzz spec's generated strings cannot reach: a null/empty obs string
+  * (ObsMap emits null for no entries — lab-union padded rows carry it),
+  * a mistyped input, and malformed string tokens (must be skipped, like a
+  * contains arm that can never match).
   */
 class ObsDecodeSpec extends SparkSuite {
 
-  private def decodeMapOf(df: org.apache.spark.sql.DataFrame) =
-    df.select(col("id"),
-        ObsDecode.decodeAll(col("m")).as("__dec"))
-      .select(col("id") +: FlatVisitSummary.decodeColumnsFromStruct(col("__dec")): _*)
-
-  test("NULL map decodes to all-null except membership tests -> 'No'") {
-    import spark.implicits._
-    val df = Seq((1L, Option.empty[Map[Int, Seq[String]]]),
-        (2L, Some(Map(1048 -> Seq("1065")))))
-      .toDF("id", "m")
-    val rows = decodeMapOf(df).orderBy("id").collect()
-    val nullRow = rows(0)
-    val names = decodeMapOf(df).columns
-    names.zipWithIndex.foreach { case (n, i) =>
-      if (n == "id") ()
-      else if (n.endsWith("_done")) assert(nullRow.getString(i) == "No", n)
-      else assert(nullRow.isNullAt(i), s"$n should be null for a null map")
-    }
-    // sanity: the non-null row decodes
-    assert(rows(1).getString(names.indexOf("pwp_disclosure")) == "Yes")
-  }
-
   test("mistyped input fails at analysis time with the expected type named") {
     import spark.implicits._
-    val df = Seq((1, "not-a-map")).toDF("id", "m")
-    val eMap = intercept[org.apache.spark.sql.AnalysisException] {
-      df.select(ObsDecode.decodeAll(col("m"))).schema
-    }
-    assert(eMap.getMessage.contains("map<int,array<string>>"))
     val dfInt = Seq((1, 2)).toDF("id", "o")
     val eStr = intercept[org.apache.spark.sql.AnalysisException] {
       dfInt.select(ObsDecode.decodeAllString(col("o"))).schema

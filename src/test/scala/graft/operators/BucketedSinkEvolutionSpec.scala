@@ -141,10 +141,8 @@ class BucketedSinkEvolutionSpec extends SparkSuite {
     val fx = OpenMrsFixture.generate(spark, nPersons = 20, seed = 31L)
     val (obs, enc, orders, person) =
       (fx("obs").cache(), fx("encounter").cache(), fx("orders").cache(), fx("person"))
-    def rows(df: DataFrame) = {
-      val d = df.drop("obs_entries")
-      d.orderBy(d.columns.map(col): _*).collect().map(_.toString).toSeq
-    }
+    def rows(df: DataFrame) =
+      df.orderBy(df.columns.map(col): _*).collect().map(_.toString).toSeq
     val dirA = java.nio.file.Files.createTempDirectory("graft-evo-a").toString
     val dirB = java.nio.file.Files.createTempDirectory("graft-evo-b").toString
     try {
@@ -181,6 +179,72 @@ class BucketedSinkEvolutionSpec extends SparkSuite {
       assert(rows(after.drop("annotation")) == expected,
         "original columns diverge across the evolution boundary")
     } finally spark.conf.unset("graft.sink.buckets")
+  }
+
+  test("flat_obs written with the retired obs_entries map column ticks on and matches a rebuild") {
+    import graft.etl.{FlatLabObs, FlatLatestHivSummary, FlatObs, FlatOrders,
+      FlatVisitSummary, OpenMrsFixture, Pipeline, Schemas}
+    val fx = OpenMrsFixture.generate(spark, nPersons = 20, seed = 17L)
+    val (obs, enc, orders, person) =
+      (fx("obs").cache(), fx("encounter").cache(), fx("orders").cache(), fx("person"))
+    val t1 = java.sql.Timestamp.valueOf("2015-03-01 00:00:00")
+    def rows(df: DataFrame) =
+      df.orderBy(df.columns.map(col): _*).collect().map(_.toString).toSeq
+    val pipe = new Pipeline(spark, tmp(), Some(8))
+    pipe.tick(
+      obs.filter(col("date_created") <= lit(t1))
+        .withColumn("voided",
+          when(col("voided") === 1 && col("date_voided") <= lit(t1), 1).otherwise(0))
+        .withColumn("date_voided", when(col("voided") === 1, col("date_voided"))),
+      enc.filter(col("date_created") <= lit(t1))
+        .withColumn("date_changed",
+          when(col("date_changed") <= lit(t1), col("date_changed"))),
+      orders.filter(col("date_created") <= lit(t1))
+        .withColumn("voided",
+          when(col("voided") === 1 && col("date_voided") <= lit(t1), 1).otherwise(0))
+        .withColumn("date_voided", when(col("voided") === 1, col("date_voided"))),
+      person)
+
+    // re-lay flat_obs the way the old typed default stored it: the
+    // string columns plus an `obs_entries map<int, array<string>>`,
+    // which the full write records in `_SCHEMA` (a direct sink write, so
+    // drop the consistency marker as BucketedSink.writeFull requires)
+    val path = pipe.bucketedDataPath("flat_obs").toString
+    val oldLayout = BucketedSink.read(spark, path)
+      .withColumn("obs_entries", map(lit(1836), array(col("obs"))))
+      .localCheckpoint()
+    BucketedSink.writeFull(oldLayout, path, "person_id", 8)
+    pipe.dropMarker()
+    def recorded = BucketedSink.readSchema(sc.hadoopConfiguration, path).get
+    assert(recorded.fieldNames.contains("obs_entries"))
+    val before = manifest(path)
+
+    // the delta tick: the stage emits Schemas.flatObs only; the sink
+    // keeps the recorded column, typed NULL on the buckets it rewrites
+    pipe.tick(obs, enc, orders, person)
+    assert(recorded("obs_entries").dataType.catalogString == "map<int,array<string>>")
+    val after = BucketedSink.read(spark, path)
+      .withColumn("__b", BucketedSink.bucketOf(col("person_id"), 8))
+    val rewritten = manifest(path).collect { case (b, e) if !before.get(b).contains(e) => b }.toSet
+    assert(rewritten.nonEmpty, "the delta tick rewrote no flat_obs bucket")
+    assert(after.filter(col("__b").isInCollection(rewritten) &&
+      col("obs_entries").isNotNull).count() == 0,
+      "rewritten buckets must carry NULL obs_entries")
+    assert(after.filter(!col("__b").isInCollection(rewritten) &&
+      col("obs_entries").isNull).count() == 0,
+      "untouched buckets keep their stored obs_entries")
+
+    // every stage equals a from-scratch build; flat_obs on its own columns
+    val fo = FlatObs.build(obs, enc, person)
+    val ord = FlatOrders.build(orders, enc, person)
+    val vs = FlatVisitSummary.build(fo, ord, person)
+    val flatObsCols = Schemas.flatObs.fieldNames.toSeq.map(col)
+    assert(rows(pipe.readFlat("flat_obs").get.select(flatObsCols: _*)) == rows(fo))
+    assert(rows(pipe.readFlat("flat_orders").get) == rows(ord))
+    assert(rows(pipe.readFlat("flat_lab_obs").get) == rows(FlatLabObs.build(obs, person)))
+    assert(rows(pipe.readFlat("flat_visit_summary").get) == rows(vs))
+    assert(rows(pipe.readFlat("flat_latest_hiv_summary").get) ==
+      rows(FlatLatestHivSummary.build(vs)))
   }
 
   test("legacy tables (no _SCHEMA sidecar) read as before and adopt one") {

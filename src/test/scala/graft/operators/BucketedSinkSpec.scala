@@ -64,8 +64,7 @@ class BucketedSinkSpec extends SparkSuite {
     // correctness: the bucketed table equals a full rebuild on t2 sources
     val expected = FlatObs.build(obsAsOf(obs, t2), encAsOf(enc, t2), person)
     def rows(df: DataFrame) =
-      { val d = df.drop("obs_entries") // map col: not orderable; obs string covers content
-      d.orderBy(d.columns.map(col): _*).collect().map(_.toString).toSeq }
+      df.orderBy(df.columns.map(col): _*).collect().map(_.toString).toSeq
     assert(rows(BucketedSink.read(spark, path)) == rows(expected))
 
     // delta-sized write: some buckets rewritten, the rest byte-identical
@@ -87,8 +86,7 @@ class BucketedSinkSpec extends SparkSuite {
     val nBuckets = 16
     val path = java.nio.file.Files.createTempDirectory("graft-atomic").toString + "/flat_obs"
     def rows(df: DataFrame) =
-      { val d = df.drop("obs_entries") // map col: not orderable; obs string covers content
-      d.orderBy(d.columns.map(col): _*).collect().map(_.toString).toSeq }
+      df.orderBy(df.columns.map(col): _*).collect().map(_.toString).toSeq
 
     val flat1 = FlatObs.build(obsAsOf(obs, t1), encAsOf(enc, t1), person)
     BucketedSink.writeFull(flat1, path, "person_id", nBuckets)
@@ -190,8 +188,7 @@ class BucketedSinkSpec extends SparkSuite {
     val (obs, enc, orders, person) =
       (fx("obs").cache(), fx("encounter").cache(), fx("orders").cache(), fx("person"))
     def rows(df: DataFrame) =
-      { val d = df.drop("obs_entries") // map col: not orderable; obs string covers content
-      d.orderBy(d.columns.map(col): _*).collect().map(_.toString).toSeq }
+      df.orderBy(df.columns.map(col): _*).collect().map(_.toString).toSeq
 
     val dirA = java.nio.file.Files.createTempDirectory("graft-vsn").toString
     val pipeA = new Pipeline(spark, dirA)

@@ -19,7 +19,7 @@ class StreamedCascadeParitySpec extends SparkSuite {
   private val dir = "/root/testdata/sf0.001"
 
   private def sig(df: DataFrame): (Long, Long) = {
-    val cols = df.columns.filter(_ != "obs_entries").sorted
+    val cols = df.columns.sorted
     val r = df.select(hash(cols.toIndexedSeq.map(col): _*).cast("long").as("h"))
       .agg(count(lit(1)).as("n"), sum(col("h")).as("s")).first()
     (r.getLong(0), r.getLong(1))

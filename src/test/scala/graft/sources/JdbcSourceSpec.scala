@@ -119,8 +119,7 @@ class JdbcSourceSpec extends SparkSuite {
       val base = FlatObs.build(obsAsOf(obs, cut1), encAsOf(enc, cut1), person)
       val ticked = FlatObs.incremental(
         base, obsAsOf(obs, cut2), encAsOf(enc, cut2), person, cut1)
-      val d = ticked.drop("obs_entries")
-      d.orderBy(d.columns.map(col).toIndexedSeq: _*)
+      ticked.orderBy(ticked.columns.map(col).toIndexedSeq: _*)
         .collect().map(_.toString).toSeq
     }
     val viaJdbc = drive(jObs, jEnc, jPerson)

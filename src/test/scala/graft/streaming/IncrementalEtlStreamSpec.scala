@@ -107,8 +107,7 @@ class IncrementalEtlStreamSpec extends SparkSuite {
       fullFo, FlatOrders.build(orders, enc, person), person)
     val fullLatest = FlatLatestHivSummary.build(fullSummary)
     def rows(df: org.apache.spark.sql.DataFrame) =
-      { val d = df.drop("obs_entries") // map col: not orderable; obs string covers content
-      d.orderBy(d.columns.map(col): _*).collect().map(_.toString).toSeq }
+      df.orderBy(df.columns.map(col): _*).collect().map(_.toString).toSeq
     assert(rows(pipe.readFlat("flat_obs").get) == rows(fullFo))
     assert(rows(pipe.readFlat("flat_lab_obs").get) ==
       rows(FlatLabObs.build(snapshot, person)))
