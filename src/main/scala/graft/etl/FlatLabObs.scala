@@ -1,6 +1,5 @@
 package graft.etl
 
-import java.sql.Timestamp
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.ObsMap
@@ -91,9 +90,10 @@ object FlatLabObs {
     canon(FlatObs.removeVoidedPersons(aggLabs(labRows(obs)), person))
 
   /** Incremental: person-days touched by a lab void (date_voided > wm,
-    * :84-93 — NB the `date_created <= wm` guard is commented out in the
-    * reference; kept that way) plus, in fixed mode, person-days with new
-    * lab obs. Deletes match on date(test_datetime) = obs day (:96-98).
+    * here the obs `date_voided` horizon, see [[Horizons]]; :84-93 — NB
+    * the `date_created <= wm` guard is commented out in the reference;
+    * kept that way) plus, in fixed mode, person-days with new lab obs.
+    * Deletes match on date(test_datetime) = obs day (:96-98).
     */
   /** Persons whose flat_lab_obs rows can change this tick — a SUPERSET
     * of the (person, test_date) delta grain (safe for bucket-overwrite
@@ -103,15 +103,15 @@ object FlatLabObs {
   def touchedPersons(
       obs: DataFrame,
       person: DataFrame,
-      lastUpdate: Timestamp,
+      bounds: Horizons,
       existing: Option[DataFrame] = None,
       obsDelta: Option[DataFrame] = None,
       purgeSet: Option[DataFrame] = None): DataFrame = {
-    val wm = lit(lastUpdate)
+    val wm = lit(bounds.created)
     val obsD = obsDelta.getOrElse(obs)
     val panel = col("concept_id").isin(LabConcepts.map(Integer.valueOf): _*)
     val purge = purgeSet.getOrElse(FlatObs.voidedPurgeSet(person, existing))
-    obsD.filter(panel && col("date_voided") > wm).select("person_id")
+    obsD.filter(panel && col("date_voided") > lit(bounds.voided)).select("person_id")
       .union(obsD.filter(panel && col("date_created") > wm).select("person_id"))
       .union(purge)
       .distinct()
@@ -121,15 +121,16 @@ object FlatLabObs {
       existing: DataFrame,
       obs: DataFrame,
       person: DataFrame,
-      lastUpdate: Timestamp,
+      bounds: Horizons,
       includeNewObs: Boolean = true,
       obsDelta: Option[DataFrame] = None): DataFrame = {
-    val wm = lit(lastUpdate)
+    val wm = lit(bounds.created)
     // delta feed only seeds the day key sets; rebuilds read full source
     val obsD = obsDelta.getOrElse(obs)
     val panel = col("concept_id").isin(LabConcepts.map(Integer.valueOf): _*)
 
-    val voidedDays = obsD.filter(col("voided") === 1 && col("date_voided") > wm && panel)
+    val voidedDays = obsD.filter(
+      col("voided") === 1 && col("date_voided") > lit(bounds.voided) && panel)
       .select(col("person_id"), to_date(col("obs_datetime")).as("test_date")).distinct()
     val newDays =
       if (includeNewObs)

@@ -1,6 +1,5 @@
 package graft.etl
 
-import java.sql.Timestamp
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.{MysqlFunctions, ObsMap}
@@ -200,6 +199,9 @@ object FlatObs {
     *  3. encounters_with_new_obs: obs date_created > wm (:199);
     *  4. delete + re-aggregate every touched group at both grains;
     *  5. purge voided persons (:337).
+    * Here `date_voided` and `date_changed` compare against the stage's
+    * modification horizons in `bounds`, not the creation watermark
+    * (flagged deviation, see [[Horizons]]).
     * The delta key sets drive semi/anti joins with no forced broadcast
     * hint: on a steady-state tick they are tiny and AQE converts the join
     * to broadcast at runtime; on a cold/full-delta run they are the whole
@@ -211,10 +213,10 @@ object FlatObs {
       obs: DataFrame,
       encounter: DataFrame,
       person: DataFrame,
-      lastUpdate: Timestamp,
+      bounds: Horizons,
       obsDelta: Option[DataFrame] = None,
       encounterDelta: Option[DataFrame] = None): DataFrame = {
-    val wm = lit(lastUpdate)
+    val wm = lit(bounds.created)
     // Delta feeds ONLY seed key sets; every group rebuild below reads the
     // full source-of-truth, so a feed that over-approximates (stale
     // versions, extra rows) costs work, never correctness — the same
@@ -222,8 +224,8 @@ object FlatObs {
     val obsD = obsDelta.getOrElse(obs)
     val encD = encounterDelta.getOrElse(encounter)
 
-    val voidedObs = obsD.filter(
-      col("voided") === 1 && col("date_voided") > wm && col("date_created") <= wm)
+    val voidedObs = obsD.filter(col("voided") === 1 &&
+      col("date_voided") > lit(bounds.voided) && col("date_created") <= wm)
 
     // encounter-grain delta keys: voided ∪ changed ∪ new.
     // The reference's changed-encounter set keeps only unvoided
@@ -238,7 +240,7 @@ object FlatObs {
     val voidedEncKeys = voidedObs.filter(col("encounter_id").isNotNull)
       .select("encounter_id").distinct()
     val changedEncKeys = encD
-      .filter(col("date_changed") > wm)
+      .filter(col("date_changed") > lit(bounds.changed))
       .select("encounter_id")
       .distinct()
     val newObsEncKeys = obsD.filter(
@@ -310,18 +312,18 @@ object FlatObs {
       obs: DataFrame,
       encounter: DataFrame,
       person: DataFrame,
-      lastUpdate: Timestamp,
+      bounds: Horizons,
       existing: Option[DataFrame] = None,
       obsDelta: Option[DataFrame] = None,
       encounterDelta: Option[DataFrame] = None,
       purgeSet: Option[DataFrame] = None): DataFrame = {
-    val wm = lit(lastUpdate)
+    val wm = lit(bounds.created)
     val obsD = obsDelta.getOrElse(obs)
     val encD = encounterDelta.getOrElse(encounter)
     val purge = purgeSet.getOrElse(voidedPurgeSet(person, existing))
-    obsD.filter(col("date_voided") > wm).select("person_id")
+    obsD.filter(col("date_voided") > lit(bounds.voided)).select("person_id")
       .union(obsD.filter(col("date_created") > wm).select("person_id"))
-      .union(encD.filter(col("date_changed") > wm)
+      .union(encD.filter(col("date_changed") > lit(bounds.changed))
         .select(col("patient_id").as("person_id")))
       .union(encD.filter(col("date_created") > wm)
         .select(col("patient_id").as("person_id")))

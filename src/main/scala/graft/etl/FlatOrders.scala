@@ -1,6 +1,5 @@
 package graft.etl
 
-import java.sql.Timestamp
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.ObsMap
@@ -89,14 +88,14 @@ object FlatOrders {
   def touchedPersons(
       orders: DataFrame,
       person: DataFrame,
-      lastUpdate: Timestamp,
+      bounds: Horizons,
       existing: Option[DataFrame] = None,
       ordersDelta: Option[DataFrame] = None,
       purgeSet: Option[DataFrame] = None): DataFrame = {
-    val wm = lit(lastUpdate)
+    val wm = lit(bounds.created)
     val ordD = ordersDelta.getOrElse(orders)
     val purge = purgeSet.getOrElse(FlatObs.voidedPurgeSet(person, existing))
-    ordD.filter(col("date_voided") > wm)
+    ordD.filter(col("date_voided") > lit(bounds.voided))
       .select(col("patient_id").as("person_id"))
       .union(ordD.filter(col("date_created") > wm)
         .select(col("patient_id").as("person_id")))
@@ -109,13 +108,13 @@ object FlatOrders {
       orders: DataFrame,
       encounter: DataFrame,
       person: DataFrame,
-      lastUpdate: Timestamp,
+      bounds: Horizons,
       ordersDelta: Option[DataFrame] = None): DataFrame = {
-    val wm = lit(lastUpdate)
+    val wm = lit(bounds.created)
     // delta feed only seeds the key sets; the rebuild reads full source
     val ordD = ordersDelta.getOrElse(orders)
     val voidedKeys = ordD.filter(
-      col("voided") === 1 && col("date_voided") > wm)
+      col("voided") === 1 && col("date_voided") > lit(bounds.voided))
       .filter(col("encounter_id").isNotNull)
       .select("encounter_id").distinct()
     val newKeys = ordD.filter(

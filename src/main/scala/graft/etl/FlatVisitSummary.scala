@@ -1,6 +1,5 @@
 package graft.etl
 
-import java.sql.Timestamp
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -291,19 +290,19 @@ object FlatVisitSummary {
       flatObs: DataFrame,
       obs: DataFrame,
       encounter: DataFrame,
-      lastUpdate: Timestamp,
+      bounds: Horizons,
       obsDelta: Option[DataFrame] = None,
       encounterDelta: Option[DataFrame] = None): DataFrame = {
-    val wm = lit(lastUpdate)
+    val wm = lit(bounds.created)
     val obsD = obsDelta.getOrElse(obs)
     val encD = encounterDelta.getOrElse(encounter)
     val retracted = existing.select("person_id", "encounter_id")
       .join(flatObs.select("encounter_id"), Seq("encounter_id"), "left_anti")
       .select("person_id")
-    encD.filter(col("date_changed") > wm)
+    encD.filter(col("date_changed") > lit(bounds.changed))
       .select(col("patient_id").as("person_id"))
       .union(flatObs.filter(col("max_date_created") > wm).select("person_id"))
-      .union(obsD.filter(col("date_voided") > wm).select("person_id"))
+      .union(obsD.filter(col("date_voided") > lit(bounds.voided)).select("person_id"))
       .union(retracted)
       .distinct()
   }
@@ -327,20 +326,20 @@ object FlatVisitSummary {
       foQueuePersons: DataFrame,
       obs: DataFrame,
       encounter: DataFrame,
-      lastUpdate: Timestamp,
+      bounds: Horizons,
       obsDelta: Option[DataFrame] = None,
       encounterDelta: Option[DataFrame] = None): DataFrame = {
-    val wm = lit(lastUpdate)
+    val wm = lit(bounds.created)
     val obsD = obsDelta.getOrElse(obs)
     val encD = encounterDelta.getOrElse(encounter)
     val retracted = existing.select("person_id", "encounter_id")
       .join(foQueuePersons, Seq("person_id"), "left_semi")
       .join(foScoped.select("encounter_id"), Seq("encounter_id"), "left_anti")
       .select("person_id")
-    encD.filter(col("date_changed") > wm)
+    encD.filter(col("date_changed") > lit(bounds.changed))
       .select(col("patient_id").as("person_id"))
       .union(foScoped.filter(col("max_date_created") > wm).select("person_id"))
-      .union(obsD.filter(col("date_voided") > wm).select("person_id"))
+      .union(obsD.filter(col("date_voided") > lit(bounds.voided)).select("person_id"))
       .union(retracted)
       .distinct()
   }
@@ -356,12 +355,12 @@ object FlatVisitSummary {
       obs: DataFrame,
       encounter: DataFrame,
       person: DataFrame,
-      lastUpdate: Timestamp,
+      bounds: Horizons,
       queue: Option[DataFrame] = None,
       obsDelta: Option[DataFrame] = None,
       encounterDelta: Option[DataFrame] = None): DataFrame = {
     val q = queue.getOrElse(
-      touchedPersons(existing, flatObs, obs, encounter, lastUpdate,
+      touchedPersons(existing, flatObs, obs, encounter, bounds,
         obsDelta, encounterDelta))
     val kept = existing.join(q, Seq("person_id"), "left_anti")
     kept.unionByName(build(flatObs, flatOrders, person, Some(q)))

@@ -6,11 +6,14 @@ import org.apache.hadoop.fs.{FileContext, Options, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{BucketedSink, Watermark}
+import Pipeline.{StageBounds, StagePlan}
 
 /** Optional pre-pruned change feeds for [[Pipeline.tick]]: each frame, when
   * present, must contain AT LEAST every source row whose latest
   * modification (`date_created`, `date_voided`, `date_changed`) is newer
-  * than the OLDEST stage watermark in the run log. The stages use a feed
+  * than the OLDEST stage creation watermark in the run log (the rows
+  * named by a table version; a modification horizon never asks for an
+  * older row than its stage's watermark would). The stages use a feed
   * only to SEED their delta key sets — every time predicate is re-applied
   * on it and every group rebuild reads the full snapshot — so feeds may
   * over-approximate freely but must never miss a change. Produce one with
@@ -34,10 +37,12 @@ final case class SourceDeltas(
   *   → flat_visit_summary                 (from flat_obs + flat_orders)
   *   → flat_latest_hiv_summary            (from flat_visit_summary)
   *
-  * Each run: resolve watermark (flat_log → fallback → epoch) → incremental
-  * update → versioned snapshot write + atomic `_CURRENT` pointer swap (the
-  * REPLACE-INTO-equivalent sink; a production deployment would use a
-  * Delta/Iceberg MERGE instead) → append run row to flat_log.
+  * Each run: resolve watermark and horizons (flat_log → fallback → epoch)
+  * → incremental update → versioned snapshot write + atomic `_CURRENT`
+  * pointer swap (the REPLACE-INTO-equivalent sink; a production deployment
+  * would use a Delta/Iceberg MERGE instead) → append run rows to flat_log.
+  * A bucketed tick with nothing above any bound only appends the run rows
+  * (see [[tick]]).
   */
 class Pipeline(
     spark: SparkSession, root: String, bucketsOverride: Option[Int] = None) {
@@ -115,11 +120,6 @@ class Pipeline(
   // cascade's stage facade below) drop the marker.
   private def markerPath = new Path(path("purged_persons"), "_CONSISTENT")
 
-  private def logSignature(log: DataFrame): String = {
-    val r = log.agg(count(lit(1)), max(col("date_created"))).first()
-    r.getLong(0) + "|" + Option(r.getTimestamp(1)).map(_.getTime).getOrElse(0L)
-  }
-
   private def readMarker(): Option[String] = {
     val fs = markerPath.getFileSystem(hadoopConf)
     if (!fs.exists(markerPath)) None
@@ -133,7 +133,7 @@ class Pipeline(
     }
   }
 
-  private def writeMarker(sig: String): Unit = {
+  private[graft] def writeMarker(sig: String): Unit = {
     val fs = markerPath.getFileSystem(hadoopConf)
     val tmp = new Path(path("purged_persons"), "_CONSISTENT.tmp")
     val out = fs.create(tmp, true)
@@ -151,6 +151,10 @@ class Pipeline(
     * observability for specs (the steady path must NOT probe; a tick
     * after any out-of-band write MUST). */
   private[graft] var lastTickProbed: Boolean = false
+
+  /** Whether the last tick found nothing to do and ran no stage (see
+    * [[tick]]) — observability for specs. */
+  private[graft] var lastTickShortCircuited: Boolean = false
 
   // ---- bucketed stage facade for callers OUTSIDE tick ----
   // The streamed cascade (IncrementalEtlStream) drives the same
@@ -218,19 +222,34 @@ class Pipeline(
     }
   }
 
-  /** The new watermark recorded after a run is the max source
-    * `date_created` captured at run start (flat_obs_v1.0.sql:26-28,345:
-    * `insert into flat_log values (@start, @last_date_created, …)`) — NOT
-    * wall-clock, so source rows racing the run are re-read next tick.
+  /** Every maximum the tick's bounds capture — two columns of each
+    * source frame — in ONE aggregate over the tagged union of the frames,
+    * captured at run start like the reference's `@last_date_created`
+    * (flat_obs_v1.0.sql:26-28,345: `insert into flat_log values (@start,
+    * @last_date_created, …)`), NOT wall-clock, so source rows racing the
+    * run are re-read next tick. A column with no value reads as Epoch.
     */
-  private def maxTs(dfs: Seq[(DataFrame, String)]): Timestamp =
-    // read the aggregate as a Timestamp (an absolute instant) — a
-    // string round-trip would re-parse the session-tz rendering in the
-    // driver JVM's default zone, shifting the stored watermark by the
-    // offset between them and silently skipping late-committing rows
-    dfs.flatMap { case (df, c) =>
-      Option(df.agg(max(col(c))).first().getTimestamp(0))
-    }.reduceOption((a, b) => if (a.after(b)) a else b).getOrElse(Watermark.Epoch)
+  private def maxima(frames: Seq[(DataFrame, String, String)]): Seq[(Timestamp, Timestamp)] = {
+    val tagged = frames.zipWithIndex.map { case ((df, a, b), i) =>
+      df.select(lit(i).as("src"), col(a).as("a"), col(b).as("b"))
+    }.reduce(_ union _)
+    val maxes = frames.indices.flatMap(i =>
+      Seq("a", "b").map(c => max(when(col("src") === i, col(c)))))
+    val r = tagged.agg(maxes.head, maxes.tail: _*).first()
+    // read the aggregates as Timestamps (absolute instants) — a string
+    // round-trip would re-parse the session-tz rendering in the driver
+    // JVM's default zone, shifting the stored bound by the offset between
+    // them and silently skipping late-committing rows
+    def at(j: Int) = if (r.isNullAt(j)) Watermark.Epoch else r.getTimestamp(j)
+    frames.indices.map(i => (at(2 * i), at(2 * i + 1)))
+  }
+
+  private val flatObsBounds =
+    StageBounds(flatObsVersion, "obs.date_voided", Some("encounter.date_changed"))
+  private val flatOrdersBounds = StageBounds(flatOrdersVersion, "orders.date_voided", None)
+  private val flatLabObsBounds = StageBounds(flatLabObsVersion, "obs.date_voided", None)
+  private val flatVisitSummaryBounds = StageBounds(
+    flatVisitSummaryVersion, "obs.date_voided", Some("encounter.date_changed"))
 
   // `graft.debug.tickTiming=true` prints per-phase wall seconds and
   // bytes opened for everything a tick does OUTSIDE the four logged
@@ -246,34 +265,18 @@ class Pipeline(
       r
     } else f
 
-  /** `log` is the run log read ONCE at tick start: a stage's own version
-    * gains no entries until its own append, so the tick-start snapshot
-    * resolves every stage's watermark — re-reading (and re-listing) the
-    * log five times per tick bought nothing. */
+  /** Run one stage from `plan.start` and append its rows to the run log
+    * in one file; returns the appended rows. */
   private def runStage(
-      log: DataFrame,
-      version: String,
+      plan: StagePlan,
       flatName: String,
-      newWatermark: Timestamp,
-      run: Timestamp => DataFrame,
-      write: (DataFrame, Timestamp) => Unit = null,
-      tableFallback: Boolean = true): Unit = {
-    val start = new Timestamp(System.currentTimeMillis())
-    // tableFallback=false for stages whose table carries no
-    // max_date_created (visit summary): a log miss then resolves to
-    // Epoch — a full requeue, the safe recovery — instead of crashing
-    // on a missing column (and a fallback on some OTHER table's max
-    // would overshoot and silently skip this tick's delta).
-    val wm = Watermark.resolve(log, version,
-      if (tableFallback) readFlat(flatName) else None)
-    val result = run(wm)
-    if (write == null) writeSnapshot(result, flatName) else write(result, wm)
-    val secs = ((System.currentTimeMillis() - start.getTime) / 1000).toShort
-    // never let a recorded watermark REGRESS: a delta-feed-derived max is
-    // Epoch when the feed has no new rows, and recording that would turn
-    // the next tick into a full requeue
-    val floored = if (newWatermark.before(wm)) wm else newWatermark
-    Watermark.appendRun(spark, logPath, version, floored, secs)
+      run: Horizons => DataFrame,
+      write: DataFrame => Unit = null): Seq[Watermark.RunRow] = {
+    val start = System.currentTimeMillis()
+    val result = run(plan.start)
+    if (write == null) writeSnapshot(result, flatName) else write(result)
+    val secs = ((System.currentTimeMillis() - start) / 1000).toShort
+    Watermark.appendRun(spark, logPath, plan.rows, secs)
   }
 
   /** One bucketed stage's shared tick state: the proven-superset person
@@ -316,9 +319,9 @@ class Pipeline(
     * swap. Null (snapshot mode) when bucketing is off. */
   private def bucketedWrite(
       name: String,
-      delta: () => BucketedDelta): (DataFrame, Timestamp) => Unit =
+      delta: () => BucketedDelta): DataFrame => Unit =
     if (sinkBuckets <= 0) null
-    else { (result, _) =>
+    else { result =>
       val p = bucketedDataPath(name).toString
       if (!bucketedExists(name))
         BucketedSink.writeFull(result, p, "person_id", sinkBuckets)
@@ -338,6 +341,15 @@ class Pipeline(
     * predicate and rebuild from the snapshot — so a wrong feed can only
     * slow the tick down or (if it MISSES changes, violating its contract)
     * skip them exactly as a lagging source snapshot would.
+    *
+    * A bucketed tick with nothing to do short-circuits: when the run log
+    * matches the consistency marker, every table exists, the summary is
+    * aligned with flat_obs, no source maximum is above its stage's bounds
+    * and no voided person is left to purge, every stage queue would be
+    * empty. The tick then appends the run rows (the reference logs every
+    * `CALL`) in one file, rewrites the marker and returns — no stage,
+    * checkpoint, bucket read, purged-log rewrite or table write. The
+    * snapshot layout always runs its stages.
     */
   def tick(
       obs: DataFrame, encounter: DataFrame, orders: DataFrame,
@@ -346,13 +358,54 @@ class Pipeline(
     val obsD = deltas.obs
     val encD = deltas.encounter
     val ordD = deltas.orders
-    // watermark advance from the FEED when present: rows created since
-    // the old wm are in the feed by contract, so max(feed) equals
-    // max(source) whenever anything new arrived; runStage floors at the
-    // old wm for the no-new-rows case
-    val encObsMax = phase("watermark maxTs")(maxTs(Seq(
-      encD.getOrElse(encounter) -> "date_created",
-      obsD.getOrElse(obs) -> "date_created")))
+    // every bound's capture from the FEED when present: rows created or
+    // modified since the old bounds are in the feed by contract, so its
+    // maxima equal the source's whenever anything new arrived; the floor
+    // at the old bound (StagePlan) covers the no-new-rows case
+    val Seq((obsCreated, obsVoided), (encCreated, encChanged), (ordCreated, ordVoided)) =
+      phase("watermark maxima")(maxima(Seq(
+        (obsD.getOrElse(obs), "date_created", "date_voided"),
+        (encD.getOrElse(encounter), "date_created", "date_changed"),
+        (ordD.getOrElse(orders), "date_created", "date_voided"))))
+
+    // run log collected ONCE at tick start: a stage's own rows gain no
+    // entries until its own append, so this snapshot resolves every
+    // stage's bounds, the summary's alignment and the marker signature
+    val log0 = Watermark.collectLog(spark, logPath)
+    def plan(b: StageBounds, fallback: => Option[DataFrame], captured: Horizons): StagePlan = {
+      val start = b.start(log0, Watermark.resolve(log0, b.version, fallback))
+      StagePlan(b, start, captured.atLeast(start))
+    }
+    val foPlan = plan(flatObsBounds, readFlat("flat_obs"),
+      Horizons(Horizons.later(obsCreated, encCreated), obsVoided, encChanged))
+    val ordPlan = plan(flatOrdersBounds, readFlat("flat_orders"),
+      Horizons(ordCreated, ordVoided, Watermark.Epoch))
+    // lab watermark from the obs actually visible to the lab delta, NOT
+    // encounter's too: advancing on the strength of an encounter row alone
+    // would widen the window where a lab obs committing just after the
+    // snapshot is permanently skipped
+    val labPlan = plan(flatLabObsBounds, readFlat("flat_lab_obs"),
+      Horizons(obsCreated, obsVoided, Watermark.Epoch))
+    // Summary creation watermark: the flat_obs stage records max(source
+    // date_created seen) as ITS watermark — an upper bound on every
+    // flat_obs row's max_date_created, and any FUTURE flat_obs change
+    // carries a source date_created above it (the same fixpoint argument
+    // flat_obs's own floored watermark rests on). Taking it from flat_obs's
+    // plan replaces a full-column max scan over the flat_obs table — an
+    // O(table files) constant paid every tick. tableFallback-free: the
+    // summary table carries no max_date_created, so a log miss resolves to
+    // Epoch — a full requeue, the safe recovery — instead of crashing on a
+    // missing column (a fallback on some OTHER table's max would overshoot
+    // and silently skip this tick's delta).
+    val sumPlan = plan(flatVisitSummaryBounds, None,
+      Horizons(foPlan.next.created, obsVoided, encChanged))
+
+    // prev-tick watermarks: the summary stage may bound its retraction
+    // scan to this tick's flat_obs queue only if the last summary run saw
+    // everything up to the PREVIOUS flat_obs run (crash between the two ⇒
+    // fall back to the full anti-join recovery scan)
+    val summaryAligned = !Watermark.resolve(log0, flatVisitSummaryVersion)
+      .before(Watermark.resolve(log0, flatObsVersion))
 
     // ---- purged-persons log (bucketed mode) ----
     // The voided-person purge must only queue persons whose rows are
@@ -364,17 +417,33 @@ class Pipeline(
     // rematerialize — rebuilds of a still-voided person emit nothing).
     // purge set = voided persons not yet in the log: O(persons voided),
     // independent of table size.
-    // run log read ONCE at tick start (also signs the consistency check
-    // below): a stage's own version gains no entries until its own
-    // append, so this snapshot resolves every stage's watermark
-    val log0 = Watermark.readLog(spark, logPath)
-
     lastTickProbed = false
+    lastTickShortCircuited = false
     val purgedLog = if (bucketed) readFlat("purged_persons") else None
+    val voidedPersons = person.filter(col("voided") === 1).select("person_id")
+    val fresh = purgedLog.map(voidedPersons.join(_, Seq("person_id"), "left_anti"))
+    // the marker proves no tick died mid-flight since the last complete one
+    // (see the markerPath scaladoc)
+    val markerIntact =
+      purgedLog.isDefined && readMarker().contains(Watermark.signature(log0))
+
+    val plans = Seq(foPlan, ordPlan, labPlan, sumPlan)
+    if (markerIntact && summaryAligned && plans.forall(_.quiet) &&
+        Seq("flat_obs", "flat_orders", "flat_lab_obs", "flat_visit_summary",
+          "flat_latest_hiv_summary").forall(bucketedExists) &&
+        fresh.get.isEmpty) {
+      // every stage queue is empty: no source row is above its bounds, no
+      // purge is due, and with the summary aligned its retraction scan is
+      // bounded by flat_obs's (empty) queue
+      val appended = Watermark.appendRun(spark, logPath, plans.flatMap(_.rows), 0)
+      writeMarker(Watermark.signature(log0 ++ appended))
+      lastTickShortCircuited = true
+      return
+    }
+
     val purgeSet =
       if (!bucketed) None
       else phase("purge probe") {
-        val voidedPersons = person.filter(col("voided") === 1).select("person_id")
         Some((purgedLog match {
           case Some(log) =>
             // The log is written in a SEPARATE commit after the stage
@@ -388,14 +457,12 @@ class Pipeline(
             // when the consistency marker says a crash window is open
             // (see the marker scaladoc): on the steady path the probe,
             // not the purge itself, was the tick's largest unlogged cost.
-            val fresh = voidedPersons.join(log, Seq("person_id"), "left_anti")
-            val probeNeeded = !readMarker().contains(logSignature(log0))
-            lastTickProbed = probeNeeded
+            lastTickProbed = !markerIntact
             val claimed =
-              if (!probeNeeded) fresh.limit(0)
+              if (markerIntact) fresh.get.limit(0)
               else voidedPersons.join(log, Seq("person_id"), "left_semi")
             val claimedBuckets =
-              if (!probeNeeded) Set.empty[Int]
+              if (markerIntact) Set.empty[Int]
               else BucketedSink.collectBuckets(claimed, sinkBuckets)
             val stale =
               if (claimedBuckets.isEmpty) claimed.limit(0)
@@ -409,7 +476,7 @@ class Pipeline(
                 .reduceOption(_ union _)
                 .map(_.distinct())
                 .getOrElse(claimed.limit(0))
-            fresh.union(stale)
+            fresh.get.union(stale)
           case None => voidedPersons
           // localCheckpoint for the same reason as bucketedDelta's queue:
           // the stale probe reads the flat tables, so the first stage
@@ -419,15 +486,7 @@ class Pipeline(
         }).localCheckpoint())
       }
     val tickQueues = scala.collection.mutable.ListBuffer.empty[DataFrame]
-
-    // prev-tick watermarks, read BEFORE any stage appends to the log:
-    // the summary stage may bound its retraction scan to this tick's
-    // flat_obs queue only if the last summary run saw everything up to
-    // the PREVIOUS flat_obs run (crash between the two ⇒ fall back to
-    // the full anti-join recovery scan)
-    val prevFlatObsWm = Watermark.resolve(log0, flatObsVersion)
-    val prevSummaryWm = Watermark.resolve(log0, flatVisitSummaryVersion)
-    val summaryAligned = !prevSummaryWm.before(prevFlatObsWm)
+    val appended = scala.collection.mutable.ListBuffer.empty[Watermark.RunRow]
 
     // per-stage shared delta state (queue computed once per stage, its
     // buckets shared between the pruned merge read and the write)
@@ -449,8 +508,8 @@ class Pipeline(
     // only to narrow the purge in snapshot mode), and the merge reads the
     // bucket-pruned frame. At 200k persons / 40k buckets those dead
     // listings were a multi-second constant per stage, every tick.
-    phase("stage flat_obs")(
-    runStage(log0, flatObsVersion, "flat_obs", encObsMax, wm =>
+    phase("stage flat_obs")(appended ++=
+    runStage(foPlan, "flat_obs", wm =>
       if (bucketed && bucketedExists("flat_obs")) {
         val d = noteDelta(bucketedDelta("flat_obs",
           FlatObs.touchedPersons(obs, encounter, person, wm, None,
@@ -466,9 +525,8 @@ class Pipeline(
       bucketedWrite("flat_obs", () => delta)))
     endStage()
 
-    phase("stage flat_orders")(
-    runStage(log0, flatOrdersVersion, "flat_orders",
-      maxTs(Seq(ordD.getOrElse(orders) -> "date_created")), wm =>
+    phase("stage flat_orders")(appended ++=
+    runStage(ordPlan, "flat_orders", wm =>
         if (bucketed && bucketedExists("flat_orders")) {
           val d = noteDelta(bucketedDelta("flat_orders",
             FlatOrders.touchedPersons(orders, person, wm, None,
@@ -483,13 +541,8 @@ class Pipeline(
       bucketedWrite("flat_orders", () => delta)))
     endStage()
 
-    // lab watermark from the obs actually visible to the lab delta, NOT
-    // encObsMax: advancing on the strength of an encounter row alone
-    // would widen the window where a lab obs committing just after the
-    // snapshot is permanently skipped
-    phase("stage flat_lab_obs")(
-    runStage(log0, flatLabObsVersion, "flat_lab_obs",
-      maxTs(Seq(obsD.getOrElse(obs) -> "date_created")), wm =>
+    phase("stage flat_lab_obs")(appended ++=
+    runStage(labPlan, "flat_lab_obs", wm =>
         if (bucketed && bucketedExists("flat_lab_obs")) {
           val d = noteDelta(bucketedDelta("flat_lab_obs",
             FlatLabObs.touchedPersons(obs, person, wm, None,
@@ -504,18 +557,8 @@ class Pipeline(
       bucketedWrite("flat_lab_obs", () => delta)))
     endStage()
 
-    // Summary new-watermark: the flat_obs stage just recorded max(source
-    // date_created seen) as ITS watermark — an upper bound on every
-    // flat_obs row's max_date_created, and any FUTURE flat_obs change
-    // carries a source date_created above it (the same fixpoint argument
-    // flat_obs's own floored watermark rests on). Resolving it from the
-    // log (one tiny parquet read, post-append) replaces the previous
-    // full-column max scan over the flat_obs table — an O(table files)
-    // constant paid every tick.
-    phase("stage flat_visit_summary")(
-    runStage(log0, flatVisitSummaryVersion, "flat_visit_summary",
-      Watermark.resolve(Watermark.readLog(spark, logPath), flatObsVersion),
-      wm => {
+    phase("stage flat_visit_summary")(appended ++=
+    runStage(sumPlan, "flat_visit_summary", wm => {
         // full-table reads are deferred into the branches that use them —
         // constructing one builds its file index immediately, and the
         // bucketed aligned path needs none of them
@@ -563,8 +606,7 @@ class Pipeline(
           case None => FlatVisitSummary.build(fo, ford, person)
         }
       },
-      bucketedWrite("flat_visit_summary", () => delta),
-      tableFallback = false))
+      bucketedWrite("flat_visit_summary", () => delta)))
     endStage()
 
     // ---- latest-summary maintenance ----
@@ -592,15 +634,19 @@ class Pipeline(
         "flat_latest_hiv_summary"))
 
     // ---- purged-persons log update ----
-    // log' = (log \ every person queued this tick) ∪ purged-this-tick:
-    // a queued person's rows may have rematerialized (they were unvoided
-    // when some group rebuilt), so their log entry is no longer proof of
-    // absence; re-adding the tick's purge set is exact — those persons'
-    // rows were removed by every stage this tick.
+    // log' = (log \ every unvoided person queued this tick) ∪
+    // purged-this-tick: an unvoided queued person's rows may have
+    // rematerialized when some group rebuilt, so their log entry is no
+    // longer proof of absence. A queued person who is still voided keeps
+    // theirs: every stage drops voided persons' rows, so the rebuild left
+    // them absent (dropping the entry made the next tick purge them again
+    // and rewrite their buckets unchanged). Re-adding the tick's purge
+    // set is exact — those persons' rows were removed by every stage.
     phase("purged-log update")(
     purgeSet.foreach { p =>
       val queued = tickQueues.map(_.select("person_id"))
-        .reduceOption(_ union _).map(_.distinct())
+        .reduceOption(_ union _)
+        .map(_.distinct().join(voidedPersons, Seq("person_id"), "left_anti"))
       val kept = (purgedLog, queued) match {
         case (Some(log), Some(q)) => log.join(q, Seq("person_id"), "left_anti")
         case (Some(log), None) => log
@@ -610,9 +656,41 @@ class Pipeline(
       // the log update committed with every stage append visible →
       // record the log signature so the next tick can skip the
       // crash-recovery presence probe (see markerPath scaladoc)
-      writeMarker(logSignature(Watermark.readLog(spark, logPath)))
+      writeMarker(Watermark.signature(log0 ++ appended))
       p.unpersist()
     })
     tickQueues.foreach(_.unpersist())
+  }
+}
+
+object Pipeline {
+
+  /** Where a stage's three bounds ([[Horizons]]) live in `flat_log`: the
+    * creation watermark under the table version (the reference's row),
+    * each modification horizon its `> wm` predicates read under
+    * [[Watermark.horizonRow]]. The log keeps the reference's schema
+    * (flat_log_v1.0.sql:2). */
+  private final case class StageBounds(
+      version: String, voided: String, changed: Option[String]) {
+
+    /** The bounds a run starts from, given its resolved creation
+      * watermark. */
+    def start(log: Seq[Watermark.RunRow], created: Timestamp): Horizons = Horizons(created,
+      Watermark.horizon(log, version, voided, created),
+      changed.fold(created)(Watermark.horizon(log, version, _, created)))
+
+    def rows(h: Horizons): Seq[(String, Timestamp)] =
+      Seq(version -> h.created, Watermark.horizonRow(version, voided) -> h.voided) ++
+        changed.map(Watermark.horizonRow(version, _) -> h.changed)
+  }
+
+  /** One stage's bounds this tick: `start` from the run log, `next` the
+    * captured maxima floored at `start` — so a recorded bound never
+    * REGRESSES (a feed with no new rows has Epoch maxima, and recording
+    * that would turn the next tick into a full requeue). */
+  private final case class StagePlan(bounds: StageBounds, start: Horizons, next: Horizons) {
+    /** Nothing this stage's predicates read is above its bounds. */
+    def quiet: Boolean = next == start
+    def rows: Seq[(String, Timestamp)] = bounds.rows(next)
   }
 }

@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileContext, Options, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 
@@ -398,16 +398,16 @@ object BucketedSink {
     val c = spark.sparkContext.hadoopConfiguration
     val manifest = readManifest(c, path).getOrElse(throw new IllegalStateException(
       s"no manifest at $path"))
-    // a table whose every row was deleted leaves no parquet to carry a
-    // schema — not representable in this layout (nor in plain parquet)
-    require(manifest.nonEmpty, s"bucketed table at $path is empty")
-    val align: DataFrame => DataFrame =
-      readSchema(c, path).fold(identity[DataFrame] _)(s => alignTo(s, _))
-    manifest.groupBy(_._2).toSeq.sortBy(_._1).map { case (epoch, buckets) =>
-      val base = new Path(path, epoch).toString
-      align(spark.read.option("basePath", base)
-        .parquet(buckets.keys.toSeq.sorted.map(b => s"$base/__bucket=$b"): _*))
-    }.reduce(_ unionByName _).drop("__bucket")
+    if (manifest.isEmpty) emptyTable(spark, path)
+    else {
+      val align: DataFrame => DataFrame =
+        readSchema(c, path).fold(identity[DataFrame] _)(s => alignTo(s, _))
+      manifest.groupBy(_._2).toSeq.sortBy(_._1).map { case (epoch, buckets) =>
+        val base = new Path(path, epoch).toString
+        align(spark.read.option("basePath", base)
+          .parquet(buckets.keys.toSeq.sorted.map(b => s"$base/__bucket=$b"): _*))
+      }.reduce(_ unionByName _).drop("__bucket")
+    }
   }
 
   /** Read ONLY the given buckets of the live table — the file-level prune
@@ -420,8 +420,16 @@ object BucketedSink {
     val c = spark.sparkContext.hadoopConfiguration
     val manifest = readManifest(c, path).getOrElse(throw new IllegalStateException(
       s"no manifest at $path"))
-    require(manifest.nonEmpty, s"bucketed table at $path is empty")
     readFromManifest(spark, path, manifest, buckets)
+  }
+
+  /** A table whose every row was deleted has an empty manifest and no
+    * parquet file to carry a schema: it reads as an empty frame of the
+    * recorded `_SCHEMA`. A legacy table without the sidecar has none. */
+  private def emptyTable(spark: SparkSession, path: String): DataFrame = {
+    val schema = readSchema(spark.sparkContext.hadoopConfiguration, path).getOrElse(
+      throw new IllegalArgumentException(s"bucketed table at $path is empty and records no schema"))
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
   }
 
   /** The bucket-selective read against an ALREADY-RESOLVED manifest —
@@ -434,7 +442,8 @@ object BucketedSink {
     val align: DataFrame => DataFrame =
       readSchema(spark.sparkContext.hadoopConfiguration, path)
         .fold(identity[DataFrame] _)(s => alignTo(s, _))
-    if (sel.isEmpty) {
+    if (manifest.isEmpty) emptyTable(spark, path)
+    else if (sel.isEmpty) {
       // empty selection needs only the SCHEMA — take it from one bucket
       // directory instead of read(path), which lists every bucket dir in
       // the table to build a file index that limit(0) then discards (an

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import graft.etl.{FlatLabObs, FlatLatestHivSummary, FlatObs, FlatOrders, FlatVisitSummary, Pipeline, Schemas}
+import graft.etl.{FlatLabObs, FlatLatestHivSummary, FlatObs, FlatOrders, FlatVisitSummary, Horizons, Pipeline, Schemas}
 import graft.operators.LatestRow
 
 /** Streaming mode for the ETL: the reference's cron-style `CALL` loop IS
@@ -42,7 +42,7 @@ object IncrementalEtlStream {
     * wm).
     */
   /** The batch's earliest arrival instant (voided rows count at their
-    * void time), read as a TIMESTAMP — per Pipeline.maxTs's warning, a
+    * void time), read as a TIMESTAMP — per Pipeline.maxima's warning, a
     * string round-trip would re-parse the session-tz rendering in the
     * driver JVM's default zone and silently shift the watermark. None
     * on an empty batch. */
@@ -58,13 +58,15 @@ object IncrementalEtlStream {
       snapshot: DataFrame,
       encounter: DataFrame,
       person: DataFrame,
-      pipeline: Pipeline): (DataFrame, Option[java.sql.Timestamp]) =
+      pipeline: Pipeline): (DataFrame, Option[Horizons]) =
     pipeline.readFlat("flat_obs") match {
       case Some(existing) =>
         val minInstant = batchMinInstant(batch)
         if (minInstant.isEmpty) (existing, None)
         else {
-          val wm = new java.sql.Timestamp(minInstant.get.getTime - 1)
+          // the batch watermark bounds every predicate: creation and
+          // both modification horizons alike
+          val wm = Horizons.at(new java.sql.Timestamp(minInstant.get.getTime - 1))
           // the BATCH is the change feed (SourceDeltas contract): every
           // version arriving since the last watermark is in it, so the
           // delta key scans seed from the batch instead of re-scanning
@@ -414,7 +416,7 @@ object IncrementalEtlStream {
         collect_set(graft.operators.BucketedSink.bucketOf(
           col("person_id"), pipeline.sinkBuckets)).as("buckets")).first())
       if (statsRow.isNullAt(0)) return // empty batch: nothing can change
-      val wm = new java.sql.Timestamp(statsRow.getTimestamp(0).getTime - 1)
+      val wm = Horizons.at(new java.sql.Timestamp(statsRow.getTimestamp(0).getTime - 1))
       val batchBuckets = statsRow.getSeq[Int](1).toSet
 
       // Register the batch with the person-bucketed version log BEFORE

@@ -136,13 +136,16 @@ object PipelineBench {
       // per-stage attribution from the run log (seconds_to_complete, 1s
       // resolution): which stage a mode's win or loss actually lives in —
       // the whole-tick number alone can't distinguish delta-scan savings
-      // from shared merge/write cost
+      // from shared merge/write cost. Each stage's newest row under its
+      // version: the log also holds the stages' horizon rows.
       def stageSecs(): Map[String, Long] = {
-        import spark.implicits._
-        graft.operators.Watermark.readLog(spark, root.resolve("flat_log").toString)
-          .orderBy(col("date_created").desc).limit(4)
-          .select(col("table_name"), col("seconds_to_complete").cast("long"))
-          .as[(String, Long)].collect().toMap
+        val log = graft.operators.Watermark.collectLog(
+          spark, root.resolve("flat_log").toString)
+        Seq(pipe.flatObsVersion, pipe.flatOrdersVersion, pipe.flatLabObsVersion,
+          pipe.flatVisitSummaryVersion).flatMap { v =>
+          log.filter(_.tableName == v).maxByOption(_.dateCreated.getTime)
+            .map(r => v -> r.seconds.toLong)
+        }.toMap
       }
 
       val s3 = System.nanoTime()
@@ -199,9 +202,9 @@ object PipelineBench {
         go(df.queryExecution.executedPlan).toDouble
       }
       val fullQueue = graft.etl.FlatObs.touchedPersons(
-        obsP, encP, person, t2, Some(existingFo))
+        obsP, encP, person, graft.etl.Horizons.at(t2), Some(existingFo))
       val feedQueue = graft.etl.FlatObs.touchedPersons(obsP, encP, person,
-        t2, None,
+        graft.etl.Horizons.at(t2), None,
         Some(ChangeFeed.readSince(spark, s"$srcDir/feed/obs", t1)),
         Some(ChangeFeed.readSince(spark, s"$srcDir/feed/encounter", t1)),
         Some(purgeFromLog))

@@ -128,8 +128,7 @@ class ChangeFeedSpec extends SparkSuite {
       def person(p2Voided: Int) = spark.createDataFrame(sc.parallelize(Seq(
         Row(1, "u1", 0), Row(2, "u2", p2Voided)), 1), Schemas.person)
 
-      // a lab-panel row (concept 856) keeps flat_lab_obs non-empty — the
-      // bucketed sink refuses to read back an empty table
+      // a lab-panel row (concept 856) keeps flat_lab_obs non-empty
       def labRow(id: Int, p: Int, e: Int, created: String): Row =
         Row(id, p, Integer.valueOf(e), 856, ts("2015-01-01 09:00:00"),
           null, java.lang.Double.valueOf(1234.0), null, null, null, null,
@@ -158,6 +157,21 @@ class ChangeFeedSpec extends SparkSuite {
         "an already-purged person must stay in the log untouched")
       assert(!pipe.lastTickProbed,
         "steady tick under an intact consistency marker must skip the probe")
+      assert(pipe.lastTickShortCircuited, "nothing new and nobody left to purge")
+
+      // a still-voided P2 gains an obs: the stages queue and rebuild them
+      // to nothing, so their log entry stays proof of absence and the
+      // next tick has nobody to purge
+      val obs0b = mkObs(Seq(
+        obsRow(1, 1, 100, "2015-01-01 12:00:00"),
+        obsRow(2, 2, 101, "2015-01-01 12:00:00"),
+        labRow(9, 1, 100, "2015-01-01 12:00:00"),
+        obsRow(5, 2, 101, "2015-01-05 12:00:00")))
+      pipe.tick(obs0b, encounter, orders, person(1))
+      assert(p2Rows == 0 && logPersons == Set(2),
+        "a queued person who is still voided must keep their log entry")
+      pipe.tick(obs0b, encounter, orders, person(1))
+      assert(pipe.lastTickShortCircuited)
 
       // unvoid P2 WITH a new obs: the delta queues them, rows come back,
       // and the log entry (no longer proof of absence) is dropped
@@ -168,6 +182,8 @@ class ChangeFeedSpec extends SparkSuite {
         obsRow(3, 2, 101, "2015-01-10 12:00:00")))
       pipe.tick(obs1, encounter, orders, person(0))
       assert(p2Rows == 1 && logPersons.isEmpty)
+      assert(!pipe.lastTickProbed,
+        "the marker a short-circuited tick signs in the driver must match the re-read log")
 
       pipe.tick(obs1, encounter, orders, person(1)) // re-void -> purge again
       assert(p2Rows == 0 && logPersons == Set(2))
@@ -195,6 +211,48 @@ class ChangeFeedSpec extends SparkSuite {
       assert(p2Rows == 0,
         "stale log entry shielded a re-voided person from the purge")
       assert(logPersons == Set(2))
+    }
+  }
+
+  test("no-change short-circuit: its marker matches the re-read log; a dropped marker reopens the crash window") {
+    withBuckets(8) {
+      // 300 persons: enough for the fixture's delta-window changes
+      val src = BenchFixtures.sources(spark, 300)
+      def views(day: Int) = {
+        val t = BenchFixtures.asOf(day)
+        (BenchFixtures.obsAsOf(src("obs"), t).cache(),
+          BenchFixtures.encAsOf(src("encounter"), t).cache(),
+          BenchFixtures.ordersAsOf(src("orders"), t).cache())
+      }
+      val person = src("person").cache()
+      val (obs1, enc1, ord1) = views(60)
+      val (obs2, enc2, ord2) = views(90)
+      val work = java.nio.file.Files.createTempDirectory("graft-quiet-marker").toString
+      val pipe = new Pipeline(spark, work)
+      def marker: String = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(work, "purged_persons", "_CONSISTENT")), "UTF-8")
+      def signature: String =
+        graft.operators.Watermark.signature(
+          graft.operators.Watermark.collectLog(spark, s"$work/flat_log"))
+
+      pipe.tick(obs1, enc1, ord1, person)
+      pipe.tick(obs1, enc1, ord1, person)
+      assert(pipe.lastTickShortCircuited)
+      assert(marker == signature, "driver-computed signature differs from the re-read log's")
+
+      pipe.tick(obs2, enc2, ord2, person) // a delta after the short-circuit
+      assert(!pipe.lastTickShortCircuited && !pipe.lastTickProbed)
+      assert(TickChecks.diverged(pipe, obs2, enc2, ord2, person).isEmpty)
+
+      // a crash between a tick's log append and its marker write
+      pipe.dropMarker()
+      pipe.tick(obs2, enc2, ord2, person)
+      assert(!pipe.lastTickShortCircuited, "an open crash window must not short-circuit")
+      assert(pipe.lastTickProbed, "an open crash window must run the presence probe")
+      assert(TickChecks.diverged(pipe, obs2, enc2, ord2, person).isEmpty)
+      pipe.tick(obs2, enc2, ord2, person)
+      assert(pipe.lastTickShortCircuited, "the healed root is quiet again")
+      Seq(obs1, enc1, ord1, obs2, enc2, ord2, person).foreach(_.unpersist())
     }
   }
 }

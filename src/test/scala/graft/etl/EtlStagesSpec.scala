@@ -79,7 +79,7 @@ class EtlStagesSpec extends SparkSuite {
     val wm = ts("2015-01-20 00:00:00")
     val before = FlatObs.build(obsAt(null), enc, people)
     val after = FlatObs.incremental(
-      before, obsAt(ts("2015-01-25 00:00:00")), enc, people, wm)
+      before, obsAt(ts("2015-01-25 00:00:00")), enc, people, Horizons.at(wm))
     val got = after.collect()(0)
     assert(got.getAs[String]("obs") == "!!1836=1065!!") // 6743 retracted
     // and equals a from-scratch rebuild on the post-void source

@@ -53,7 +53,7 @@ class IncrementalEquivalenceSpec extends SparkSuite {
     var flat = FlatObs.build(obsAsOf(obs, cuts.head), encAsOf(enc, cuts.head), person)
     cuts.sliding(2).foreach { case Seq(prev, next) =>
       flat = FlatObs.incremental(
-        flat, obsAsOf(obs, next), encAsOf(enc, next), person, prev)
+        flat, obsAsOf(obs, next), encAsOf(enc, next), person, Horizons.at(prev))
     }
     val fullObs = FlatObs.build(obsAsOf(obs, cuts.last), encAsOf(enc, cuts.last), person)
     assert(sortedRows(flat) == sortedRows(fullObs))
@@ -64,7 +64,7 @@ class IncrementalEquivalenceSpec extends SparkSuite {
     var fo = FlatOrders.build(ordersAsOf(orders, cuts.head), encAsOf(enc, cuts.head), person)
     cuts.sliding(2).foreach { case Seq(prev, next) =>
       fo = FlatOrders.incremental(
-        fo, ordersAsOf(orders, next), encAsOf(enc, next), person, prev)
+        fo, ordersAsOf(orders, next), encAsOf(enc, next), person, Horizons.at(prev))
     }
     val fullOrders =
       FlatOrders.build(ordersAsOf(orders, cuts.last), encAsOf(enc, cuts.last), person)
@@ -73,7 +73,7 @@ class IncrementalEquivalenceSpec extends SparkSuite {
     // flat_lab_obs
     var fl = FlatLabObs.build(obsAsOf(obs, cuts.head), person)
     cuts.sliding(2).foreach { case Seq(prev, next) =>
-      fl = FlatLabObs.incremental(fl, obsAsOf(obs, next), person, prev)
+      fl = FlatLabObs.incremental(fl, obsAsOf(obs, next), person, Horizons.at(prev))
     }
     val fullLabs = FlatLabObs.build(obsAsOf(obs, cuts.last), person)
     assert(sortedRows(fl) == sortedRows(fullLabs))
@@ -97,7 +97,7 @@ class IncrementalEquivalenceSpec extends SparkSuite {
       val fo2 = FlatObs.build(obsAsOf(obs, t2), encAsOf(enc, t2), person)
       val ford2 = FlatOrders.build(ordersAsOf(orders, t2), encAsOf(enc, t2), person)
       val vs2inc = FlatVisitSummary.incremental(
-        vs1, fo2, ford2, obsAsOf(obs, t2), encAsOf(enc, t2), person, t1)
+        vs1, fo2, ford2, obsAsOf(obs, t2), encAsOf(enc, t2), person, Horizons.at(t1))
       val vs2full = FlatVisitSummary.build(fo2, ford2, person)
       assert(sortedRows(vs2inc) == sortedRows(vs2full), s"seed $seed")
     }
@@ -140,7 +140,7 @@ class IncrementalEquivalenceSpec extends SparkSuite {
 
     val fo2 = FlatObs.build(obsAsOf(obs, t2), encAsOf(enc, t2), person)
     val vs2inc = FlatVisitSummary.incremental(
-      vs1, fo2, ford, obsAsOf(obs, t2), encAsOf(enc, t2), person, t1)
+      vs1, fo2, ford, obsAsOf(obs, t2), encAsOf(enc, t2), person, Horizons.at(t1))
     val vs2full = FlatVisitSummary.build(fo2, ford, person)
     assert(sortedRows(vs2inc) == sortedRows(vs2full))
     assert(vs2inc.filter(col("person_id") === 1 && col("pregnant").isNotNull).count() == 0)
@@ -177,7 +177,7 @@ class IncrementalEquivalenceSpec extends SparkSuite {
 
     val flat1 = FlatObs.build(obs, enc1, person)
     assert(sortedRows(flat1.select("encounter_id")).toString.contains("100"))
-    val inc = FlatObs.incremental(flat1, obs, enc2, person, t1)
+    val inc = FlatObs.incremental(flat1, obs, enc2, person, Horizons.at(t1))
     val full = FlatObs.build(obs, enc2, person)
     assert(sortedRows(inc) == sortedRows(full))
     assert(inc.filter(col("encounter_id") === 100).count() == 0) // retracted
@@ -254,7 +254,31 @@ class IncrementalEquivalenceSpec extends SparkSuite {
     pipe.tick(fx("obs"), fx("encounter"), fx("orders"), fx("person"))
     assert(sortedRows(pipe.readFlat("flat_visit_summary").get) == first)
     assert(sortedRows(pipe.readFlat("flat_latest_hiv_summary").get) == latest1)
-    // run-log has one row per stage per tick
-    assert(pipe.readFlat("flat_log").isDefined || true)
+    assertTwoRunsPerStage(pipe, dir)
+  }
+
+  /** The run log holds exactly two rows under each stage version. */
+  private def assertTwoRunsPerStage(pipe: Pipeline, dir: String): Unit = {
+    val names = graft.operators.Watermark.readLog(spark, s"$dir/flat_log")
+      .collect().map(_.getAs[String]("table_name")).toSeq
+    Seq(pipe.flatObsVersion, pipe.flatOrdersVersion, pipe.flatLabObsVersion,
+      pipe.flatVisitSummaryVersion).foreach { v =>
+      assert(names.count(_ == v) == 2, s"$v: ${names.sorted}")
+    }
+  }
+
+  test("bucketed pipeline tick twice: the second tick short-circuits and writes no table file") {
+    val fx = OpenMrsFixture.generate(spark, nPersons = 15, seed = 3L)
+    val dir = java.nio.file.Files.createTempDirectory("graft-pipe-b").toString
+    val pipe = new Pipeline(spark, dir, Some(8))
+    pipe.tick(fx("obs"), fx("encounter"), fx("orders"), fx("person"))
+    assert(!pipe.lastTickShortCircuited, "a first build has work to do")
+    val files = TickChecks.dataFiles(dir)
+    val before = TickChecks.Tables.map(t => t -> sortedRows(pipe.readFlat(t).get))
+    pipe.tick(fx("obs"), fx("encounter"), fx("orders"), fx("person"))
+    assert(pipe.lastTickShortCircuited)
+    assert(TickChecks.dataFiles(dir) == files)
+    assert(TickChecks.Tables.map(t => t -> sortedRows(pipe.readFlat(t).get)) == before)
+    assertTwoRunsPerStage(pipe, dir)
   }
 }

@@ -4,7 +4,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.SparkSuite
-import graft.etl.{FlatObs, OpenMrsFixture}
+import graft.etl.{FlatObs, Horizons, OpenMrsFixture}
 
 /** The bucket-overwrite sink on the incremental-equivalence timeline:
   * a tick's write must touch only the buckets of changed persons (file
@@ -56,8 +56,8 @@ class BucketedSinkSpec extends SparkSuite {
 
     // tick 2: incremental at t2, bucket-overwrite with the touched-person set
     val merged = FlatObs.incremental(
-      BucketedSink.read(spark, path), obsAsOf(obs, t2), encAsOf(enc, t2), person, t1)
-    val touched = FlatObs.touchedPersons(obsAsOf(obs, t2), encAsOf(enc, t2), person, t1)
+      BucketedSink.read(spark, path), obsAsOf(obs, t2), encAsOf(enc, t2), person, Horizons.at(t1))
+    val touched = FlatObs.touchedPersons(obsAsOf(obs, t2), encAsOf(enc, t2), person, Horizons.at(t1))
     BucketedSink.overwriteChanged(merged, path, "person_id", nBuckets, touched)
     val after = bucketFiles(path)
 
@@ -78,6 +78,23 @@ class BucketedSinkSpec extends SparkSuite {
     untouched.foreach { k => assert(before(k) == after(k), s"$k was rewritten") }
   }
 
+  test("a table whose every row is deleted reads as an empty frame of its schema and writes on") {
+    import spark.implicits._
+    val path = java.nio.file.Files.createTempDirectory("graft-bucketed").toString + "/t"
+    val rows = Seq((1, "a"), (2, "b")).toDF("person_id", "v")
+    BucketedSink.writeFull(rows, path, "person_id", 4)
+    val all = BucketedSink.collectBuckets(rows.select("person_id"), 4)
+    BucketedSink.overwriteChanged(rows.limit(0), path, "person_id", 4, all)
+    assert(manifest(path).isEmpty)
+    Seq(BucketedSink.read(spark, path), BucketedSink.readBuckets(spark, path, all))
+      .foreach { df =>
+        assert(df.schema == rows.schema && df.isEmpty)
+      }
+    BucketedSink.overwriteChanged(Seq((3, "c")).toDF("person_id", "v"), path, "person_id", 4,
+      BucketedSink.collectBuckets(Seq(3).toDF("person_id"), 4))
+    assert(BucketedSink.read(spark, path).as[(Int, String)].collect().toSeq == Seq(3 -> "c"))
+  }
+
   test("manifest commit is atomic: an in-flight reader resolves old-complete, never mixed") {
     val fx = OpenMrsFixture.generate(spark, nPersons = 40, seed = 31L)
     val (obs, enc, person) = (fx("obs").cache(), fx("encounter").cache(), fx("person"))
@@ -95,9 +112,10 @@ class BucketedSinkSpec extends SparkSuite {
     val inFlight = BucketedSink.read(spark, path)
 
     val merged = FlatObs.incremental(
-      BucketedSink.read(spark, path), obsAsOf(obs, t2), encAsOf(enc, t2), person, t1)
+      BucketedSink.read(spark, path), obsAsOf(obs, t2), encAsOf(enc, t2), person,
+      Horizons.at(t1))
     BucketedSink.overwriteChanged(merged, path, "person_id", nBuckets,
-      FlatObs.touchedPersons(obsAsOf(obs, t2), encAsOf(enc, t2), person, t1))
+      FlatObs.touchedPersons(obsAsOf(obs, t2), encAsOf(enc, t2), person, Horizons.at(t1)))
 
     // after the swap: a fresh reader sees the new table, complete
     val expected2 = FlatObs.build(obsAsOf(obs, t2), encAsOf(enc, t2), person)

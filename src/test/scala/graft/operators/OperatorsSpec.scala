@@ -27,12 +27,42 @@ class OperatorsSpec extends SparkSuite {
     import spark.implicits._
     val t1 = Timestamp.valueOf("2020-05-05 00:00:00")
     val t2 = Timestamp.valueOf("2021-06-06 00:00:00")
-    val log = Seq((t1, t1, "v1", 5.toShort), (t2, t2, "v1", 5.toShort))
-      .toDF("date_created", "date_updated", "table_name", "seconds_to_complete")
+    val path = java.nio.file.Files.createTempDirectory("graft-wm").resolve("flat_log").toString
+    Watermark.appendRun(spark, path, Seq("v1" -> t1), 5)
+    Watermark.appendRun(spark, path, Seq("v1" -> t2), 5)
+    val log = Watermark.collectLog(spark, path)
+    assert(log.map(_.tableName) == Seq("v1", "v1"))
     assert(Watermark.resolve(log, "v1") == t2)
     val flat = Seq(Tuple1(t1)).toDF("max_date_created")
     assert(Watermark.resolve(log, "v2", Some(flat)) == t1)
     assert(Watermark.resolve(log, "v2") == Watermark.Epoch)
+    // the fallback is by-name: a log hit never evaluates it
+    assert(Watermark.resolve(log, "v1", sys.error("fallback evaluated")) == t2)
+  }
+
+  test("Watermark.horizon: the recorded horizon row, else the creation watermark") {
+    val t1 = Timestamp.valueOf("2020-05-05 00:00:00")
+    val t2 = Timestamp.valueOf("2021-06-06 00:00:00")
+    val t3 = Timestamp.valueOf("2022-07-07 00:00:00")
+    val path = java.nio.file.Files.createTempDirectory("graft-wm").resolve("flat_log").toString
+    // a log as written before horizons existed: only the stage row
+    Watermark.appendRun(spark, path, Seq("v1" -> t1), 0)
+    val before = Watermark.collectLog(spark, path)
+    assert(Watermark.horizon(before, "v1", "obs.date_voided", t1) == t1)
+    // one run file holds the stage row and its horizon row
+    val run = Watermark.appendRun(spark, path,
+      Seq("v1" -> t2, Watermark.horizonRow("v1", "obs.date_voided") -> t3), 0)
+    val after = Watermark.collectLog(spark, path)
+    assert(after.toSet == (before ++ run).toSet)
+    assert(Watermark.horizonRow("v1", "obs.date_voided") == "v1#obs.date_voided")
+    assert(Watermark.resolve(after, "v1") == t2)
+    assert(Watermark.horizon(after, "v1", "obs.date_voided", t2) == t3)
+    // another column of the same stage has no row: creation watermark
+    assert(Watermark.horizon(after, "v1", "encounter.date_changed", t2) == t2)
+    // the driver-side signature equals the re-read log's
+    assert(Watermark.signature(before ++ run) == Watermark.signature(after))
+    assert(new java.io.File(path).listFiles().count(_.getName.endsWith(".parquet")) == 2,
+      "a run's rows land in one file")
   }
 
   test("LatestRow keeps one deterministic row per key") {

@@ -78,7 +78,7 @@ class JdbcSourceSpec extends SparkSuite {
   }
 
   test("FlatObs build + incremental over real JDBC rows == in-memory source") {
-    import graft.etl.{FlatObs, OpenMrsFixture}
+    import graft.etl.{FlatObs, Horizons, OpenMrsFixture}
     import java.sql.Timestamp
     val dbUrl = "jdbc:derby:memory:graftJdbcE2e;create=true"
     // real OpenMRS-shaped fixture, loaded through REAL JDBC writes (Spark's
@@ -118,7 +118,7 @@ class JdbcSourceSpec extends SparkSuite {
         person: org.apache.spark.sql.DataFrame): Seq[String] = {
       val base = FlatObs.build(obsAsOf(obs, cut1), encAsOf(enc, cut1), person)
       val ticked = FlatObs.incremental(
-        base, obsAsOf(obs, cut2), encAsOf(enc, cut2), person, cut1)
+        base, obsAsOf(obs, cut2), encAsOf(enc, cut2), person, Horizons.at(cut1))
       ticked.orderBy(ticked.columns.map(col).toIndexedSeq: _*)
         .collect().map(_.toString).toSeq
     }
