@@ -104,13 +104,12 @@ object FlatLabObs {
       obs: DataFrame,
       person: DataFrame,
       bounds: Horizons,
-      existing: Option[DataFrame] = None,
       obsDelta: Option[DataFrame] = None,
       purgeSet: Option[DataFrame] = None): DataFrame = {
     val wm = lit(bounds.created)
     val obsD = obsDelta.getOrElse(obs)
     val panel = col("concept_id").isin(LabConcepts.map(Integer.valueOf): _*)
-    val purge = purgeSet.getOrElse(FlatObs.voidedPurgeSet(person, existing))
+    val purge = purgeSet.getOrElse(FlatObs.voidedPurgeSet(person, None))
     obsD.filter(panel && col("date_voided") > lit(bounds.voided)).select("person_id")
       .union(obsD.filter(panel && col("date_created") > wm).select("person_id"))
       .union(purge)

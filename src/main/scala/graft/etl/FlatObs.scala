@@ -313,14 +313,13 @@ object FlatObs {
       encounter: DataFrame,
       person: DataFrame,
       bounds: Horizons,
-      existing: Option[DataFrame] = None,
       obsDelta: Option[DataFrame] = None,
       encounterDelta: Option[DataFrame] = None,
       purgeSet: Option[DataFrame] = None): DataFrame = {
     val wm = lit(bounds.created)
     val obsD = obsDelta.getOrElse(obs)
     val encD = encounterDelta.getOrElse(encounter)
-    val purge = purgeSet.getOrElse(voidedPurgeSet(person, existing))
+    val purge = purgeSet.getOrElse(voidedPurgeSet(person, None))
     obsD.filter(col("date_voided") > lit(bounds.voided)).select("person_id")
       .union(obsD.filter(col("date_created") > wm).select("person_id"))
       .union(encD.filter(col("date_changed") > lit(bounds.changed))
@@ -335,7 +334,8 @@ object FlatObs {
     * with `existing` given, the purge set narrows to voided persons the
     * table actually holds (a cheap columnar person_id scan) instead of
     * re-touching every long-voided person's bucket on every tick.
-    * Shared by every stage's `touchedPersons`.
+    * Without `existing` it is every voided person: the default purge set
+    * of every stage's `touchedPersons`.
     */
   def voidedPurgeSet(person: DataFrame, existing: Option[DataFrame]): DataFrame =
     existing match {

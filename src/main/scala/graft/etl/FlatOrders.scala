@@ -89,12 +89,11 @@ object FlatOrders {
       orders: DataFrame,
       person: DataFrame,
       bounds: Horizons,
-      existing: Option[DataFrame] = None,
       ordersDelta: Option[DataFrame] = None,
       purgeSet: Option[DataFrame] = None): DataFrame = {
     val wm = lit(bounds.created)
     val ordD = ordersDelta.getOrElse(orders)
-    val purge = purgeSet.getOrElse(FlatObs.voidedPurgeSet(person, existing))
+    val purge = purgeSet.getOrElse(FlatObs.voidedPurgeSet(person, None))
     ordD.filter(col("date_voided") > lit(bounds.voided))
       .select(col("patient_id").as("person_id"))
       .union(ordD.filter(col("date_created") > wm)

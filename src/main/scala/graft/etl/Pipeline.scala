@@ -4,9 +4,10 @@ import java.nio.charset.StandardCharsets
 import java.sql.Timestamp
 import org.apache.hadoop.fs.{FileContext, Options, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import graft.operators.{BucketedSink, Watermark}
-import Pipeline.{StageBounds, StagePlan}
+import Pipeline.{PersonTables, StageBounds, StagePlan, releaseCheckpoint}
 
 /** Optional pre-pruned change feeds for [[Pipeline.tick]]: each frame, when
   * present, must contain AT LEAST every source row whose latest
@@ -38,11 +39,15 @@ final case class SourceDeltas(
   *   → flat_latest_hiv_summary            (from flat_visit_summary)
   *
   * Each run: resolve watermark and horizons (flat_log → fallback → epoch)
-  * → incremental update → versioned snapshot write + atomic `_CURRENT`
-  * pointer swap (the REPLACE-INTO-equivalent sink; a production deployment
-  * would use a Delta/Iceberg MERGE instead) → append run rows to flat_log.
-  * A bucketed tick with nothing above any bound only appends the run rows
-  * (see [[tick]]).
+  * → incremental update → bucketed write of the touched persons' buckets
+  * committed by one `_MANIFEST` swap ([[BucketedSink]], the
+  * REPLACE-INTO-equivalent sink; a production deployment would use a
+  * Delta/Iceberg MERGE instead) → append run rows to flat_log. A tick with
+  * nothing above any bound only appends the run rows (see [[tick]]).
+  *
+  * `bucketsOverride` is the bucket count of every person-keyed table, the
+  * [[BucketedSink.sizeBuckets]] floor when absent. The tables do not move
+  * between counts: a root written with another count is refused.
   */
 class Pipeline(
     spark: SparkSession, root: String, bucketsOverride: Option[Int] = None) {
@@ -61,7 +66,7 @@ class Pipeline(
     * scan of the source directory. */
   private[graft] def versionLogPath: String = path("obs_version_log")
 
-  // ---- versioned snapshot layout ----
+  // ---- versioned snapshot layout (purged_persons) ----
   // Each write lands in a fresh `v_<n>` directory under the table path;
   // `_CURRENT` is a one-line pointer file naming the live version. The
   // pointer is replaced with FileContext.rename(OVERWRITE) — a single
@@ -89,18 +94,29 @@ class Pipeline(
     }
   }
 
-  // ---- optional bucketed layout (flat_obs) ----
-  // `graft.sink.buckets` = N > 0 switches the flat_obs sink to
-  // BucketedSink: incremental ticks dynamically overwrite only the
-  // buckets of touched persons (O(delta) write) instead of snapshotting
-  // the whole table. Pick the mode when the table is first created —
-  // the layouts are distinct directories and don't migrate.
+  // ---- bucketed layout (the five person-keyed tables) ----
+  // Incremental ticks overwrite only the buckets of touched persons
+  // (O(delta) write) under `<table>/buckets`.
 
-  def sinkBuckets: Int = bucketsOverride.getOrElse(
-    spark.conf.getOption("graft.sink.buckets").map(_.toInt).getOrElse(0))
+  val sinkBuckets: Int = bucketsOverride.getOrElse(BucketedSink.sizeBuckets(0))
   private[graft] def bucketedDataPath(name: String) = new Path(path(name), "buckets")
   private[graft] def bucketedExists(name: String): Boolean =
     BucketedSink.exists(hadoopConf, bucketedDataPath(name).toString)
+
+  /** The person-keyed tables present under this root. Refuses a table
+    * this pipeline cannot merge into, so a caller checks before writing
+    * anything: one bucketed by another count ([[BucketedSink.existsWith]]),
+    * or one left in the retired versioned-snapshot layout. */
+  private[graft] def presentTables(): Set[String] = PersonTables.filter { name =>
+    BucketedSink.existsWith(hadoopConf, bucketedDataPath(name).toString, sinkBuckets) || {
+      if (currentVersion(name).isDefined)
+        throw new IllegalStateException(
+          s"${path(name)} holds $name in the retired versioned-snapshot layout " +
+            "(_CURRENT, no buckets/_MANIFEST): remove that directory and tick again " +
+            "to rebuild it from the sources")
+      false
+    }
+  }.toSet
 
   // ---- purged-log consistency marker ----
   // The purge-set presence probe (in tick) exists only for crash
@@ -269,12 +285,10 @@ class Pipeline(
     * in one file; returns the appended rows. */
   private def runStage(
       plan: StagePlan,
-      flatName: String,
       run: Horizons => DataFrame,
-      write: DataFrame => Unit = null): Seq[Watermark.RunRow] = {
+      write: DataFrame => Unit): Seq[Watermark.RunRow] = {
     val start = System.currentTimeMillis()
-    val result = run(plan.start)
-    if (write == null) writeSnapshot(result, flatName) else write(result)
+    write(run(plan.start))
     val secs = ((System.currentTimeMillis() - start) / 1000).toShort
     Watermark.appendRun(spark, logPath, plan.rows, secs)
   }
@@ -292,7 +306,7 @@ class Pipeline(
     */
   private[graft] final case class BucketedDelta(
       queue: DataFrame, buckets: Set[Int], prunedExisting: DataFrame) {
-    def release(): Unit = queue.unpersist()
+    def release(): Unit = releaseCheckpoint(queue)
   }
 
   private def bucketedDelta(name: String, queue: DataFrame): BucketedDelta = {
@@ -316,24 +330,24 @@ class Pipeline(
 
   /** Bucketed-sink write hook: full write into a fresh epoch on first
     * run, then touched-bucket-only epochs committed by the manifest
-    * swap. Null (snapshot mode) when bucketing is off. */
+    * swap. */
   private def bucketedWrite(
       name: String,
-      delta: () => BucketedDelta): DataFrame => Unit =
-    if (sinkBuckets <= 0) null
-    else { result =>
-      val p = bucketedDataPath(name).toString
-      if (!bucketedExists(name))
-        BucketedSink.writeFull(result, p, "person_id", sinkBuckets)
-      else
-        BucketedSink.overwriteChanged(result, p, "person_id", sinkBuckets,
-          delta().buckets)
-    }
+      delta: () => BucketedDelta): DataFrame => Unit = { result =>
+    val p = bucketedDataPath(name).toString
+    if (!bucketedExists(name))
+      BucketedSink.writeFull(result, p, "person_id", sinkBuckets)
+    else
+      BucketedSink.overwriteChanged(result, p, "person_id", sinkBuckets,
+        delta().buckets)
+  }
 
-  /** One full pipeline tick over the given source snapshot. Every
-    * person-keyed flat table honors `graft.sink.buckets`; only the small
-    * latest-summary (one row per person, rebuilt wholesale from the
-    * summary) stays on the versioned-snapshot sink.
+  /** One full pipeline tick over the given source snapshot. Each stage
+    * runs a bucketed incremental merge when its table exists, else a full
+    * build into a fresh bucketed table; only the purged-persons log stays
+    * on the versioned-snapshot sink. A root holding a table this pipeline
+    * cannot merge into ([[presentTables]]) is refused before anything is
+    * written.
     *
     * `deltas` (optional, [[SourceDeltas]]): pre-pruned change feeds that
     * replace the tick's full-source delta/purge scans with O(delta)
@@ -342,19 +356,18 @@ class Pipeline(
     * slow the tick down or (if it MISSES changes, violating its contract)
     * skip them exactly as a lagging source snapshot would.
     *
-    * A bucketed tick with nothing to do short-circuits: when the run log
-    * matches the consistency marker, every table exists, the summary is
-    * aligned with flat_obs, no source maximum is above its stage's bounds
-    * and no voided person is left to purge, every stage queue would be
-    * empty. The tick then appends the run rows (the reference logs every
-    * `CALL`) in one file, rewrites the marker and returns — no stage,
-    * checkpoint, bucket read, purged-log rewrite or table write. The
-    * snapshot layout always runs its stages.
+    * A tick with nothing to do short-circuits: when the run log matches
+    * the consistency marker, every table exists, the summary is aligned
+    * with flat_obs, no source maximum is above its stage's bounds and no
+    * voided person is left to purge, every stage queue would be empty.
+    * The tick then appends the run rows (the reference logs every `CALL`)
+    * in one file, rewrites the marker and returns — no stage, checkpoint,
+    * bucket read, purged-log rewrite or table write.
     */
   def tick(
       obs: DataFrame, encounter: DataFrame, orders: DataFrame,
       person: DataFrame, deltas: SourceDeltas = SourceDeltas()): Unit = {
-    val bucketed = sinkBuckets > 0
+    val present = presentTables()
     val obsD = deltas.obs
     val encD = deltas.encounter
     val ordD = deltas.orders
@@ -407,7 +420,7 @@ class Pipeline(
     val summaryAligned = !Watermark.resolve(log0, flatVisitSummaryVersion)
       .before(Watermark.resolve(log0, flatObsVersion))
 
-    // ---- purged-persons log (bucketed mode) ----
+    // ---- purged-persons log ----
     // The voided-person purge must only queue persons whose rows are
     // still present. The old narrowing semi-joined person against the
     // flat table's person_id column — O(table) over one column, every
@@ -419,7 +432,7 @@ class Pipeline(
     // independent of table size.
     lastTickProbed = false
     lastTickShortCircuited = false
-    val purgedLog = if (bucketed) readFlat("purged_persons") else None
+    val purgedLog = readFlat("purged_persons")
     val voidedPersons = person.filter(col("voided") === 1).select("person_id")
     val fresh = purgedLog.map(voidedPersons.join(_, Seq("person_id"), "left_anti"))
     // the marker proves no tick died mid-flight since the last complete one
@@ -429,9 +442,7 @@ class Pipeline(
 
     val plans = Seq(foPlan, ordPlan, labPlan, sumPlan)
     if (markerIntact && summaryAligned && plans.forall(_.quiet) &&
-        Seq("flat_obs", "flat_orders", "flat_lab_obs", "flat_visit_summary",
-          "flat_latest_hiv_summary").forall(bucketedExists) &&
-        fresh.get.isEmpty) {
+        present.size == PersonTables.size && fresh.get.isEmpty) {
       // every stage queue is empty: no source row is above its bounds, no
       // purge is due, and with the summary aligned its retraction scan is
       // bounded by flat_obs's (empty) queue
@@ -441,50 +452,48 @@ class Pipeline(
       return
     }
 
-    val purgeSet =
-      if (!bucketed) None
-      else phase("purge probe") {
-        Some((purgedLog match {
-          case Some(log) =>
-            // The log is written in a SEPARATE commit after the stage
-            // writes, so a crash between them can leave a stale absence
-            // entry: a re-queued person (unvoid + new data) whose rows
-            // rematerialized but whose log entry survived. Left alone, a
-            // later re-void would be excluded from the purge set forever.
-            // Validate exactly the entries whose staleness matters — log
-            // ∩ currently-voided — with a bucket-pruned presence probe
-            // (O(claimed persons' buckets), not O(table)) — but ONLY
-            // when the consistency marker says a crash window is open
-            // (see the marker scaladoc): on the steady path the probe,
-            // not the purge itself, was the tick's largest unlogged cost.
-            lastTickProbed = !markerIntact
-            val claimed =
-              if (markerIntact) fresh.get.limit(0)
-              else voidedPersons.join(log, Seq("person_id"), "left_semi")
-            val claimedBuckets =
-              if (markerIntact) Set.empty[Int]
-              else BucketedSink.collectBuckets(claimed, sinkBuckets)
-            val stale =
-              if (claimedBuckets.isEmpty) claimed.limit(0)
-              else Seq("flat_obs", "flat_orders", "flat_lab_obs",
-                  "flat_visit_summary")
-                .filter(bucketedExists)
-                .map(n => BucketedSink.readBuckets(
-                  spark, bucketedDataPath(n).toString, claimedBuckets)
-                  .select("person_id")
-                  .join(claimed, Seq("person_id"), "left_semi"))
-                .reduceOption(_ union _)
-                .map(_.distinct())
-                .getOrElse(claimed.limit(0))
-            fresh.get.union(stale)
-          case None => voidedPersons
-          // localCheckpoint for the same reason as bucketedDelta's queue:
-          // the stale probe reads the flat tables, so the first stage
-          // write would invalidate a cache()d plan and every later
-          // consumer (each stage's purge narrowing, the log update)
-          // would re-run the bucket probe from files
-        }).localCheckpoint())
-      }
+    val purgeSet = phase("purge probe") {
+      (purgedLog match {
+        case Some(log) =>
+          // The log is written in a SEPARATE commit after the stage
+          // writes, so a crash between them can leave a stale absence
+          // entry: a re-queued person (unvoid + new data) whose rows
+          // rematerialized but whose log entry survived. Left alone, a
+          // later re-void would be excluded from the purge set forever.
+          // Validate exactly the entries whose staleness matters — log
+          // ∩ currently-voided — with a bucket-pruned presence probe
+          // (O(claimed persons' buckets), not O(table)) — but ONLY
+          // when the consistency marker says a crash window is open
+          // (see the marker scaladoc): on the steady path the probe,
+          // not the purge itself, was the tick's largest unlogged cost.
+          lastTickProbed = !markerIntact
+          val claimed =
+            if (markerIntact) fresh.get.limit(0)
+            else voidedPersons.join(log, Seq("person_id"), "left_semi")
+          val claimedBuckets =
+            if (markerIntact) Set.empty[Int]
+            else BucketedSink.collectBuckets(claimed, sinkBuckets)
+          val stale =
+            if (claimedBuckets.isEmpty) claimed.limit(0)
+            else Seq("flat_obs", "flat_orders", "flat_lab_obs",
+                "flat_visit_summary")
+              .filter(present)
+              .map(n => BucketedSink.readBuckets(
+                spark, bucketedDataPath(n).toString, claimedBuckets)
+                .select("person_id")
+                .join(claimed, Seq("person_id"), "left_semi"))
+              .reduceOption(_ union _)
+              .map(_.distinct())
+              .getOrElse(claimed.limit(0))
+          fresh.get.union(stale)
+        case None => voidedPersons
+        // localCheckpoint for the same reason as bucketedDelta's queue:
+        // the stale probe reads the flat tables, so the first stage
+        // write would invalidate a cache()d plan and every later
+        // consumer (each stage's purge narrowing, the log update)
+        // would re-run the bucket probe from files
+      }).localCheckpoint()
+    }
     val tickQueues = scala.collection.mutable.ListBuffer.empty[DataFrame]
     val appended = scala.collection.mutable.ListBuffer.empty[Watermark.RunRow]
 
@@ -501,135 +510,107 @@ class Pipeline(
       tickQueues += delta.queue; delta = null // released after the log write
     }
 
-    // In bucketed mode the stage branches consult ONLY bucketedExists —
-    // readFlat would eagerly build a full-table file index (every bucket
-    // directory listed) just to pattern-match Some(_): `touchedPersons`
-    // never reads `existing` when the purge set is supplied (it exists
-    // only to narrow the purge in snapshot mode), and the merge reads the
-    // bucket-pruned frame. At 200k persons / 40k buckets those dead
-    // listings were a multi-second constant per stage, every tick.
+    // The stage branches consult only `present` — readFlat would eagerly
+    // build a full-table file index (every bucket directory listed) just
+    // to pattern-match Some(_), while the merge reads the bucket-pruned
+    // frame. At 200k persons / 40k buckets those dead listings were a
+    // multi-second constant per stage, every tick.
     phase("stage flat_obs")(appended ++=
-    runStage(foPlan, "flat_obs", wm =>
-      if (bucketed && bucketedExists("flat_obs")) {
+    runStage(foPlan, wm =>
+      if (present("flat_obs")) {
         val d = noteDelta(bucketedDelta("flat_obs",
-          FlatObs.touchedPersons(obs, encounter, person, wm, None,
-            obsD, encD, purgeSet)))
+          FlatObs.touchedPersons(obs, encounter, person, wm,
+            obsD, encD, Some(purgeSet))))
         foDelta = d
         FlatObs.incremental(d.prunedExisting, obs, encounter, person, wm,
           obsD, encD)
-      } else readFlat("flat_obs") match {
-        case Some(existing) =>
-          FlatObs.incremental(existing, obs, encounter, person, wm, obsD, encD)
-        case None => FlatObs.build(obs, encounter, person)
-      },
+      } else FlatObs.build(obs, encounter, person),
       bucketedWrite("flat_obs", () => delta)))
     endStage()
 
     phase("stage flat_orders")(appended ++=
-    runStage(ordPlan, "flat_orders", wm =>
-        if (bucketed && bucketedExists("flat_orders")) {
+    runStage(ordPlan, wm =>
+        if (present("flat_orders")) {
           val d = noteDelta(bucketedDelta("flat_orders",
-            FlatOrders.touchedPersons(orders, person, wm, None,
-              ordD, purgeSet)))
+            FlatOrders.touchedPersons(orders, person, wm,
+              ordD, Some(purgeSet))))
           FlatOrders.incremental(d.prunedExisting, orders, encounter, person,
             wm, ordD)
-        } else readFlat("flat_orders") match {
-          case Some(existing) =>
-            FlatOrders.incremental(existing, orders, encounter, person, wm, ordD)
-          case None => FlatOrders.build(orders, encounter, person)
-        },
+        } else FlatOrders.build(orders, encounter, person),
       bucketedWrite("flat_orders", () => delta)))
     endStage()
 
     phase("stage flat_lab_obs")(appended ++=
-    runStage(labPlan, "flat_lab_obs", wm =>
-        if (bucketed && bucketedExists("flat_lab_obs")) {
+    runStage(labPlan, wm =>
+        if (present("flat_lab_obs")) {
           val d = noteDelta(bucketedDelta("flat_lab_obs",
-            FlatLabObs.touchedPersons(obs, person, wm, None,
-              obsD, purgeSet)))
+            FlatLabObs.touchedPersons(obs, person, wm,
+              obsD, Some(purgeSet))))
           FlatLabObs.incremental(d.prunedExisting, obs, person, wm,
             obsDelta = obsD)
-        } else readFlat("flat_lab_obs") match {
-          case Some(existing) =>
-            FlatLabObs.incremental(existing, obs, person, wm, obsDelta = obsD)
-          case None => FlatLabObs.build(obs, person)
-        },
+        } else FlatLabObs.build(obs, person),
       bucketedWrite("flat_lab_obs", () => delta)))
     endStage()
 
     phase("stage flat_visit_summary")(appended ++=
-    runStage(sumPlan, "flat_visit_summary", wm => {
-        // full-table reads are deferred into the branches that use them —
-        // constructing one builds its file index immediately, and the
-        // bucketed aligned path needs none of them
-        def fo = readFlat("flat_obs").get
-        def ford = readFlat("flat_orders").get
-        if (bucketed && bucketedExists("flat_visit_summary")) {
-            // Queue scans: when this tick ran flat_obs incrementally AND
-            // the last summary run was aligned with the previous flat_obs
-            // run, every flat_obs row that changed since the summary's
-            // watermark lives in this tick's flat_obs queue buckets — so
-            // the retraction anti-join and the max_date_created scan read
-            // only those buckets (O(delta)) instead of the whole table.
-            // The WIDE rebuild reads below are pruned to the summary
-            // queue's own buckets. flat_obs/flat_orders share the
-            // person_id hash and bucket count, so a queued person's
-            // upstream rows live in the same bucket ids.
-            val queue =
-              if (summaryAligned && foDelta != null) {
-                val foScoped = BucketedSink.readBuckets(spark,
-                  bucketedDataPath("flat_obs").toString, foDelta.buckets)
-                // summary shares the person-hash bucketing, so queued
-                // persons' summary rows live in the same bucket ids —
-                // the retraction probe side is O(delta) files too
-                val sumScoped = BucketedSink.readBuckets(spark,
-                  bucketedDataPath("flat_visit_summary").toString,
-                  foDelta.buckets)
-                FlatVisitSummary.touchedPersonsBounded(sumScoped, foScoped,
-                  foDelta.queue, obs, encounter, wm, obsD, encD)
-              } else
-                FlatVisitSummary.touchedPersons(
-                  readFlat("flat_visit_summary").get, fo, obs, encounter,
-                  wm, obsD, encD)
-            val d = noteDelta(bucketedDelta("flat_visit_summary", queue))
-            sumDelta = d
-            val foPruned = BucketedSink.readBuckets(
-              spark, bucketedDataPath("flat_obs").toString, d.buckets)
-            val fordPruned = BucketedSink.readBuckets(
-              spark, bucketedDataPath("flat_orders").toString, d.buckets)
-            FlatVisitSummary.incremental(d.prunedExisting, foPruned, fordPruned,
-              obs, encounter, person, wm, Some(d.queue))
-        } else readFlat("flat_visit_summary") match {
-          case Some(existing) =>
-            FlatVisitSummary.incremental(
-              existing, fo, ford, obs, encounter, person, wm, None, obsD, encD)
-          case None => FlatVisitSummary.build(fo, ford, person)
-        }
-      },
+    runStage(sumPlan, wm =>
+        if (present("flat_visit_summary")) {
+          // Queue scans: when this tick ran flat_obs incrementally AND
+          // the last summary run was aligned with the previous flat_obs
+          // run, every flat_obs row that changed since the summary's
+          // watermark lives in this tick's flat_obs queue buckets — so
+          // the retraction anti-join and the max_date_created scan read
+          // only those buckets (O(delta)) instead of the whole table.
+          // The WIDE rebuild reads below are pruned to the summary
+          // queue's own buckets. flat_obs/flat_orders share the
+          // person_id hash and bucket count, so a queued person's
+          // upstream rows live in the same bucket ids.
+          val queue =
+            if (summaryAligned && foDelta != null) {
+              val foScoped = BucketedSink.readBuckets(spark,
+                bucketedDataPath("flat_obs").toString, foDelta.buckets)
+              // summary shares the person-hash bucketing, so queued
+              // persons' summary rows live in the same bucket ids —
+              // the retraction probe side is O(delta) files too
+              val sumScoped = BucketedSink.readBuckets(spark,
+                bucketedDataPath("flat_visit_summary").toString,
+                foDelta.buckets)
+              FlatVisitSummary.touchedPersonsBounded(sumScoped, foScoped,
+                foDelta.queue, obs, encounter, wm, obsD, encD)
+            } else
+              FlatVisitSummary.touchedPersons(
+                readFlat("flat_visit_summary").get, readFlat("flat_obs").get,
+                obs, encounter, wm, obsD, encD)
+          val d = noteDelta(bucketedDelta("flat_visit_summary", queue))
+          sumDelta = d
+          val foPruned = BucketedSink.readBuckets(
+            spark, bucketedDataPath("flat_obs").toString, d.buckets)
+          val fordPruned = BucketedSink.readBuckets(
+            spark, bucketedDataPath("flat_orders").toString, d.buckets)
+          FlatVisitSummary.incremental(d.prunedExisting, foPruned, fordPruned,
+            obs, encounter, person, wm, Some(d.queue))
+        } else FlatVisitSummary.build(
+          readFlat("flat_obs").get, readFlat("flat_orders").get, person),
       bucketedWrite("flat_visit_summary", () => delta)))
     endStage()
 
     // ---- latest-summary maintenance ----
     // One row per person, derived ONLY from that person's visit-summary
-    // rows — so in bucketed mode (shared person-id hash) the stage is a
-    // keyed merge: rebuild exactly the buckets the summary stage touched
-    // from those buckets' post-tick rows and leave every other bucket's
-    // files untouched. O(delta buckets) per tick instead of the wholesale
+    // rows — so with the shared person-id hash the stage is a keyed merge:
+    // rebuild exactly the buckets the summary stage touched from those
+    // buckets' post-tick rows and leave every other bucket's files
+    // untouched. O(delta buckets) per tick instead of the wholesale
     // rebuild (the one stage whose incremental path the reference itself
     // punts on, flat_latest_hiv_summary_v1.0.sql:21-37 + §7.4.8).
     // Deletions fall out: a purged person's bucket rebuilds without them.
     phase("latest merge")(
-    if (bucketed && bucketedExists("flat_latest_hiv_summary") && sumDelta != null)
+    if (present("flat_latest_hiv_summary") && sumDelta != null)
       writeBucketedChanged(
         FlatLatestHivSummary.build(
           readFlatBuckets("flat_visit_summary", sumDelta.buckets)),
         "flat_latest_hiv_summary", sumDelta.buckets)
-    else if (bucketed)
-      writeBucketedFull(
-        FlatLatestHivSummary.build(readFlat("flat_visit_summary").get),
-        "flat_latest_hiv_summary")
     else
-      writeSnapshot(
+      writeBucketedFull(
         FlatLatestHivSummary.build(readFlat("flat_visit_summary").get),
         "flat_latest_hiv_summary"))
 
@@ -642,28 +623,40 @@ class Pipeline(
     // them absent (dropping the entry made the next tick purge them again
     // and rewrite their buckets unchanged). Re-adding the tick's purge
     // set is exact — those persons' rows were removed by every stage.
-    phase("purged-log update")(
-    purgeSet.foreach { p =>
+    phase("purged-log update") {
       val queued = tickQueues.map(_.select("person_id"))
         .reduceOption(_ union _)
         .map(_.distinct().join(voidedPersons, Seq("person_id"), "left_anti"))
       val kept = (purgedLog, queued) match {
         case (Some(log), Some(q)) => log.join(q, Seq("person_id"), "left_anti")
         case (Some(log), None) => log
-        case (None, _) => p.limit(0)
+        case (None, _) => purgeSet.limit(0)
       }
-      writeSnapshot(kept.union(p).distinct(), "purged_persons")
+      writeSnapshot(kept.union(purgeSet).distinct(), "purged_persons")
       // the log update committed with every stage append visible →
       // record the log signature so the next tick can skip the
       // crash-recovery presence probe (see markerPath scaladoc)
       writeMarker(Watermark.signature(log0 ++ appended))
-      p.unpersist()
-    })
-    tickQueues.foreach(_.unpersist())
+      releaseCheckpoint(purgeSet)
+    }
+    tickQueues.foreach(releaseCheckpoint)
   }
 }
 
 object Pipeline {
+
+  /** Drop a `localCheckpoint`ed frame's blocks. `unpersist` on the frame
+    * does nothing (it was never in the cache manager), which left the
+    * blocks in storage until the frame was garbage-collected. */
+  private[graft] def releaseCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.logical.foreach {
+      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ =>
+    }
+
+  /** The five person-keyed flat tables, in stage order. */
+  private[graft] val PersonTables = Seq("flat_obs", "flat_orders", "flat_lab_obs",
+    "flat_visit_summary", "flat_latest_hiv_summary")
 
   /** Where a stage's three bounds ([[Horizons]]) live in `flat_log`: the
     * creation watermark under the table version (the reference's row),

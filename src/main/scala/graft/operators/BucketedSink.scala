@@ -14,7 +14,8 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * Layout: bucket data lives in append-only EPOCH directories
   * (`e_<n>/__bucket=K/`), one epoch per write; `_MANIFEST` is a single
   * pointer file mapping every bucket to the epoch holding its current
-  * data. A full rebuild writes every bucket into a fresh epoch; an
+  * data, headed by the bucket count the table was written with. A full
+  * rebuild writes every bucket into a fresh epoch; an
   * incremental tick writes ONLY the buckets containing touched keys into
   * a fresh epoch — at 100 TB with a steady-state delta touching a few
   * thousand persons, that is a few buckets instead of the whole table —
@@ -163,8 +164,32 @@ object BucketedSink {
     }
   }
 
-  /** bucket id → epoch dir name, or None before the first writeFull. */
-  private def readManifest(conf: Configuration, path: String): Option[Map[Int, String]] = {
+  /** Whether a table exists at `path`, refusing one whose rows were
+    * bucketed by another count: a key's bucket id would not name the
+    * bucket holding its rows, so a merge would read and rewrite the wrong
+    * buckets. A manifest written before the count was recorded is checked
+    * only by its bucket ids. */
+  def existsWith(conf: Configuration, path: String, nBuckets: Int): Boolean =
+    readManifest(conf, path) match {
+      case Some(m) => requireBuckets(path, m, nBuckets); true
+      case None => exists(conf, path)
+    }
+
+  private def requireBuckets(path: String, m: Manifest, nBuckets: Int): Unit =
+    if (!m.nBuckets.fold(m.epochs.keys.forall(_ < nBuckets))(_ == nBuckets))
+      throw new IllegalStateException(
+        s"$path was written with ${m.nBuckets.fold(s"more than $nBuckets")(_.toString)} " +
+          s"buckets, not $nBuckets: open it with its own bucket count, or remove it " +
+          "and write it again")
+
+  /** The live bucket id → epoch dir map, and the bucket count the table
+    * was written with (None in a manifest that predates the record). */
+  private final case class Manifest(epochs: Map[Int, String], nBuckets: Option[Int])
+
+  private val CountLine = "#buckets\t"
+
+  /** The manifest, or None before the first writeFull. */
+  private def readManifest(conf: Configuration, path: String): Option[Manifest] = {
     val p = manifestPath(path)
     val fs = p.getFileSystem(conf)
     if (!fs.exists(p)) None
@@ -173,21 +198,24 @@ object BucketedSink {
       try {
         val buf = new java.io.ByteArrayOutputStream()
         org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 4096, false)
-        Some(new String(buf.toByteArray, StandardCharsets.UTF_8)
-          .split("\n").filter(_.nonEmpty)
-          .map { line =>
+        val (count, lines) = new String(buf.toByteArray, StandardCharsets.UTF_8)
+          .split("\n").filter(_.nonEmpty).toSeq.partition(_.startsWith(CountLine))
+        Some(Manifest(
+          lines.map { line =>
             val Array(b, e) = line.split("\t")
             b.toInt -> e
-          }.toMap)
+          }.toMap,
+          count.headOption.map(_.stripPrefix(CountLine).toInt)))
       } finally in.close()
     }
   }
 
-  private def writeManifest(conf: Configuration, path: String, m: Map[Int, String]): Unit = {
+  private def writeManifest(conf: Configuration, path: String, m: Manifest): Unit = {
     val dir = new Path(path)
     val fs = dir.getFileSystem(conf)
     val tmp = new Path(dir, "_MANIFEST.tmp")
-    val body = m.toSeq.sortBy(_._1).map { case (b, e) => s"$b\t$e" }.mkString("\n")
+    val body = (m.nBuckets.map(CountLine + _) ++
+      m.epochs.toSeq.sortBy(_._1).map { case (b, e) => s"$b\t$e" }).mkString("\n")
     val out = fs.create(tmp, true)
     try out.write(body.getBytes(StandardCharsets.UTF_8)) finally out.close()
     FileContext.getFileContext(dir.toUri, conf)
@@ -241,7 +269,7 @@ object BucketedSink {
     *
     * INVARIANT for tables managed by [[graft.etl.Pipeline]]: every
     * mutation of such a table MUST route through Pipeline's facade
-    * (writeBucketedFull / writeBucketedChanged / writeSnapshot), each of
+    * (writeBucketedFull / writeBucketedChanged), each of
     * which drops the purged-log `_CONSISTENT` marker before writing.
     * Calling writeFull/overwriteChanged here directly against a
     * pipeline-managed path leaves the marker intact, the next tick skips
@@ -252,14 +280,15 @@ object BucketedSink {
     * themselves). */
   def writeFull(df: DataFrame, path: String, keyCol: String, nBuckets: Int): Unit = {
     val c = conf(df)
-    val prev = readManifest(c, path).getOrElse(Map.empty)
+    val prev = readManifest(c, path).fold(Map.empty[Int, String])(_.epochs)
     val epoch = nextEpoch(c, path)
     df.withColumn("__bucket", bucketOf(col(keyCol), nBuckets))
       .repartition(col("__bucket"))
       .write.mode("overwrite").partitionBy("__bucket")
       .parquet(new Path(path, epoch).toString)
     val manifest = writtenBuckets(c, new Path(path, epoch)).map(_ -> epoch).toMap
-    writeManifest(c, path, manifest)
+    // the bucket count commits with the map it keys (see existsWith)
+    writeManifest(c, path, Manifest(manifest, Some(nBuckets)))
     // a full write REPLACES every bucket, so its schema simply becomes
     // the recorded one (no additivity constraint against history —
     // nothing of the old schema survives the swap). Sidecar AFTER the
@@ -322,8 +351,10 @@ object BucketedSink {
       touched: Set[Int],
       maxEpochs: Int = 16): Unit = {
     val c = conf(merged)
-    val prev = readManifest(c, path).getOrElse(throw new IllegalStateException(
+    val prevManifest = readManifest(c, path).getOrElse(throw new IllegalStateException(
       s"no manifest at $path — writeFull before overwriteChanged"))
+    requireBuckets(path, prevManifest, nBuckets)
+    val prev = prevManifest.epochs
     // a no-delta tick (common steady state) changes nothing: skip the
     // write job, the identical-manifest rewrite, and the purge
     if (touched.isEmpty) return
@@ -385,7 +416,7 @@ object BucketedSink {
     // of the manifest entirely
     val written = writtenBuckets(c, new Path(path, epoch)).map(_ -> epoch).toMap
     val manifest = (prev -- rewrite) ++ written
-    writeManifest(c, path, manifest)
+    writeManifest(c, path, Manifest(manifest, prevManifest.nBuckets))
     purge(c, path, manifest, prev)
   }
 
@@ -397,7 +428,7 @@ object BucketedSink {
   def read(spark: SparkSession, path: String): DataFrame = {
     val c = spark.sparkContext.hadoopConfiguration
     val manifest = readManifest(c, path).getOrElse(throw new IllegalStateException(
-      s"no manifest at $path"))
+      s"no manifest at $path")).epochs
     if (manifest.isEmpty) emptyTable(spark, path)
     else {
       val align: DataFrame => DataFrame =
@@ -419,7 +450,7 @@ object BucketedSink {
   def readBuckets(spark: SparkSession, path: String, buckets: Set[Int]): DataFrame = {
     val c = spark.sparkContext.hadoopConfiguration
     val manifest = readManifest(c, path).getOrElse(throw new IllegalStateException(
-      s"no manifest at $path"))
+      s"no manifest at $path")).epochs
     readFromManifest(spark, path, manifest, buckets)
   }
 

@@ -522,28 +522,28 @@ object EtlPipelineQueries {
         // same code path (streamedCascade) on the real fixture — outside
         // this timed body, which round 6 showed was paying ~3 extra
         // batch rebuilds per bench invocation.
-        streamedCascade(s, dir).readFlat("flat_obs").get
+        streamedCascade(s, dir, buckets = Some(Q94Buckets)).readFlat("flat_obs").get
     },
 
-    // The SAME streamed cascade against the BUCKETED sink (round-7
-    // verdict's headline ask): per batch, every stage merges over its
-    // stored table pruned to the touched persons' buckets and commits
-    // only those buckets; the accumulated obs version log is pruned to
-    // queued persons BEFORE its dedup window. Same oracle VERBATIM —
-    // the sink layout must be invisible in the result. The arrival
-    // schedule is the steady-state shape (one bulk load + two ~6-month
-    // deltas) where an unbounded stream actually lives; the snapshot
-    // twin q94 keeps the reference's even three-way split.
+    // The SAME streamed cascade on the steady-state arrival schedule: per
+    // batch, every stage merges over its stored table pruned to the
+    // touched persons' buckets and commits only those buckets; the
+    // accumulated obs version log is pruned to queued persons BEFORE its
+    // dedup window. Same oracle VERBATIM. The arrival schedule is the
+    // steady-state shape (one bulk load + two ~1.5-month deltas) where an
+    // unbounded stream actually lives; its twin q94 keeps the reference's
+    // even three-way split.
     OpQuery.sqlPrepared("q125_stream_etl_cascade_bucketed", flatObsStageOracle)(
       (s, dir) => preparedChunks(s, dir, BucketedCascadeCuts): Unit) {
       (s, dir) =>
-        // 64 buckets: the tpch fixture's uniform activity touches ~18%
-        // of persons per 1.5-month delta, so NO local bucket count can
-        // make the merge prune (pruning needs buckets >= 10x delta
-        // keys); the bucket count here only sets per-file constants,
-        // and the steady-state pruning claim is carried by the clinic
-        // regime in ProfileCascade/SCALE.md where deltas are ~2%.
-        streamedCascade(s, dir, buckets = 64, cuts = BucketedCascadeCuts)
+        // the Pipeline's default 64 buckets: the tpch fixture's uniform
+        // activity touches ~18% of persons per 1.5-month delta, so NO
+        // local bucket count can make the merge prune (pruning needs
+        // buckets >= 10x delta keys); the bucket count here only sets
+        // per-file constants, and the steady-state pruning claim is
+        // carried by the clinic regime in ProfileCascade/SCALE.md where
+        // deltas are ~2%.
+        streamedCascade(s, dir, cuts = BucketedCascadeCuts)
           .readFlat("flat_obs").get
     }
   )
@@ -563,10 +563,15 @@ object EtlPipelineQueries {
   private[graft] val CascadeCuts = Seq(("1000-01-01", "1995-01-01"),
     ("1995-01-01", "1997-01-01"), ("1997-01-01", "3000-01-01"))
 
+  /** q94's bucket count: each of its chunks touches most persons, so no
+    * count prunes, and at sf0.1 64 buckets took 44 s against 35 s at 16
+    * (per-file constants; SCALE.md, "One sink layout"). */
+  private[graft] val Q94Buckets = 16
+
   /** q125's steady-state schedule: one bulk load, then two ~1.5-month
     * deltas — the regime an unbounded stream actually runs in, where
-    * the bucketed sink's O(touched) merge shows against the snapshot
-    * shape's O(accumulated history). (The fixture's obs timeline —
+    * the bucketed sink's O(touched) merge shows against a full rebuild's
+    * O(accumulated history). (The fixture's obs timeline —
     * l_shipdate — runs 1995-01 through 2001-11; the round-7 cuts
     * assumed the classic TPC-H end date and made the "final month" a
     * 41%-of-data bulk reload touching 98% of persons, so q125 benched
@@ -613,15 +618,15 @@ object EtlPipelineQueries {
 
   private[graft] def streamedCascade(
       s: SparkSession, dir: String,
-      buckets: Int = 0,
-      cuts: Seq[(String, String)] = CascadeCuts): graft.etl.Pipeline = {
+      cuts: Seq[(String, String)] = CascadeCuts,
+      buckets: Option[Int] = None): graft.etl.Pipeline = {
     // encounter/person (and orders on first arrival) are STATIC
     // dimensions consumed by every stage of every micro-batch — uncached,
     // each batch re-ran their EAV projection from parquet several times
     // (r17; guide §5 multi-consumer caching: ~10 encounter scans and ~14
     // person scans across the three batches). Persisted for the run,
-    // unpersisted when the last batch drains; the per-batch algorithm
-    // (incl. q94's deliberate snapshot-shape LatestRow) is untouched.
+    // unpersisted when the last batch drains; the per-batch algorithm is
+    // untouched.
     val (_, encounter0, orderRows0, person0) = cascadeInputs(s, dir)
     val encounter = encounter0.persist()
     val orderRows = orderRows0.persist()
@@ -629,8 +634,7 @@ object EtlPipelineQueries {
     val chunks = preparedChunks(s, dir, cuts)
     val root = java.nio.file.Files.createTempDirectory("graft-q94")
     val obsDir = root.resolve("obs")
-    val pipe = new graft.etl.Pipeline(s, root.resolve("tables").toString,
-      if (buckets > 0) Some(buckets) else None)
+    val pipe = new graft.etl.Pipeline(s, root.resolve("tables").toString, buckets)
     // one memo across the arrival batches: the purge probe (voided ∩
     // flat_obs, a bucket-pruned read) runs once per cascade run instead
     // of once per batch (CascadeRunMemo scaladoc for the superset

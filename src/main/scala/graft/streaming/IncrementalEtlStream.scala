@@ -30,104 +30,11 @@ object IncrementalEtlStream {
   def currentState(versions: DataFrame): DataFrame =
     LatestRow(versions, Seq("obs_id"), Seq(col("date_created"), col("date_voided")))
 
-  /** Merge one micro-batch into flat_obs: incremental against the
-    * existing snapshot when one exists, full build otherwise. Returns the
-    * next flat_obs and the per-batch watermark used (None on first build
-    * or an empty batch).
-    *
-    * The watermark sits just below the batch's earliest event —
-    * date_created for inserts, date_voided for retractions — so every
-    * arriving version registers on its delta path (new: date_created >
-    * wm; void: date_voided > wm with the original row's date_created <=
-    * wm).
-    */
-  /** The batch's earliest arrival instant (voided rows count at their
-    * void time), read as a TIMESTAMP — per Pipeline.maxima's warning, a
-    * string round-trip would re-parse the session-tz rendering in the
-    * driver JVM's default zone and silently shift the watermark. None
-    * on an empty batch. */
-  private def batchMinInstant(batch: DataFrame): Option[java.sql.Timestamp] = {
-    val row = batch.agg(
-      min(when(col("voided") === 1, col("date_voided"))
-        .otherwise(col("date_created")))).first()
-    if (row.isNullAt(0)) None else Some(row.getTimestamp(0))
-  }
-
-  private def mergeFlatObs(
-      batch: DataFrame,
-      snapshot: DataFrame,
-      encounter: DataFrame,
-      person: DataFrame,
-      pipeline: Pipeline): (DataFrame, Option[Horizons]) =
-    pipeline.readFlat("flat_obs") match {
-      case Some(existing) =>
-        val minInstant = batchMinInstant(batch)
-        if (minInstant.isEmpty) (existing, None)
-        else {
-          // the batch watermark bounds every predicate: creation and
-          // both modification horizons alike
-          val wm = Horizons.at(new java.sql.Timestamp(minInstant.get.getTime - 1))
-          // the BATCH is the change feed (SourceDeltas contract): every
-          // version arriving since the last watermark is in it, so the
-          // delta key scans seed from the batch instead of re-scanning
-          // the whole accumulated snapshot; rebuilds still read the
-          // snapshot source-of-truth
-          (FlatObs.incremental(existing, snapshot, encounter, person, wm,
-            obsDelta = Some(batch)), Some(wm))
-        }
-      case None => (FlatObs.build(snapshot, encounter, person), None)
-    }
-
   private def obsSnapshot(spark: SparkSession, obsDir: String): DataFrame =
     currentState(
       spark.read.schema(Schemas.obs)
         .option("recursiveFileLookup", "true").parquet(obsDir))
 
-  /** Process all unseen obs files into the flat_obs snapshot at `pipeline`
-    * root, then stop (Trigger.AvailableNow). Repeated calls = repeated
-    * `CALL generate_flat_obs()`.
-    */
-  def runFlatObsOnce(
-      spark: SparkSession,
-      obsDir: String,
-      encounter: DataFrame,
-      person: DataFrame,
-      pipeline: Pipeline,
-      checkpointDir: String): Unit = {
-    val stream = spark.readStream
-      .schema(Schemas.obs)
-      .option("recursiveFileLookup", "true")
-      .parquet(obsDir)
-
-    val query = stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val (next, _) = mergeFlatObs(
-          batch, obsSnapshot(spark, obsDir), encounter, person, pipeline)
-        pipeline.writeSnapshot(next, "flat_obs")
-        ()
-      }
-      .start()
-    query.awaitTermination()
-  }
-
-  /** The full downstream cascade in one micro-batch loop: each batch
-    * merges flat_obs, drives flat_lab_obs' person-day incremental from
-    * the same snapshot and watermark, then flat_visit_summary's
-    * person-queue incremental (including the retraction-only queue via
-    * the raw obs snapshot), and rebuilds flat_latest_hiv_summary — the
-    * same stage code and cascade order as `Pipeline.tick`, with the
-    * stream's checkpointed offsets as the only progress state. `orders`
-    * is a static dimension here (its flat stage builds once); a second
-    * file stream on orders would slot in identically.
-    *
-    * Sink shape follows `pipeline.sinkBuckets`: 0 keeps the versioned
-    * snapshot per batch (the oracle-replayable reference shape); N > 0
-    * runs every batch as a BUCKETED merge — [[cascadeBatchBucketed]] —
-    * whose per-batch cost is O(batch + touched persons' history), not
-    * O(accumulated table): the scale shape for an unbounded stream.
-    */
   /** Cross-micro-batch (and cross-[[runCascadeOnce]]-call) memo for
     * frames that are static — or safely superset-stable — for one
     * logical cascade run over one immutable `person` dimension. A caller
@@ -150,8 +57,40 @@ object IncrementalEtlStream {
     @volatile private[streaming] var purge: DataFrame = null
     def release(): Unit = {
       val p = purge
-      if (p != null) { purge = null; p.unpersist(blocking = false) }
+      if (p != null) { purge = null; Pipeline.releaseCheckpoint(p) }
     }
+  }
+
+  /** The full downstream cascade in one micro-batch loop: each batch
+    * merges flat_obs, drives flat_lab_obs' person-day incremental from
+    * the same snapshot and watermark, then flat_visit_summary's
+    * person-queue incremental (including the retraction-only queue via
+    * the raw obs snapshot), and maintains flat_latest_hiv_summary — the
+    * same stage code and cascade order as `Pipeline.tick`, with the
+    * stream's checkpointed offsets as the only progress state. `orders`
+    * is a static dimension here (its flat stage builds once); a second
+    * file stream on orders would slot in identically.
+    *
+    * Every batch runs as a bucketed merge ([[cascadeBatchBucketed]])
+    * whose per-batch cost is O(batch + touched persons' history), not
+    * O(accumulated table). A root holding a table the pipeline cannot
+    * merge into ([[Pipeline.presentTables]]) fails the batch before it
+    * writes anything.
+    *
+    * Without a memo the call keeps its own and releases it on return.
+    */
+  def runCascadeOnce(
+      spark: SparkSession,
+      obsDir: String,
+      encounter: DataFrame,
+      orders: DataFrame,
+      person: DataFrame,
+      pipeline: Pipeline,
+      checkpointDir: String): Unit = {
+    val memo = new CascadeRunMemo
+    try runCascadeOnce(spark, obsDir, encounter, orders, person, pipeline,
+      checkpointDir, memo)
+    finally memo.release()
   }
 
   def runCascadeOnce(
@@ -162,7 +101,7 @@ object IncrementalEtlStream {
       person: DataFrame,
       pipeline: Pipeline,
       checkpointDir: String,
-      memo: CascadeRunMemo = new CascadeRunMemo): Unit = {
+      memo: CascadeRunMemo): Unit = {
     val stream = spark.readStream
       .schema(Schemas.obs)
       .option("recursiveFileLookup", "true")
@@ -182,15 +121,10 @@ object IncrementalEtlStream {
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (rawBatch: DataFrame, batchId: Long) =>
-        if (pipeline.sinkBuckets > 0)
-          cascadeBatchBucketed(
-            spark, rawBatch, obsDir, encounter, orders, person, pipeline,
-            batchSourceFiles(spark, checkpointDir, batchId),
-            () => voidedBuckets, memo)
-        else
-          cascadeBatchSnapshot(
-            spark, rawBatch, obsDir, encounter, orders, person, pipeline)
-        ()
+        cascadeBatchBucketed(
+          spark, rawBatch, obsDir, encounter, orders, person, pipeline,
+          batchSourceFiles(spark, checkpointDir, batchId),
+          () => voidedBuckets, memo)
       }
       .start()
     query.awaitTermination()
@@ -245,57 +179,6 @@ object IncrementalEtlStream {
       r
     } else f
 
-  /** One micro-batch against the versioned-snapshot sink — each stage
-    * merges into (and rewrites) the full accumulated table. Kept as the
-    * oracle-replayable reference shape; its per-batch flat_obs merge
-    * cost grows with accumulated history (the LatestRow window over the
-    * whole version log — profiled in SCALE.md). */
-  private def cascadeBatchSnapshot(
-      spark: SparkSession,
-      rawBatch: DataFrame,
-      obsDir: String,
-      encounter: DataFrame,
-      orders: DataFrame,
-      person: DataFrame,
-      pipeline: Pipeline): Unit = {
-    def t[A](label: String)(f: => A): A = timed(spark, label)(f)
-    // the deduped snapshot's LatestRow window used to re-execute
-    // inside EVERY downstream stage's plan (4-5x per batch); pin it
-    // once per batch. The batch doubles as the stages' change feed.
-    val batch = rawBatch.persist()
-    val snapshot = obsSnapshot(spark, obsDir).persist()
-    try {
-      val (next, wmOpt) = mergeFlatObs(
-        batch, snapshot, encounter, person, pipeline)
-      t("flat_obs")(pipeline.writeSnapshot(next, "flat_obs"))
-      val lab = (pipeline.readFlat("flat_lab_obs"), wmOpt) match {
-        case (Some(existing), Some(wm)) =>
-          FlatLabObs.incremental(existing, snapshot, person, wm,
-            obsDelta = Some(batch))
-        case _ => FlatLabObs.build(snapshot, person)
-      }
-      t("flat_lab_obs")(pipeline.writeSnapshot(lab, "flat_lab_obs"))
-      if (pipeline.readFlat("flat_orders").isEmpty)
-        t("flat_orders")(pipeline.writeSnapshot(
-          FlatOrders.build(orders, encounter, person), "flat_orders"))
-      val fo = pipeline.readFlat("flat_obs").get
-      val ford = pipeline.readFlat("flat_orders").get
-      val summary = (pipeline.readFlat("flat_visit_summary"), wmOpt) match {
-        case (Some(existing), Some(wm)) =>
-          FlatVisitSummary.incremental(
-            existing, fo, ford, snapshot, encounter, person, wm,
-            obsDelta = Some(batch))
-        case _ => FlatVisitSummary.build(fo, ford, person)
-      }
-      t("flat_visit_summary")(
-        pipeline.writeSnapshot(summary, "flat_visit_summary"))
-      t("flat_latest")(pipeline.writeSnapshot(
-        FlatLatestHivSummary.build(
-          pipeline.readFlat("flat_visit_summary").get),
-        "flat_latest_hiv_summary"))
-    } finally { batch.unpersist(); snapshot.unpersist() }
-  }
-
   /** One micro-batch against the BUCKETED sink — the tick's O(delta)
     * write discipline under the stream (round-7 verdict's headline ask):
     *
@@ -305,8 +188,8 @@ object IncrementalEtlStream {
     *    the LatestRow dedup window — all versions of an obs_id share a
     *    person_id, so the window's partitions are included or excluded
     *    whole, and the per-batch window cost is O(touched persons'
-    *    history) instead of O(all history) (the profiled 1.2→5.8 s/batch
-    *    growth of the snapshot shape);
+    *    history) instead of O(all history), which grew 1.2→5.8 s/batch
+    *    as history accumulated when profiled (SCALE.md);
     *  - each stage merges over its stored table pruned to the queue's
     *    buckets ([[graft.operators.BucketedSink.readBuckets]] — a
     *    file-level prune) and commits ONLY those buckets via the
@@ -351,10 +234,10 @@ object IncrementalEtlStream {
       // checkpoint's replay of that batch, treating it as incremental
       // would throw on the missing tables forever; re-running the full
       // builds is idempotent (each is a fresh epoch + manifest swap).
+      // The presence check refuses a root it cannot merge into before the
+      // version-log write below.
       val hadoopConf = spark.sparkContext.hadoopConfiguration
-      val allTables = Seq("flat_obs", "flat_lab_obs", "flat_orders",
-        "flat_visit_summary", "flat_latest_hiv_summary")
-      if (!allTables.forall(pipeline.bucketedExists) ||
+      if (pipeline.presentTables().size < Pipeline.PersonTables.size ||
           !graft.sources.BucketedLog.exists(hadoopConf, pipeline.versionLogPath)) {
         // First arrival: full builds into fresh single-epoch layouts.
         // Downstream stages consume the PINNED upstream frames rather
@@ -456,7 +339,7 @@ object IncrementalEtlStream {
         }
       }
       val foQueue = FlatObs.touchedPersons(batch, encounter, person,
-        wm, None, Some(batch), purgeSet = Some(purge))
+        wm, Some(batch), purgeSet = Some(purge))
       val foD = t("flat_obs queue")(pipeline.stageDelta("flat_obs", foQueue))
       // Touched persons' history from the bucketed log — bytes opened are
       // O(touched buckets' history), not O(accumulated source directory):
@@ -474,7 +357,7 @@ object IncrementalEtlStream {
             "flat_obs", foD.buckets)
         }
         val labQueue = FlatLabObs.touchedPersons(batch, person, wm,
-          None, Some(batch), purgeSet = Some(purge))
+          Some(batch), purgeSet = Some(purge))
         val labD = t("flat_lab_obs queue")(
           pipeline.stageDelta("flat_lab_obs", labQueue))
         try t("flat_lab_obs") {

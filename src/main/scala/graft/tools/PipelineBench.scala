@@ -50,13 +50,11 @@ object PipelineBench {
     // stage — measured 23s -> 89s full build at 2000 persons). The
     // default applies the rule to THIS fixture's 2% delta:
     // buckets = persons/5 = 10x the expected delta keys.
-    val buckets = sys.env.getOrElse("SPARK_GRAFT_TICK_BUCKETS",
-      math.max(64, nPersons / 5).toString)
+    val buckets = sys.env.get("SPARK_GRAFT_TICK_BUCKETS").map(_.toInt)
+      .getOrElse(math.max(64, nPersons / 5))
     val root = java.nio.file.Files.createTempDirectory("graft-tickbench")
-    val prevConf = Seq("graft.sink.buckets",
-      graft.etl.FlatObs.SaltConfKey).map(k => k -> spark.conf.getOption(k))
+    val prevConf = Seq(graft.etl.FlatObs.SaltConfKey).map(k => k -> spark.conf.getOption(k))
     try {
-      spark.conf.set("graft.sink.buckets", buckets)
       if (salt != "0") spark.conf.set(graft.etl.FlatObs.SaltConfKey, salt)
       // SPARK_GRAFT_TICK_DEBUG=1 prints per-phase wall/bytes for every
       // tick (stages + the unlogged phases) — attribution, off by default
@@ -72,7 +70,7 @@ object PipelineBench {
         BenchFixtures.ordersAsOf(src("orders"), t).cache(),
         src("person").cache())
 
-      val pipe = new graft.etl.Pipeline(spark, root.toString)
+      val pipe = new graft.etl.Pipeline(spark, root.toString, Some(buckets))
       val (obs1, enc1, ord1, person) = views(t1)
       val s1 = System.nanoTime()
       pipe.tick(obs1, enc1, ord1, person)
@@ -169,15 +167,12 @@ object PipelineBench {
           s"steady-state ticks changed $n: $got vs ${preSteady(n)}")
       }
 
-      // isolated purge/delta queue-scan cost (the tick metric above still
+      // isolated delta queue-scan cost (the tick metric above still
       // carries fixed per-stage orchestration that drowns the scan delta
       // at toy scale; latest-summary is now a keyed bucket merge):
       // the full-scan form reads the obs/encounter time columns across
-      // the whole source plus the flat table's person_id column; the
-      // feed form reads only delta-window partitions and the purged-
-      // persons log. Best of 3.
-      val existingFo = graft.operators.BucketedSink.read(
-        spark, bucketsDir("flat_obs").toString)
+      // the whole source, the feed form only delta-window partitions;
+      // both take their purge set from the purged-persons log. Best of 3.
       val purgedLog = pipe.readFlat("purged_persons").get
       val purgeFromLog = person.filter(col("voided") === 1)
         .select("person_id").join(purgedLog, Seq("person_id"), "left_anti")
@@ -202,9 +197,9 @@ object PipelineBench {
         go(df.queryExecution.executedPlan).toDouble
       }
       val fullQueue = graft.etl.FlatObs.touchedPersons(
-        obsP, encP, person, graft.etl.Horizons.at(t2), Some(existingFo))
+        obsP, encP, person, graft.etl.Horizons.at(t2), purgeSet = Some(purgeFromLog))
       val feedQueue = graft.etl.FlatObs.touchedPersons(obsP, encP, person,
-        graft.etl.Horizons.at(t2), None,
+        graft.etl.Horizons.at(t2),
         Some(ChangeFeed.readSince(spark, s"$srcDir/feed/obs", t1)),
         Some(ChangeFeed.readSince(spark, s"$srcDir/feed/encounter", t1)),
         Some(purgeFromLog))

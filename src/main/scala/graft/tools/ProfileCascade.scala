@@ -7,22 +7,20 @@ import org.apache.spark.sql.functions._
   * seconds go, and does the per-batch merge cost grow with accumulated
   * history? Two source regimes:
   *
-  *  - `tpch`: the q94/q125 oracle fixture (every batch touches ~half the
-  *    persons — a bulk-backfill shape; the bucketed sink cannot beat a
-  *    rewrite when the delta IS the table, so this mode mainly shows the
-  *    snapshot shape's history-proportional growth);
+  *  - `tpch`: the q125 oracle fixture and arrival schedule (every batch
+  *    touches a large share of the persons — a bulk-backfill shape; the
+  *    bucketed sink cannot beat a rewrite when the delta IS the table);
   *  - `clinic` (default): BenchFixtures' steady-state regime — ~2% of
   *    persons active per window, the tick bench's honest O(delta)
   *    setting — one bulk load then three 10-day delta arrivals, where
-  *    the bucketed cascade's per-batch cost should sit ~flat and far
-  *    below the snapshot shape's.
+  *    the cascade's per-batch cost should sit ~flat.
   *
   * Per batch it prints wall seconds, the per-stage cascadeTiming lines,
   * and bytes WRITTEN under the pipeline root (the scale-stable form of
   * the O(delta)-vs-O(table) claim at toy scale, as in PipelineBench).
   *
   * Usage:
-  *   runMain graft.tools.ProfileCascade [clinic|tpch] [snapshot|bucketed|both]
+  *   runMain graft.tools.ProfileCascade [clinic|tpch]
   *   env: SPARK_GRAFT_SF_DIR (tpch), SPARK_GRAFT_TICK_PERSONS (clinic),
   *        SPARK_GRAFT_CPUS
   */
@@ -43,11 +41,6 @@ object ProfileCascade {
 
   def main(args: Array[String]): Unit = {
     val regime = args.headOption.getOrElse("clinic")
-    val shapes = (if (args.length > 1) args(1) else "both") match {
-      case "snapshot" => Seq(0)
-      case "bucketed" => Seq(-1) // resolved per regime below
-      case _ => Seq(0, -1)
-    }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -58,30 +51,27 @@ object ProfileCascade {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     spark.conf.set("graft.debug.cascadeTiming", "true")
-    if (regime == "tpch") tpch(spark, shapes) else clinic(spark, shapes)
+    if (regime == "tpch") tpch(spark) else clinic(spark)
     spark.stop()
   }
 
-  private def tpch(spark: SparkSession, shapes: Seq[Int]): Unit = {
+  private def tpch(spark: SparkSession): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cuts = graft.queries.EtlPipelineQueries.BucketedCascadeCuts
     graft.queries.EtlPipelineQueries.preparedChunks(spark, sfDir, cuts)
-    shapes.map(b => if (b < 0) 128 else b).foreach { buckets =>
-      val label = if (buckets == 0) "snapshot" else s"bucketed($buckets)"
-      println(s"---- tpch / $label ----")
-      val t0 = System.nanoTime()
-      graft.queries.EtlPipelineQueries.streamedCascade(spark, sfDir, buckets, cuts)
-      println(f"$label total ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-    }
+    println("---- tpch ----")
+    val t0 = System.nanoTime()
+    graft.queries.EtlPipelineQueries.streamedCascade(spark, sfDir, cuts)
+    println(f"total ${(System.nanoTime() - t0) / 1e9}%6.2f s")
   }
 
   /** The steady-state regime: chunk 0 = the day-60 snapshot, then three
     * 10-day version deltas (new rows + void versions), each a separate
     * micro-batch. Source contract matches IncrementalEtlStream: a void
     * arrives as a NEW version of the same obs_id with voided=1. */
-  private def clinic(spark: SparkSession, shapes: Seq[Int]): Unit = {
+  private def clinic(spark: SparkSession): Unit = {
     val nPersons = sys.env.getOrElse("SPARK_GRAFT_TICK_PERSONS", "2000").toInt
-    val buckets0 = sys.env.getOrElse("SPARK_GRAFT_TICK_BUCKETS",
+    val buckets = sys.env.getOrElse("SPARK_GRAFT_TICK_BUCKETS",
       math.max(64, nPersons / 5).toString).toInt
     val src = BenchFixtures.sources(spark, nPersons)
     val days = Seq(60, 70, 80, 90)
@@ -101,38 +91,34 @@ object ProfileCascade {
     }
     val person = src("person")
     val orders = BenchFixtures.ordersAsOf(src("orders"), BenchFixtures.asOf(60))
-    shapes.map(b => if (b < 0) buckets0 else b).foreach { buckets =>
-      val label = if (buckets == 0) "snapshot" else s"bucketed($buckets)"
-      println(s"---- clinic($nPersons persons) / $label ----")
-      val root = java.nio.file.Files.createTempDirectory("graft-profcasc")
-      val obsDir = root.resolve("obs")
-      val tables = root.resolve("tables")
-      val pipe = new graft.etl.Pipeline(spark, tables.toString,
-        if (buckets > 0) Some(buckets) else None)
-      days.indices.foreach { i =>
-        graft.queries.EtlPipelineQueries.copyDir(chunkRoot.resolve(s"chunk_$i"), obsDir.resolve(s"chunk_$i"))
-        val enc = BenchFixtures.encAsOf(src("encounter"), BenchFixtures.asOf(days(i)))
-        val wall0 = System.currentTimeMillis()
-        val t0 = System.nanoTime()
-        val b0 = graft.streaming.IncrementalEtlStream.fsBytesRead
-        graft.streaming.IncrementalEtlStream.runCascadeOnce(
-          spark, obsDir.toString, enc, orders, person, pipe,
-          root.resolve("ckpt").toString)
-        val secs = (System.nanoTime() - t0) / 1e9
-        val opened = graft.streaming.IncrementalEtlStream.fsBytesRead - b0
-        println(f"batch $i%d  ${secs}%6.2f s   wrote ${bytesSince(tables, wall0) / 1024}%8d KiB" +
-          f"   opened ${opened / 1024}%8d KiB")
-        // post-backfill compaction recipe (SCALE.md): the bulk batch
-        // defers its version-log layout (a backfill's own bucketing buys
-        // no prune); folding it eagerly here keeps the FIRST steady tick
-        // delta-sized instead of paying the fold inline. Timed as its
-        // own line — it is operator-scheduled work, not tick work.
-        if (i == 0 && buckets > 0) {
-          val f0 = System.nanoTime()
-          graft.sources.BucketedLog.fold(spark, pipe.versionLogPath,
-            "person_id", buckets, graft.etl.Schemas.obs)
-          println(f"post-backfill fold  ${(System.nanoTime() - f0) / 1e9}%6.2f s")
-        }
+    println(s"---- clinic($nPersons persons) / $buckets buckets ----")
+    val root = java.nio.file.Files.createTempDirectory("graft-profcasc")
+    val obsDir = root.resolve("obs")
+    val tables = root.resolve("tables")
+    val pipe = new graft.etl.Pipeline(spark, tables.toString, Some(buckets))
+    days.indices.foreach { i =>
+      graft.queries.EtlPipelineQueries.copyDir(chunkRoot.resolve(s"chunk_$i"), obsDir.resolve(s"chunk_$i"))
+      val enc = BenchFixtures.encAsOf(src("encounter"), BenchFixtures.asOf(days(i)))
+      val wall0 = System.currentTimeMillis()
+      val t0 = System.nanoTime()
+      val b0 = graft.streaming.IncrementalEtlStream.fsBytesRead
+      graft.streaming.IncrementalEtlStream.runCascadeOnce(
+        spark, obsDir.toString, enc, orders, person, pipe,
+        root.resolve("ckpt").toString)
+      val secs = (System.nanoTime() - t0) / 1e9
+      val opened = graft.streaming.IncrementalEtlStream.fsBytesRead - b0
+      println(f"batch $i%d  ${secs}%6.2f s   wrote ${bytesSince(tables, wall0) / 1024}%8d KiB" +
+        f"   opened ${opened / 1024}%8d KiB")
+      // post-backfill compaction recipe (SCALE.md): the bulk batch
+      // defers its version-log layout (a backfill's own bucketing buys
+      // no prune); folding it eagerly here keeps the FIRST steady tick
+      // delta-sized instead of paying the fold inline. Timed as its
+      // own line — it is operator-scheduled work, not tick work.
+      if (i == 0) {
+        val f0 = System.nanoTime()
+        graft.sources.BucketedLog.fold(spark, pipe.versionLogPath,
+          "person_id", buckets, graft.etl.Schemas.obs)
+        println(f"post-backfill fold  ${(System.nanoTime() - f0) / 1e9}%6.2f s")
       }
     }
   }

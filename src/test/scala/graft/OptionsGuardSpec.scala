@@ -15,7 +15,6 @@ class OptionsGuardSpec extends AnyFunSuite {
   private val scanned = Seq("etl", "streaming", "operators", "sources", "functions")
 
   private val allowed = Set(
-    "graft.sink.buckets", // bucketed sink layout (Pipeline)
     "graft.skew.obsAggSaltBuckets", // salted obs-map aggregation (FlatObs)
     "SPARK_GRAFT_CPUS", // RunPipeline's local master
     // env-gated println timers, to be replaced by per-stage run records

@@ -26,56 +26,45 @@ class ChangeFeedSpec extends SparkSuite {
   private val tables = Seq("flat_obs", "flat_orders", "flat_lab_obs",
     "flat_visit_summary", "flat_latest_hiv_summary")
 
-  private def withBuckets[A](n: Int)(body: => A): A = {
-    val prev = spark.conf.getOption("graft.sink.buckets")
-    spark.conf.set("graft.sink.buckets", n.toString)
-    try body finally prev match {
-      case Some(v) => spark.conf.set("graft.sink.buckets", v)
-      case None => spark.conf.unset("graft.sink.buckets")
-    }
-  }
-
   test("delta-feed tick is byte-equivalent to the full-scan tick") {
-    withBuckets(16) {
-      val src = BenchFixtures.sources(spark, 300)
-      val t1 = BenchFixtures.asOf(60)
-      val t2 = BenchFixtures.asOf(90)
-      def views(t: Timestamp) = (
-        BenchFixtures.obsAsOf(src("obs"), t).cache(),
-        BenchFixtures.encAsOf(src("encounter"), t).cache(),
-        BenchFixtures.ordersAsOf(src("orders"), t).cache(),
-        src("person").cache())
-      val (obs1, enc1, ord1, person) = views(t1)
-      val (obs2, enc2, ord2, _) = views(t2)
+    val src = BenchFixtures.sources(spark, 300)
+    val t1 = BenchFixtures.asOf(60)
+    val t2 = BenchFixtures.asOf(90)
+    def views(t: Timestamp) = (
+      BenchFixtures.obsAsOf(src("obs"), t).cache(),
+      BenchFixtures.encAsOf(src("encounter"), t).cache(),
+      BenchFixtures.ordersAsOf(src("orders"), t).cache(),
+      src("person").cache())
+    val (obs1, enc1, ord1, person) = views(t1)
+    val (obs2, enc2, ord2, _) = views(t2)
 
-      val work = java.nio.file.Files.createTempDirectory("graft-feed").toString
-      val pipeA = new Pipeline(spark, s"$work/a")
-      val pipeB = new Pipeline(spark, s"$work/b")
-      pipeA.tick(obs1, enc1, ord1, person)
-      pipeB.tick(obs1, enc1, ord1, person)
+    val work = java.nio.file.Files.createTempDirectory("graft-feed").toString
+    val pipeA = new Pipeline(spark, s"$work/a", Some(16))
+    val pipeB = new Pipeline(spark, s"$work/b", Some(16))
+    pipeA.tick(obs1, enc1, ord1, person)
+    pipeB.tick(obs1, enc1, ord1, person)
 
-      // bootstrap date-partitioned CDC exports from the t2 snapshot and
-      // read back only days newer than t1 — the partition-pruned feed
-      ChangeFeed.append(obs2, s"$work/feed/obs",
-        Seq("date_created", "date_voided"))
-      ChangeFeed.append(enc2, s"$work/feed/encounter",
-        Seq("date_created", "date_changed"))
-      ChangeFeed.append(ord2, s"$work/feed/orders",
-        Seq("date_created", "date_voided"))
-      val deltas = SourceDeltas(
-        obs = Some(ChangeFeed.readSince(spark, s"$work/feed/obs", t1)),
-        encounter = Some(ChangeFeed.readSince(spark, s"$work/feed/encounter", t1)),
-        orders = Some(ChangeFeed.readSince(spark, s"$work/feed/orders", t1)))
+    // bootstrap date-partitioned CDC exports from the t2 snapshot and
+    // read back only days newer than t1 — the partition-pruned feed
+    ChangeFeed.append(obs2, s"$work/feed/obs",
+      Seq("date_created", "date_voided"))
+    ChangeFeed.append(enc2, s"$work/feed/encounter",
+      Seq("date_created", "date_changed"))
+    ChangeFeed.append(ord2, s"$work/feed/orders",
+      Seq("date_created", "date_voided"))
+    val deltas = SourceDeltas(
+      obs = Some(ChangeFeed.readSince(spark, s"$work/feed/obs", t1)),
+      encounter = Some(ChangeFeed.readSince(spark, s"$work/feed/encounter", t1)),
+      orders = Some(ChangeFeed.readSince(spark, s"$work/feed/orders", t1)))
 
-      pipeA.tick(obs2, enc2, ord2, person)
-      pipeB.tick(obs2, enc2, ord2, person, deltas)
+    pipeA.tick(obs2, enc2, ord2, person)
+    pipeB.tick(obs2, enc2, ord2, person, deltas)
 
-      tables.foreach { t =>
-        assert(signature(pipeA.readFlat(t).get) == signature(pipeB.readFlat(t).get),
-          s"feed-driven $t diverged from the full-scan tick")
-      }
-      Seq(obs1, enc1, ord1, obs2, enc2, ord2, person).foreach(_.unpersist())
+    tables.foreach { t =>
+      assert(signature(pipeA.readFlat(t).get) == signature(pipeB.readFlat(t).get),
+        s"feed-driven $t diverged from the full-scan tick")
     }
+    Seq(obs1, enc1, ord1, obs2, enc2, ord2, person).foreach(_.unpersist())
   }
 
   test("readSince opens only partitions newer than the watermark") {
@@ -109,150 +98,146 @@ class ChangeFeedSpec extends SparkSuite {
   }
 
   test("purged-persons log: purge once, survive the unvoid/re-void cycle") {
-    withBuckets(4) {
-      def ts(s: String) = Timestamp.valueOf(s)
-      def obsRow(id: Int, p: Int, e: Int, created: String): Row =
-        Row(id, p, Integer.valueOf(e), 1836, ts("2015-01-01 09:00:00"),
-          Integer.valueOf(1065), null, null, null, null, null, null,
-          ts(created), Integer.valueOf(0), null)
-      def mkObs(rows: Seq[Row]) =
-        spark.createDataFrame(sc.parallelize(rows, 1), Schemas.obs)
-      val encounter = spark.createDataFrame(sc.parallelize(Seq(
-        Row(100, 1, 500, ts("2015-01-01 09:00:00"), 21, 1,
-          ts("2015-01-01 09:30:00"), null, 0),
-        Row(101, 2, 501, ts("2015-01-01 09:00:00"), 21, 1,
-          ts("2015-01-01 09:30:00"), null, 0)), 1), Schemas.encounter)
-      val orders = spark.createDataFrame(
-        sc.parallelize(Seq(Row(1, 1, Integer.valueOf(100), 1000,
-          ts("2015-01-01 10:00:00"), 0, null)), 1), Schemas.orders)
-      def person(p2Voided: Int) = spark.createDataFrame(sc.parallelize(Seq(
-        Row(1, "u1", 0), Row(2, "u2", p2Voided)), 1), Schemas.person)
+    def ts(s: String) = Timestamp.valueOf(s)
+    def obsRow(id: Int, p: Int, e: Int, created: String): Row =
+      Row(id, p, Integer.valueOf(e), 1836, ts("2015-01-01 09:00:00"),
+        Integer.valueOf(1065), null, null, null, null, null, null,
+        ts(created), Integer.valueOf(0), null)
+    def mkObs(rows: Seq[Row]) =
+      spark.createDataFrame(sc.parallelize(rows, 1), Schemas.obs)
+    val encounter = spark.createDataFrame(sc.parallelize(Seq(
+      Row(100, 1, 500, ts("2015-01-01 09:00:00"), 21, 1,
+        ts("2015-01-01 09:30:00"), null, 0),
+      Row(101, 2, 501, ts("2015-01-01 09:00:00"), 21, 1,
+        ts("2015-01-01 09:30:00"), null, 0)), 1), Schemas.encounter)
+    val orders = spark.createDataFrame(
+      sc.parallelize(Seq(Row(1, 1, Integer.valueOf(100), 1000,
+        ts("2015-01-01 10:00:00"), 0, null)), 1), Schemas.orders)
+    def person(p2Voided: Int) = spark.createDataFrame(sc.parallelize(Seq(
+      Row(1, "u1", 0), Row(2, "u2", p2Voided)), 1), Schemas.person)
 
-      // a lab-panel row (concept 856) keeps flat_lab_obs non-empty
-      def labRow(id: Int, p: Int, e: Int, created: String): Row =
-        Row(id, p, Integer.valueOf(e), 856, ts("2015-01-01 09:00:00"),
-          null, java.lang.Double.valueOf(1234.0), null, null, null, null,
-          null, ts(created), Integer.valueOf(0), null)
-      val obs0 = mkObs(Seq(
-        obsRow(1, 1, 100, "2015-01-01 12:00:00"),
-        obsRow(2, 2, 101, "2015-01-01 12:00:00"),
-        labRow(9, 1, 100, "2015-01-01 12:00:00")))
-      val work = java.nio.file.Files.createTempDirectory("graft-purge").toString
-      val pipe = new Pipeline(spark, work)
+    // a lab-panel row (concept 856) keeps flat_lab_obs non-empty
+    def labRow(id: Int, p: Int, e: Int, created: String): Row =
+      Row(id, p, Integer.valueOf(e), 856, ts("2015-01-01 09:00:00"),
+        null, java.lang.Double.valueOf(1234.0), null, null, null, null,
+        null, ts(created), Integer.valueOf(0), null)
+    val obs0 = mkObs(Seq(
+      obsRow(1, 1, 100, "2015-01-01 12:00:00"),
+      obsRow(2, 2, 101, "2015-01-01 12:00:00"),
+      labRow(9, 1, 100, "2015-01-01 12:00:00")))
+    val work = java.nio.file.Files.createTempDirectory("graft-purge").toString
+    val pipe = new Pipeline(spark, work, Some(4))
 
-      def p2Rows: Long =
-        pipe.readFlat("flat_obs").get.filter(col("person_id") === 2).count()
-      def logPersons: Set[Int] =
-        pipe.readFlat("purged_persons").map(
-          _.collect().map(_.getInt(0)).toSet).getOrElse(Set.empty)
+    def p2Rows: Long =
+      pipe.readFlat("flat_obs").get.filter(col("person_id") === 2).count()
+    def logPersons: Set[Int] =
+      pipe.readFlat("purged_persons").map(
+        _.collect().map(_.getInt(0)).toSet).getOrElse(Set.empty)
 
-      pipe.tick(obs0, encounter, orders, person(0)) // full build
-      assert(p2Rows == 1 && logPersons.isEmpty)
+    pipe.tick(obs0, encounter, orders, person(0)) // full build
+    assert(p2Rows == 1 && logPersons.isEmpty)
 
-      pipe.tick(obs0, encounter, orders, person(1)) // P2 voided -> purge
-      assert(p2Rows == 0 && logPersons == Set(2))
+    pipe.tick(obs0, encounter, orders, person(1)) // P2 voided -> purge
+    assert(p2Rows == 0 && logPersons == Set(2))
 
-      pipe.tick(obs0, encounter, orders, person(1)) // steady: no re-touch
-      assert(p2Rows == 0 && logPersons == Set(2),
-        "an already-purged person must stay in the log untouched")
-      assert(!pipe.lastTickProbed,
-        "steady tick under an intact consistency marker must skip the probe")
-      assert(pipe.lastTickShortCircuited, "nothing new and nobody left to purge")
+    pipe.tick(obs0, encounter, orders, person(1)) // steady: no re-touch
+    assert(p2Rows == 0 && logPersons == Set(2),
+      "an already-purged person must stay in the log untouched")
+    assert(!pipe.lastTickProbed,
+      "steady tick under an intact consistency marker must skip the probe")
+    assert(pipe.lastTickShortCircuited, "nothing new and nobody left to purge")
 
-      // a still-voided P2 gains an obs: the stages queue and rebuild them
-      // to nothing, so their log entry stays proof of absence and the
-      // next tick has nobody to purge
-      val obs0b = mkObs(Seq(
-        obsRow(1, 1, 100, "2015-01-01 12:00:00"),
-        obsRow(2, 2, 101, "2015-01-01 12:00:00"),
-        labRow(9, 1, 100, "2015-01-01 12:00:00"),
-        obsRow(5, 2, 101, "2015-01-05 12:00:00")))
-      pipe.tick(obs0b, encounter, orders, person(1))
-      assert(p2Rows == 0 && logPersons == Set(2),
-        "a queued person who is still voided must keep their log entry")
-      pipe.tick(obs0b, encounter, orders, person(1))
-      assert(pipe.lastTickShortCircuited)
+    // a still-voided P2 gains an obs: the stages queue and rebuild them
+    // to nothing, so their log entry stays proof of absence and the
+    // next tick has nobody to purge
+    val obs0b = mkObs(Seq(
+      obsRow(1, 1, 100, "2015-01-01 12:00:00"),
+      obsRow(2, 2, 101, "2015-01-01 12:00:00"),
+      labRow(9, 1, 100, "2015-01-01 12:00:00"),
+      obsRow(5, 2, 101, "2015-01-05 12:00:00")))
+    pipe.tick(obs0b, encounter, orders, person(1))
+    assert(p2Rows == 0 && logPersons == Set(2),
+      "a queued person who is still voided must keep their log entry")
+    pipe.tick(obs0b, encounter, orders, person(1))
+    assert(pipe.lastTickShortCircuited)
 
-      // unvoid P2 WITH a new obs: the delta queues them, rows come back,
-      // and the log entry (no longer proof of absence) is dropped
-      val obs1 = mkObs(Seq(
-        obsRow(1, 1, 100, "2015-01-01 12:00:00"),
-        obsRow(2, 2, 101, "2015-01-01 12:00:00"),
-        labRow(9, 1, 100, "2015-01-01 12:00:00"),
-        obsRow(3, 2, 101, "2015-01-10 12:00:00")))
-      pipe.tick(obs1, encounter, orders, person(0))
-      assert(p2Rows == 1 && logPersons.isEmpty)
-      assert(!pipe.lastTickProbed,
-        "the marker a short-circuited tick signs in the driver must match the re-read log")
+    // unvoid P2 WITH a new obs: the delta queues them, rows come back,
+    // and the log entry (no longer proof of absence) is dropped
+    val obs1 = mkObs(Seq(
+      obsRow(1, 1, 100, "2015-01-01 12:00:00"),
+      obsRow(2, 2, 101, "2015-01-01 12:00:00"),
+      labRow(9, 1, 100, "2015-01-01 12:00:00"),
+      obsRow(3, 2, 101, "2015-01-10 12:00:00")))
+    pipe.tick(obs1, encounter, orders, person(0))
+    assert(p2Rows == 1 && logPersons.isEmpty)
+    assert(!pipe.lastTickProbed,
+      "the marker a short-circuited tick signs in the driver must match the re-read log")
 
-      pipe.tick(obs1, encounter, orders, person(1)) // re-void -> purge again
-      assert(p2Rows == 0 && logPersons == Set(2))
+    pipe.tick(obs1, encounter, orders, person(1)) // re-void -> purge again
+    assert(p2Rows == 0 && logPersons == Set(2))
 
-      // CRASH RECOVERY: the log is committed after the stage writes, so a
-      // tick that re-queued a logged person (unvoid + new data, rows
-      // rematerialized) and died before the log rewrite leaves a STALE
-      // absence entry. Simulate it: rematerialize P2's rows, then put the
-      // old log (still claiming P2 absent) back — the next re-void tick's
-      // presence probe must detect the lie and purge anyway.
-      val obs2 = mkObs(Seq(
-        obsRow(1, 1, 100, "2015-01-01 12:00:00"),
-        obsRow(2, 2, 101, "2015-01-01 12:00:00"),
-        labRow(9, 1, 100, "2015-01-01 12:00:00"),
-        obsRow(3, 2, 101, "2015-01-10 12:00:00"),
-        obsRow(4, 2, 101, "2015-01-20 12:00:00")))
-      pipe.tick(obs2, encounter, orders, person(0)) // unvoid + new obs: rows back
-      assert(p2Rows == 1 && logPersons.isEmpty)
-      import spark.implicits._
-      pipe.writeSnapshot(Seq(2).toDF("person_id"), "purged_persons")
-      assert(logPersons == Set(2) && p2Rows == 1) // the stale state
-      pipe.tick(obs2, encounter, orders, person(1)) // re-void under a stale log
-      assert(pipe.lastTickProbed,
-        "out-of-band purged-log write must void the marker and force the probe")
-      assert(p2Rows == 0,
-        "stale log entry shielded a re-voided person from the purge")
-      assert(logPersons == Set(2))
-    }
+    // CRASH RECOVERY: the log is committed after the stage writes, so a
+    // tick that re-queued a logged person (unvoid + new data, rows
+    // rematerialized) and died before the log rewrite leaves a STALE
+    // absence entry. Simulate it: rematerialize P2's rows, then put the
+    // old log (still claiming P2 absent) back — the next re-void tick's
+    // presence probe must detect the lie and purge anyway.
+    val obs2 = mkObs(Seq(
+      obsRow(1, 1, 100, "2015-01-01 12:00:00"),
+      obsRow(2, 2, 101, "2015-01-01 12:00:00"),
+      labRow(9, 1, 100, "2015-01-01 12:00:00"),
+      obsRow(3, 2, 101, "2015-01-10 12:00:00"),
+      obsRow(4, 2, 101, "2015-01-20 12:00:00")))
+    pipe.tick(obs2, encounter, orders, person(0)) // unvoid + new obs: rows back
+    assert(p2Rows == 1 && logPersons.isEmpty)
+    import spark.implicits._
+    pipe.writeSnapshot(Seq(2).toDF("person_id"), "purged_persons")
+    assert(logPersons == Set(2) && p2Rows == 1) // the stale state
+    pipe.tick(obs2, encounter, orders, person(1)) // re-void under a stale log
+    assert(pipe.lastTickProbed,
+      "out-of-band purged-log write must void the marker and force the probe")
+    assert(p2Rows == 0,
+      "stale log entry shielded a re-voided person from the purge")
+    assert(logPersons == Set(2))
   }
 
   test("no-change short-circuit: its marker matches the re-read log; a dropped marker reopens the crash window") {
-    withBuckets(8) {
-      // 300 persons: enough for the fixture's delta-window changes
-      val src = BenchFixtures.sources(spark, 300)
-      def views(day: Int) = {
-        val t = BenchFixtures.asOf(day)
-        (BenchFixtures.obsAsOf(src("obs"), t).cache(),
-          BenchFixtures.encAsOf(src("encounter"), t).cache(),
-          BenchFixtures.ordersAsOf(src("orders"), t).cache())
-      }
-      val person = src("person").cache()
-      val (obs1, enc1, ord1) = views(60)
-      val (obs2, enc2, ord2) = views(90)
-      val work = java.nio.file.Files.createTempDirectory("graft-quiet-marker").toString
-      val pipe = new Pipeline(spark, work)
-      def marker: String = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(work, "purged_persons", "_CONSISTENT")), "UTF-8")
-      def signature: String =
-        graft.operators.Watermark.signature(
-          graft.operators.Watermark.collectLog(spark, s"$work/flat_log"))
-
-      pipe.tick(obs1, enc1, ord1, person)
-      pipe.tick(obs1, enc1, ord1, person)
-      assert(pipe.lastTickShortCircuited)
-      assert(marker == signature, "driver-computed signature differs from the re-read log's")
-
-      pipe.tick(obs2, enc2, ord2, person) // a delta after the short-circuit
-      assert(!pipe.lastTickShortCircuited && !pipe.lastTickProbed)
-      assert(TickChecks.diverged(pipe, obs2, enc2, ord2, person).isEmpty)
-
-      // a crash between a tick's log append and its marker write
-      pipe.dropMarker()
-      pipe.tick(obs2, enc2, ord2, person)
-      assert(!pipe.lastTickShortCircuited, "an open crash window must not short-circuit")
-      assert(pipe.lastTickProbed, "an open crash window must run the presence probe")
-      assert(TickChecks.diverged(pipe, obs2, enc2, ord2, person).isEmpty)
-      pipe.tick(obs2, enc2, ord2, person)
-      assert(pipe.lastTickShortCircuited, "the healed root is quiet again")
-      Seq(obs1, enc1, ord1, obs2, enc2, ord2, person).foreach(_.unpersist())
+    // 300 persons: enough for the fixture's delta-window changes
+    val src = BenchFixtures.sources(spark, 300)
+    def views(day: Int) = {
+      val t = BenchFixtures.asOf(day)
+      (BenchFixtures.obsAsOf(src("obs"), t).cache(),
+        BenchFixtures.encAsOf(src("encounter"), t).cache(),
+        BenchFixtures.ordersAsOf(src("orders"), t).cache())
     }
+    val person = src("person").cache()
+    val (obs1, enc1, ord1) = views(60)
+    val (obs2, enc2, ord2) = views(90)
+    val work = java.nio.file.Files.createTempDirectory("graft-quiet-marker").toString
+    val pipe = new Pipeline(spark, work, Some(8))
+    def marker: String = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(work, "purged_persons", "_CONSISTENT")), "UTF-8")
+    def signature: String =
+      graft.operators.Watermark.signature(
+        graft.operators.Watermark.collectLog(spark, s"$work/flat_log"))
+
+    pipe.tick(obs1, enc1, ord1, person)
+    pipe.tick(obs1, enc1, ord1, person)
+    assert(pipe.lastTickShortCircuited)
+    assert(marker == signature, "driver-computed signature differs from the re-read log's")
+
+    pipe.tick(obs2, enc2, ord2, person) // a delta after the short-circuit
+    assert(!pipe.lastTickShortCircuited && !pipe.lastTickProbed)
+    assert(TickChecks.diverged(pipe, obs2, enc2, ord2, person).isEmpty)
+
+    // a crash between a tick's log append and its marker write
+    pipe.dropMarker()
+    pipe.tick(obs2, enc2, ord2, person)
+    assert(!pipe.lastTickShortCircuited, "an open crash window must not short-circuit")
+    assert(pipe.lastTickProbed, "an open crash window must run the presence probe")
+    assert(TickChecks.diverged(pipe, obs2, enc2, ord2, person).isEmpty)
+    pipe.tick(obs2, enc2, ord2, person)
+    assert(pipe.lastTickShortCircuited, "the healed root is quiet again")
+    Seq(obs1, enc1, ord1, obs2, enc2, ord2, person).foreach(_.unpersist())
   }
 }

@@ -208,7 +208,7 @@ class IncrementalEquivalenceSpec extends SparkSuite {
     assert(row.getAs[Timestamp]("max_date_created") == d2)
   }
 
-  test("flat_obs holds exactly the Schemas.flatObs columns after snapshot, bucketed and cascade writes") {
+  test("flat_obs holds exactly the Schemas.flatObs columns after default-count, 8-bucket and cascade writes") {
     val fx = OpenMrsFixture.generate(spark, nPersons = 12, seed = 5L)
     val (obs, enc, orders, person) =
       (fx("obs").cache(), fx("encounter").cache(), fx("orders").cache(), fx("person"))
@@ -218,8 +218,9 @@ class IncrementalEquivalenceSpec extends SparkSuite {
       p.readFlat("flat_obs").get.schema.fieldNames.toSeq
     val work = java.nio.file.Files.createTempDirectory("graft-schema-pin")
 
-    // snapshot mode and bucketed mode: a full-build tick, then a delta tick
-    Seq(None -> "snapshot", Some(8) -> "bucketed").foreach { case (buckets, mode) =>
+    // the default bucket count and 8 buckets: a full-build tick, then a
+    // delta tick
+    Seq(None -> "default", Some(8) -> "8-bucket").foreach { case (buckets, mode) =>
       val pipe = new Pipeline(spark, work.resolve(mode).toString, buckets)
       pipe.tick(obsAsOf(obs, t1), encAsOf(enc, t1), ordersAsOf(orders, t1), person)
       assert(fieldsOf(pipe) == want, s"$mode full tick")
@@ -255,6 +256,11 @@ class IncrementalEquivalenceSpec extends SparkSuite {
     assert(sortedRows(pipe.readFlat("flat_visit_summary").get) == first)
     assert(sortedRows(pipe.readFlat("flat_latest_hiv_summary").get) == latest1)
     assertTwoRunsPerStage(pipe, dir)
+    // without a bucket count every table is written with the 64 floor
+    TickChecks.Tables.foreach { t =>
+      val manifest = java.nio.file.Paths.get(dir, t, "buckets", "_MANIFEST")
+      assert(java.nio.file.Files.readAllLines(manifest).get(0) == "#buckets\t64", t)
+    }
   }
 
   /** The run log holds exactly two rows under each stage version. */

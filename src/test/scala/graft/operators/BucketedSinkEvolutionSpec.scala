@@ -15,7 +15,7 @@ class BucketedSinkEvolutionSpec extends SparkSuite {
 
   private def manifest(path: String): Map[Int, String] = {
     val src = scala.io.Source.fromFile(s"$path/_MANIFEST")
-    try src.getLines().filter(_.nonEmpty).map { l =>
+    try src.getLines().filter(_.nonEmpty).filterNot(_.startsWith("#")).map { l =>
       val Array(b, e) = l.split("\t"); b.toInt -> e
     }.toMap finally src.close()
   }
@@ -145,40 +145,37 @@ class BucketedSinkEvolutionSpec extends SparkSuite {
       df.orderBy(df.columns.map(col): _*).collect().map(_.toString).toSeq
     val dirA = java.nio.file.Files.createTempDirectory("graft-evo-a").toString
     val dirB = java.nio.file.Files.createTempDirectory("graft-evo-b").toString
-    try {
-      spark.conf.set("graft.sink.buckets", "8")
-      val pipeA = new Pipeline(spark, dirA)
-      pipeA.tick(obs, enc, orders, person)
-      pipeA.tick(obs, enc, orders, person)
-      val expected = rows(pipeA.readFlat("flat_obs").get)
+    val pipeA = new Pipeline(spark, dirA, Some(8))
+    pipeA.tick(obs, enc, orders, person)
+    pipeA.tick(obs, enc, orders, person)
+    val expected = rows(pipeA.readFlat("flat_obs").get)
 
-      val pipeB = new Pipeline(spark, dirB)
-      pipeB.tick(obs, enc, orders, person)
-      // out-of-band add-column evolution between ticks: an annotation
-      // column lands on one person's bucket (through the sink directly,
-      // so the consistency-marker contract applies: drop it, as the
-      // BucketedSink.writeFull invariant requires of direct writers)
-      val tablePath = s"$dirB/flat_obs/buckets"
-      val cur = BucketedSink.read(spark, tablePath)
-      val one = cur.limit(1).select(col("person_id")).collect()(0).getInt(0)
-      val touched = BucketedSink.collectBuckets(
-        cur.filter(col("person_id") === one).select("person_id"), 8)
-      val evolved = BucketedSink.readBuckets(spark, tablePath, touched)
-        .withColumn("annotation",
-          when(col("person_id") === one, lit("flagged")))
-      BucketedSink.overwriteChanged(evolved, tablePath, "person_id", 8, touched, 16)
-      pipeB.dropMarker()
-      assert(BucketedSink.read(spark, tablePath).columns.contains("annotation"))
+    val pipeB = new Pipeline(spark, dirB, Some(8))
+    pipeB.tick(obs, enc, orders, person)
+    // out-of-band add-column evolution between ticks: an annotation
+    // column lands on one person's bucket (through the sink directly,
+    // so the consistency-marker contract applies: drop it, as the
+    // BucketedSink.writeFull invariant requires of direct writers)
+    val tablePath = s"$dirB/flat_obs/buckets"
+    val cur = BucketedSink.read(spark, tablePath)
+    val one = cur.limit(1).select(col("person_id")).collect()(0).getInt(0)
+    val touched = BucketedSink.collectBuckets(
+      cur.filter(col("person_id") === one).select("person_id"), 8)
+    val evolved = BucketedSink.readBuckets(spark, tablePath, touched)
+      .withColumn("annotation",
+        when(col("person_id") === one, lit("flagged")))
+    BucketedSink.overwriteChanged(evolved, tablePath, "person_id", 8, touched, 16)
+    pipeB.dropMarker()
+    assert(BucketedSink.read(spark, tablePath).columns.contains("annotation"))
 
-      // the next tick (whose stage code predates the column) must run
-      // and land on the same rows as the never-evolved pipeline
-      pipeB.tick(obs, enc, orders, person)
-      val after = pipeB.readFlat("flat_obs").get
-      assert(after.columns.contains("annotation"),
-        "the evolved column survives the tick")
-      assert(rows(after.drop("annotation")) == expected,
-        "original columns diverge across the evolution boundary")
-    } finally spark.conf.unset("graft.sink.buckets")
+    // the next tick (whose stage code predates the column) must run
+    // and land on the same rows as the never-evolved pipeline
+    pipeB.tick(obs, enc, orders, person)
+    val after = pipeB.readFlat("flat_obs").get
+    assert(after.columns.contains("annotation"),
+      "the evolved column survives the tick")
+    assert(rows(after.drop("annotation")) == expected,
+      "original columns diverge across the evolution boundary")
   }
 
   test("flat_obs written with the retired obs_entries map column ticks on and matches a rebuild") {

@@ -39,7 +39,7 @@ class BucketedSinkPropertySpec extends SparkSuite {
         .toDF("person_id", "k", "v")
       def manifest(): Map[Int, String] = {
         val src = scala.io.Source.fromFile(s"$path/_MANIFEST")
-        try src.getLines().filter(_.nonEmpty)
+        try src.getLines().filter(_.nonEmpty).filterNot(_.startsWith("#"))
           .map { l => val Array(b, e) = l.split("\t"); b.toInt -> e }.toMap
         finally src.close()
       }

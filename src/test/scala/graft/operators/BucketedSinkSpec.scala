@@ -28,7 +28,7 @@ class BucketedSinkSpec extends SparkSuite {
 
   private def manifest(path: String): Map[Int, String] = {
     val src = scala.io.Source.fromFile(s"$path/_MANIFEST")
-    try src.getLines().filter(_.nonEmpty).map { l =>
+    try src.getLines().filter(_.nonEmpty).filterNot(_.startsWith("#")).map { l =>
       val Array(b, e) = l.split("\t"); b.toInt -> e
     }.toMap finally src.close()
   }
@@ -132,7 +132,8 @@ class BucketedSinkSpec extends SparkSuite {
     val path = java.nio.file.Files.createTempDirectory("graft-compact").toString + "/t"
     def epochsReferenced(): Int = {
       val src = scala.io.Source.fromFile(s"$path/_MANIFEST")
-      try src.getLines().filter(_.nonEmpty).map(_.split("\t")(1)).toSet.size
+      try src.getLines().filter(_.nonEmpty).filterNot(_.startsWith("#"))
+        .map(_.split("\t")(1)).toSet.size
       finally src.close()
     }
     var cur = (1 to 100).map(i => (i, "v0")).toDF("person_id", "v")
@@ -200,7 +201,7 @@ class BucketedSinkSpec extends SparkSuite {
     }
   }
 
-  test("pipeline with bucketed flat_obs sink matches the versioned sink") {
+  test("pipeline at 8 buckets matches the default bucket count") {
     import graft.etl.Pipeline
     val fx = OpenMrsFixture.generate(spark, nPersons = 20, seed = 23L)
     val (obs, enc, orders, person) =
@@ -216,18 +217,15 @@ class BucketedSinkSpec extends SparkSuite {
     val expectedSummary = rows(pipeA.readFlat("flat_latest_hiv_summary").get)
 
     val dirB = java.nio.file.Files.createTempDirectory("graft-bkt").toString
-    try {
-      spark.conf.set("graft.sink.buckets", "8")
-      val pipeB = new Pipeline(spark, dirB)
-      pipeB.tick(obs, enc, orders, person) // full write
-      pipeB.tick(obs, enc, orders, person) // idempotent bucket overwrite
-      assert(rows(pipeB.readFlat("flat_obs").get) == expected)
-      assert(rows(pipeB.readFlat("flat_orders").get) ==
-        rows(pipeA.readFlat("flat_orders").get))
-      assert(rows(pipeB.readFlat("flat_lab_obs").get) ==
-        rows(pipeA.readFlat("flat_lab_obs").get))
-      assert(rows(pipeB.readFlat("flat_visit_summary").get) == expectedVisit)
-      assert(rows(pipeB.readFlat("flat_latest_hiv_summary").get) == expectedSummary)
-    } finally spark.conf.unset("graft.sink.buckets")
+    val pipeB = new Pipeline(spark, dirB, Some(8))
+    pipeB.tick(obs, enc, orders, person) // full write
+    pipeB.tick(obs, enc, orders, person) // idempotent bucket overwrite
+    assert(rows(pipeB.readFlat("flat_obs").get) == expected)
+    assert(rows(pipeB.readFlat("flat_orders").get) ==
+      rows(pipeA.readFlat("flat_orders").get))
+    assert(rows(pipeB.readFlat("flat_lab_obs").get) ==
+      rows(pipeA.readFlat("flat_lab_obs").get))
+    assert(rows(pipeB.readFlat("flat_visit_summary").get) == expectedVisit)
+    assert(rows(pipeB.readFlat("flat_latest_hiv_summary").get) == expectedSummary)
   }
 }

@@ -45,14 +45,15 @@ class StreamedCascadeParitySpec extends SparkSuite {
   }
 
   test("streamed deep tables match from-scratch batch builds on the fixture") {
-    deepTableCheck(EtlPipelineQueries.streamedCascade(spark, dir), "snapshot")
+    deepTableCheck(EtlPipelineQueries.streamedCascade(spark, dir,
+      buckets = Some(EtlPipelineQueries.Q94Buckets)), "q94-schedule")
   }
 
   test("BUCKETED streamed cascade: same four deep tables, O(touched) sink") {
     deepTableCheck(
-      EtlPipelineQueries.streamedCascade(spark, dir, buckets = 16,
+      EtlPipelineQueries.streamedCascade(spark, dir,
         cuts = EtlPipelineQueries.BucketedCascadeCuts),
-      "bucketed")
+      "q125-schedule")
   }
 
   private def deepTableCheck(pipe: graft.etl.Pipeline, shape: String): Unit = {
