@@ -2,8 +2,8 @@ package graft.etl
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.functions.{MysqlFunctions, ObsMap}
-import graft.operators.{ReplaceInto, Skew}
+import graft.functions.ObsMap
+import graft.operators.ReplaceInto
 
 /** Stage 1: flatten `openmrs.obs` into one row per encounter (or per
   * (person, obs_datetime) for encounter-less obs groups) with the obs map
@@ -81,67 +81,20 @@ object FlatObs {
       max(col("date_created")).as("max_date_created"))
   }
 
-  /** Salt-bucket count for the obs-map aggregation (SURVEY §4's named skew:
-    * one hot patient with thousands of encounters lands a single reducer).
-    * 0 / absent = single-phase (default); n > 1 = two-phase salted
-    * aggregation through [[Skew.saltedSortedAggs]] — same result, the hot
-    * group spread over n reducers. SaltedObsAggSpec proves equality.
-    */
-  val SaltConfKey = "graft.skew.obsAggSaltBuckets"
-  private def saltBuckets(df: DataFrame): Int =
-    df.sparkSession.conf.getOption(SaltConfKey).map(_.toInt).getOrElse(0)
-
-  /** The sorted entry structs behind both obs-map columns — identical
-    * (orderKeys…, v) shape to what [[MysqlFunctions.groupConcat]] collects,
-    * so the salted two-phase path sorts/merges to the same arrays. */
-  private def obsEntryStructs: Seq[(String, Column)] = {
-    val rendered = renderedValue
-    val vObs = ObsMap.renderEntry(col("concept_id"), rendered)
-    val vDt = when(rendered.isNotNull,
-      ObsMap.renderEntry(col("concept_id"), to_date(col("obs_datetime")).cast("string")))
-    Seq(
-      "__obs" -> struct(col("concept_id").as("k0"), col("value_coded").as("k1"),
-        rendered.as("k2"), vObs.as("v")),
-      "__dt" -> struct(col("concept_id").as("k0"), col("value_coded").as("k1"),
-        rendered.as("k2"), vDt.as("v")))
-  }
-
-  private def joinEntries(df: DataFrame): DataFrame =
-    df.withColumn("obs", when(size(col("__obs")) > 0,
-        array_join(transform(col("__obs"), _.getField("v")), ObsMap.Sep)))
-      .withColumn("obs_datetimes", when(size(col("__dt")) > 0,
-        array_join(transform(col("__dt"), _.getField("v")), ObsMap.Sep)))
-      .drop("__obs", "__dt")
-
   /** Aggregate with-encounter obs rows (already filtered) to flat rows. */
   private def aggWithEncounter(obsRows: DataFrame, encounter: DataFrame): DataFrame = {
     val joined = obsRows
       .filter(col("encounter_id") > 0 && col("voided") === 0)
       .join(encounter.select("encounter_id", "visit_id", "encounter_datetime",
         "encounter_type", "location_id"), Seq("encounter_id"))
-    val n = saltBuckets(obsRows)
-    val agged =
-      if (n > 1)
-        joinEntries(Skew.saltedSortedAggs(
-          joined, Seq("encounter_id"), obsEntryStructs,
-          maxCols = Seq(
-            "person_id" -> col("person_id"),
-            "real_visit_id" -> col("visit_id"),
-            "encounter_datetime" -> col("encounter_datetime"),
-            "encounter_type" -> col("encounter_type"),
-            "location_id" -> col("location_id"),
-            "max_date_created" -> col("date_created")),
-          saltBuckets = n))
-      else
-        joined.groupBy("encounter_id")
-          .agg(
-            max(col("person_id")).as("person_id"),
-            (Seq(
-              max(col("visit_id")).as("real_visit_id"),
-              max(col("encounter_datetime")).as("encounter_datetime"),
-              max(col("encounter_type")).as("encounter_type"),
-              max(col("location_id")).as("location_id")) ++ obsAggs): _*)
-    agged
+    joined.groupBy("encounter_id")
+      .agg(
+        max(col("person_id")).as("person_id"),
+        (Seq(
+          max(col("visit_id")).as("real_visit_id"),
+          max(col("encounter_datetime")).as("encounter_datetime"),
+          max(col("encounter_type")).as("encounter_type"),
+          max(col("location_id")).as("location_id")) ++ obsAggs): _*)
       .withColumn("visit_id",
         coalesce(col("real_visit_id"), (lit(FakeVisitBase) + col("encounter_id")).cast("int")))
       .select("person_id", "visit_id", "encounter_id", "encounter_datetime",
@@ -151,33 +104,20 @@ object FlatObs {
 
   /** Aggregate encounter-less obs rows to flat rows at the
     * (person, obs_datetime) grain (flat_obs_v1.0.sql:157-194). */
-  private def aggEncounterless(obsRows: DataFrame): DataFrame = {
-    val rows = obsRows.filter(col("encounter_id").isNull && col("voided") === 0)
-    val n = saltBuckets(obsRows)
-    val agged =
-      if (n > 1)
-        joinEntries(Skew.saltedSortedAggs(
-          rows, Seq("person_id", "obs_datetime"), obsEntryStructs,
-          maxCols = Seq("max_date_created" -> col("date_created")),
-          saltBuckets = n,
-          minCols = Seq("__min_obs_id" -> col("obs_id"))))
-          .withColumn("encounter_id",
-            (col("__min_obs_id") + lit(SyntheticEncounterBase)).cast("int"))
-          .drop("__min_obs_id")
-      else
-        rows.groupBy("person_id", "obs_datetime")
-          .agg(
-            (min(col("obs_id")) + lit(SyntheticEncounterBase)).cast("int").as("encounter_id"),
-            obsAggs: _*)
-    agged.select(
-      col("person_id"),
-      (lit(FakeVisitBase) + col("encounter_id")).cast("int").as("visit_id"),
-      col("encounter_id"),
-      col("obs_datetime").as("encounter_datetime"),
-      lit(99999).as("encounter_type"),
-      lit(null).cast("int").as("location_id"),
-      col("obs"), col("obs_datetimes"), col("max_date_created"))
-  }
+  private def aggEncounterless(obsRows: DataFrame): DataFrame =
+    obsRows.filter(col("encounter_id").isNull && col("voided") === 0)
+      .groupBy("person_id", "obs_datetime")
+      .agg(
+        (min(col("obs_id")) + lit(SyntheticEncounterBase)).cast("int").as("encounter_id"),
+        obsAggs: _*)
+      .select(
+        col("person_id"),
+        (lit(FakeVisitBase) + col("encounter_id")).cast("int").as("visit_id"),
+        col("encounter_id"),
+        col("obs_datetime").as("encounter_datetime"),
+        lit(99999).as("encounter_type"),
+        lit(null).cast("int").as("location_id"),
+        col("obs"), col("obs_datetimes"), col("max_date_created"))
 
   /** Canonical schema: exactly [[Schemas.flatObs]]'s columns, so a
     * stored table carrying any other column (an older layout's extras)

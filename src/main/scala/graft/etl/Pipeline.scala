@@ -1,11 +1,11 @@
 package graft.etl
 
-import java.nio.charset.StandardCharsets
 import java.sql.Timestamp
-import org.apache.hadoop.fs.{FileContext, Options, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+import graft.core.AtomicFile
 import graft.operators.{BucketedSink, Watermark}
 import Pipeline.{PersonTables, StageBounds, StagePlan, releaseCheckpoint}
 
@@ -45,8 +45,8 @@ final case class SourceDeltas(
   * Delta/Iceberg MERGE instead) → append run rows to flat_log. A tick with
   * nothing above any bound only appends the run rows (see [[tick]]).
   *
-  * `bucketsOverride` is the bucket count of every person-keyed table, the
-  * [[BucketedSink.sizeBuckets]] floor when absent. The tables do not move
+  * `bucketsOverride` is the bucket count of every person-keyed table,
+  * [[BucketedSink.DefaultBuckets]] when absent. The tables do not move
   * between counts: a root written with another count is refused.
   */
 class Pipeline(
@@ -69,8 +69,8 @@ class Pipeline(
   // ---- versioned snapshot layout (purged_persons) ----
   // Each write lands in a fresh `v_<n>` directory under the table path;
   // `_CURRENT` is a one-line pointer file naming the live version. The
-  // pointer is replaced with FileContext.rename(OVERWRITE) — a single
-  // atomic rename on HDFS and local filesystems — so a concurrent reader
+  // pointer is replaced through [[AtomicFile]] — a single atomic rename
+  // on HDFS and local filesystems — so a concurrent reader
   // either resolves the old version or the new one, never a missing or
   // half-written table (the directory-swap this replaces had a window
   // where the table path did not exist at all). The previous version is
@@ -80,25 +80,14 @@ class Pipeline(
   private def hadoopConf = spark.sparkContext.hadoopConfiguration
   private def pointerPath(name: String) = new Path(path(name), "_CURRENT")
 
-  private def currentVersion(name: String): Option[String] = {
-    val ptr = pointerPath(name)
-    val fs = ptr.getFileSystem(hadoopConf)
-    if (!fs.exists(ptr)) None
-    else {
-      val in = fs.open(ptr)
-      try {
-        val buf = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 4096, false)
-        Some(new String(buf.toByteArray, StandardCharsets.UTF_8).trim)
-      } finally in.close()
-    }
-  }
+  private def currentVersion(name: String): Option[String] =
+    AtomicFile.read(hadoopConf, pointerPath(name)).map(_.trim)
 
   // ---- bucketed layout (the five person-keyed tables) ----
   // Incremental ticks overwrite only the buckets of touched persons
   // (O(delta) write) under `<table>/buckets`.
 
-  val sinkBuckets: Int = bucketsOverride.getOrElse(BucketedSink.sizeBuckets(0))
+  val sinkBuckets: Int = bucketsOverride.getOrElse(BucketedSink.DefaultBuckets)
   private[graft] def bucketedDataPath(name: String) = new Path(path(name), "buckets")
   private[graft] def bucketedExists(name: String): Boolean =
     BucketedSink.exists(hadoopConf, bucketedDataPath(name).toString)
@@ -136,27 +125,10 @@ class Pipeline(
   // cascade's stage facade below) drop the marker.
   private def markerPath = new Path(path("purged_persons"), "_CONSISTENT")
 
-  private def readMarker(): Option[String] = {
-    val fs = markerPath.getFileSystem(hadoopConf)
-    if (!fs.exists(markerPath)) None
-    else {
-      val in = fs.open(markerPath)
-      try {
-        val buf = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 4096, false)
-        Some(new String(buf.toByteArray, StandardCharsets.UTF_8))
-      } finally in.close()
-    }
-  }
+  private def readMarker(): Option[String] = AtomicFile.read(hadoopConf, markerPath)
 
-  private[graft] def writeMarker(sig: String): Unit = {
-    val fs = markerPath.getFileSystem(hadoopConf)
-    val tmp = new Path(path("purged_persons"), "_CONSISTENT.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(sig.getBytes(StandardCharsets.UTF_8)) finally out.close()
-    FileContext.getFileContext(markerPath.toUri, hadoopConf)
-      .rename(tmp, markerPath, Options.Rename.OVERWRITE)
-  }
+  private[graft] def writeMarker(sig: String): Unit =
+    AtomicFile.replace(hadoopConf, markerPath, sig)
 
   private[graft] def dropMarker(): Unit = {
     val fs = markerPath.getFileSystem(hadoopConf)
@@ -176,11 +148,6 @@ class Pipeline(
   // The streamed cascade (IncrementalEtlStream) drives the same
   // stage code per micro-batch with a batch-derived watermark; these
   // give it the tick's write discipline without the flat_log plumbing.
-
-  /** Touched-key delta state for one bucketed stage merge: checkpoint
-    * the queue, collect its bucket ids, prune the stored table to them. */
-  private[graft] def stageDelta(name: String, queue: DataFrame): BucketedDelta =
-    bucketedDelta(name, queue)
 
   /** First write of a bucketed table: every bucket into a fresh epoch.
     * Bypasses the run log, so the purged-log consistency marker no
@@ -222,12 +189,7 @@ class Pipeline(
     val prev = currentVersion(name)
     val next = "v_" + (prev.map(_.stripPrefix("v_").toLong + 1).getOrElse(0L))
     df.write.mode("overwrite").parquet(new Path(dir, next).toString)
-
-    val tmp = new Path(dir, "_CURRENT.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(next.getBytes(StandardCharsets.UTF_8)) finally out.close()
-    FileContext.getFileContext(dir.toUri, hadoopConf)
-      .rename(tmp, pointerPath(name), Options.Rename.OVERWRITE)
+    AtomicFile.replace(hadoopConf, pointerPath(name), next)
 
     // purge everything but the live version and its predecessor
     val keep = Set(next) ++ prev
@@ -309,7 +271,10 @@ class Pipeline(
     def release(): Unit = releaseCheckpoint(queue)
   }
 
-  private def bucketedDelta(name: String, queue: DataFrame): BucketedDelta = {
+  /** Touched-key delta state for one bucketed stage merge: checkpoint
+    * the queue, collect its bucket ids, prune the stored table to them.
+    * Shared by [[tick]] and the streamed cascade. */
+  private[graft] def bucketedDelta(name: String, queue: DataFrame): BucketedDelta = {
     // localCheckpoint, not cache: the queue plan reads the stored table
     // (change feed / merge read), and every stage's own write calls
     // refreshByPath on that table — which drops ANY cached plan
@@ -323,9 +288,8 @@ class Pipeline(
     // just-committed delta epoch. The frame is O(delta persons), so
     // either is cheap.)
     val q = queue.localCheckpoint()
-    val p = bucketedDataPath(name).toString
     val buckets = BucketedSink.collectBuckets(q, sinkBuckets)
-    BucketedDelta(q, buckets, BucketedSink.readBuckets(spark, p, buckets))
+    BucketedDelta(q, buckets, readFlatBuckets(name, buckets))
   }
 
   /** Bucketed-sink write hook: full write into a fresh epoch on first
@@ -478,8 +442,7 @@ class Pipeline(
             else Seq("flat_obs", "flat_orders", "flat_lab_obs",
                 "flat_visit_summary")
               .filter(present)
-              .map(n => BucketedSink.readBuckets(
-                spark, bucketedDataPath(n).toString, claimedBuckets)
+              .map(n => readFlatBuckets(n, claimedBuckets)
                 .select("person_id")
                 .join(claimed, Seq("person_id"), "left_semi"))
               .reduceOption(_ union _)
@@ -567,14 +530,11 @@ class Pipeline(
           // upstream rows live in the same bucket ids.
           val queue =
             if (summaryAligned && foDelta != null) {
-              val foScoped = BucketedSink.readBuckets(spark,
-                bucketedDataPath("flat_obs").toString, foDelta.buckets)
+              val foScoped = readFlatBuckets("flat_obs", foDelta.buckets)
               // summary shares the person-hash bucketing, so queued
               // persons' summary rows live in the same bucket ids —
               // the retraction probe side is O(delta) files too
-              val sumScoped = BucketedSink.readBuckets(spark,
-                bucketedDataPath("flat_visit_summary").toString,
-                foDelta.buckets)
+              val sumScoped = readFlatBuckets("flat_visit_summary", foDelta.buckets)
               FlatVisitSummary.touchedPersonsBounded(sumScoped, foScoped,
                 foDelta.queue, obs, encounter, wm, obsD, encD)
             } else
@@ -583,10 +543,8 @@ class Pipeline(
                 obs, encounter, wm, obsD, encD)
           val d = noteDelta(bucketedDelta("flat_visit_summary", queue))
           sumDelta = d
-          val foPruned = BucketedSink.readBuckets(
-            spark, bucketedDataPath("flat_obs").toString, d.buckets)
-          val fordPruned = BucketedSink.readBuckets(
-            spark, bucketedDataPath("flat_orders").toString, d.buckets)
+          val foPruned = readFlatBuckets("flat_obs", d.buckets)
+          val fordPruned = readFlatBuckets("flat_orders", d.buckets)
           FlatVisitSummary.incremental(d.prunedExisting, foPruned, fordPruned,
             obs, encounter, person, wm, Some(d.queue))
         } else FlatVisitSummary.build(

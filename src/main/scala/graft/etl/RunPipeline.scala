@@ -12,7 +12,10 @@ import org.apache.spark.sql.SparkSession
   *               first run; subsequent runs are incremental)
   *
   * With no args, runs a self-contained demo on the generated OpenMRS-shaped
-  * fixture into a temp dir.
+  * fixture into a temp dir. The demo's fresh root is written with 8
+  * buckets per table, sized to its 200 persons; a CLI output root gets
+  * the [[Pipeline]] default and keeps the count it was first written
+  * with.
   */
 object RunPipeline {
   def main(args: Array[String]): Unit = {
@@ -26,22 +29,22 @@ object RunPipeline {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val (obs, enc, orders, person, outDir) = args match {
+    val (obs, enc, orders, person, outDir, buckets) = args match {
       case Array(src, out) =>
         (spark.read.parquet(s"$src/obs.parquet"),
           spark.read.parquet(s"$src/encounter.parquet"),
           spark.read.parquet(s"$src/orders.parquet"),
           spark.read.parquet(s"$src/person.parquet"),
-          out)
+          out, None)
       case _ =>
         val fx = OpenMrsFixture.generate(spark, nPersons = 200)
         val out = java.nio.file.Files.createTempDirectory("graft-flat").toString
         println(s"[demo mode] generated fixture; output -> $out")
-        (fx("obs"), fx("encounter"), fx("orders"), fx("person"), out)
+        (fx("obs"), fx("encounter"), fx("orders"), fx("person"), out, Some(8))
     }
 
     val t0 = System.currentTimeMillis()
-    val pipe = new Pipeline(spark, outDir)
+    val pipe = new Pipeline(spark, outDir, buckets)
     pipe.tick(obs, enc, orders, person)
     val secs = (System.currentTimeMillis() - t0) / 1000.0
     Seq("flat_obs", "flat_orders", "flat_lab_obs", "flat_visit_summary",

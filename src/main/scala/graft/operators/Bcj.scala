@@ -9,7 +9,7 @@ package graft.operators
   * SDK / xz `x86` branch filter is public domain and the algorithm is
   * documented in the xz file-format ecosystem); validated
   * differentially against xz-java's X86Options via XzSpec and
-  * tools/XzDiff.
+  * the XzDiff sweep (graft.tools.XzDiff, test sources).
   *
   * The transform is size-preserving and runs in place over one
   * block's uncompressed bytes (filter state is per-block in .xz).

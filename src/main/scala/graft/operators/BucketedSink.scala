@@ -1,12 +1,11 @@
 package graft.operators
 
-import java.nio.charset.StandardCharsets
-
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileContext, Options, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
+import graft.core.AtomicFile
 
 /** Bucket-partitioned incremental sink — the "write O(delta), not
   * O(table)" path (a poor man's Delta/Iceberg MERGE on plain parquet).
@@ -19,8 +18,8 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * incremental tick writes ONLY the buckets containing touched keys into
   * a fresh epoch — at 100 TB with a steady-state delta touching a few
   * thousand persons, that is a few buckets instead of the whole table —
-  * then commits by atomically replacing the manifest
-  * (FileContext.rename OVERWRITE, a single atomic rename on HDFS and
+  * then commits by atomically replacing the manifest ([[AtomicFile]]:
+  * FileContext.rename OVERWRITE, a single atomic rename on HDFS and
   * local filesystems).
   *
   * The commit point is the manifest swap, so a concurrent reader
@@ -39,26 +38,21 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * incremental write near 10% of the table (delta keys clustered by
   * recency do even better). A bucket count far below the delta size
   * silently degrades every "incremental" write to a near-full rewrite.
+  * Floor the count at 64 so toy tables still exercise the pruning paths.
+  * On a LOCAL filesystem a per-file open/list constant dwarfs the scan
+  * at tens of thousands of near-empty files, so tests and single-node
+  * runs trade write fraction for file count (a smaller count means a
+  * larger fraction of the table rewritten per tick — measured in
+  * SCALE.md); a real DFS amortizes per-file metadata across datanodes
+  * and follows the rule uncapped.
   */
 object BucketedSink {
 
-  def bucketOf(key: Column, nBuckets: Int): Column = pmod(hash(key), lit(nBuckets))
+  /** The bucket count a table gets when its writer names none: the
+    * sizing rule's floor. */
+  val DefaultBuckets = 64
 
-  /** The sizing rule above, as code: `nBuckets` = 10x the expected
-    * steady-state delta key count (write fraction ≈ 1 - exp(-1/10) ≈
-    * 10%), floored at 64 so toy tables still exercise the pruning
-    * paths. `localFsCap` bounds the count when the table lives on a
-    * LOCAL filesystem: a local FS pays a per-file open/list constant
-    * that dwarfs the scan at tens of thousands of near-empty files, so
-    * tests and single-node runs trade write-fraction for file count (a
-    * capped count means a larger fraction of the table rewritten per
-    * tick — disclosed, measured in SCALE.md). A real DFS amortizes
-    * per-file metadata across datanodes and follows the rule uncapped —
-    * pass `localFsCap = Int.MaxValue` there. */
-  def sizeBuckets(
-      expectedDeltaKeys: Long,
-      localFsCap: Int = Int.MaxValue): Int =
-    math.min(localFsCap.toLong, math.max(64L, expectedDeltaKeys * 10)).toInt
+  def bucketOf(key: Column, nBuckets: Int): Column = pmod(hash(key), lit(nBuckets))
 
   private def manifestPath(path: String) = new Path(path, "_MANIFEST")
   private def schemaPath(path: String) = new Path(path, "_SCHEMA")
@@ -78,31 +72,12 @@ object BucketedSink {
   // and pick one up on their next write.
 
   /** The recorded logical schema (no `__bucket`), if the table has one. */
-  def readSchema(conf: Configuration, path: String): Option[StructType] = {
-    val p = schemaPath(path)
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try {
-        val buf = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 4096, false)
-        Some(DataType.fromJson(
-          new String(buf.toByteArray, StandardCharsets.UTF_8))
-          .asInstanceOf[StructType])
-      } finally in.close()
-    }
-  }
+  def readSchema(conf: Configuration, path: String): Option[StructType] =
+    AtomicFile.read(conf, schemaPath(path))
+      .map(DataType.fromJson(_).asInstanceOf[StructType])
 
-  private def writeSchema(conf: Configuration, path: String, s: StructType): Unit = {
-    val dir = new Path(path)
-    val fs = dir.getFileSystem(conf)
-    val tmp = new Path(dir, "_SCHEMA.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(s.json.getBytes(StandardCharsets.UTF_8)) finally out.close()
-    FileContext.getFileContext(dir.toUri, conf)
-      .rename(tmp, schemaPath(path), Options.Rename.OVERWRITE)
-  }
+  private def writeSchema(conf: Configuration, path: String, s: StructType): Unit =
+    AtomicFile.replace(conf, schemaPath(path), s.json)
 
   private def logicalSchema(df: DataFrame): StructType =
     StructType(df.schema.filterNot(_.name == "__bucket"))
@@ -189,38 +164,28 @@ object BucketedSink {
   private val CountLine = "#buckets\t"
 
   /** The manifest, or None before the first writeFull. */
-  private def readManifest(conf: Configuration, path: String): Option[Manifest] = {
-    val p = manifestPath(path)
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try {
-        val buf = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 4096, false)
-        val (count, lines) = new String(buf.toByteArray, StandardCharsets.UTF_8)
-          .split("\n").filter(_.nonEmpty).toSeq.partition(_.startsWith(CountLine))
-        Some(Manifest(
-          lines.map { line =>
-            val Array(b, e) = line.split("\t")
-            b.toInt -> e
-          }.toMap,
-          count.headOption.map(_.stripPrefix(CountLine).toInt)))
-      } finally in.close()
+  private def readManifest(conf: Configuration, path: String): Option[Manifest] =
+    AtomicFile.read(conf, manifestPath(path)).map { body =>
+      val (count, lines) = body
+        .split("\n").filter(_.nonEmpty).toSeq.partition(_.startsWith(CountLine))
+      Manifest(
+        lines.map { line =>
+          val Array(b, e) = line.split("\t")
+          b.toInt -> e
+        }.toMap,
+        count.headOption.map(_.stripPrefix(CountLine).toInt))
     }
-  }
 
-  private def writeManifest(conf: Configuration, path: String, m: Manifest): Unit = {
-    val dir = new Path(path)
-    val fs = dir.getFileSystem(conf)
-    val tmp = new Path(dir, "_MANIFEST.tmp")
-    val body = (m.nBuckets.map(CountLine + _) ++
-      m.epochs.toSeq.sortBy(_._1).map { case (b, e) => s"$b\t$e" }).mkString("\n")
-    val out = fs.create(tmp, true)
-    try out.write(body.getBytes(StandardCharsets.UTF_8)) finally out.close()
-    FileContext.getFileContext(dir.toUri, conf)
-      .rename(tmp, manifestPath(path), Options.Rename.OVERWRITE)
-  }
+  /** The live manifest's bucket → epoch map; a table without one is an
+    * error. */
+  private def liveEpochs(conf: Configuration, path: String): Map[Int, String] =
+    readManifest(conf, path).getOrElse(throw new IllegalStateException(
+      s"no manifest at $path")).epochs
+
+  private def writeManifest(conf: Configuration, path: String, m: Manifest): Unit =
+    AtomicFile.replace(conf, manifestPath(path),
+      (m.nBuckets.map(CountLine + _) ++
+        m.epochs.toSeq.sortBy(_._1).map { case (b, e) => s"$b\t$e" }).mkString("\n"))
 
   private def nextEpoch(conf: Configuration, path: String): String = {
     val dir = new Path(path)
@@ -426,19 +391,8 @@ object BucketedSink {
     * a column was added are projected onto the recorded schema with
     * typed NULLs (see the evolution note on [[readSchema]]). */
   def read(spark: SparkSession, path: String): DataFrame = {
-    val c = spark.sparkContext.hadoopConfiguration
-    val manifest = readManifest(c, path).getOrElse(throw new IllegalStateException(
-      s"no manifest at $path")).epochs
-    if (manifest.isEmpty) emptyTable(spark, path)
-    else {
-      val align: DataFrame => DataFrame =
-        readSchema(c, path).fold(identity[DataFrame] _)(s => alignTo(s, _))
-      manifest.groupBy(_._2).toSeq.sortBy(_._1).map { case (epoch, buckets) =>
-        val base = new Path(path, epoch).toString
-        align(spark.read.option("basePath", base)
-          .parquet(buckets.keys.toSeq.sorted.map(b => s"$base/__bucket=$b"): _*))
-      }.reduce(_ unionByName _).drop("__bucket")
-    }
+    val m = liveEpochs(spark.sparkContext.hadoopConfiguration, path)
+    readFromManifest(spark, path, m, m.keySet)
   }
 
   /** Read ONLY the given buckets of the live table — the file-level prune
@@ -447,12 +401,9 @@ object BucketedSink {
     * bucket, so a merge over a touched-key superset needs exactly these
     * directories; no other file is listed, opened, or scanned. An empty
     * selection yields an empty frame with the table's schema. */
-  def readBuckets(spark: SparkSession, path: String, buckets: Set[Int]): DataFrame = {
-    val c = spark.sparkContext.hadoopConfiguration
-    val manifest = readManifest(c, path).getOrElse(throw new IllegalStateException(
-      s"no manifest at $path")).epochs
-    readFromManifest(spark, path, manifest, buckets)
-  }
+  def readBuckets(spark: SparkSession, path: String, buckets: Set[Int]): DataFrame =
+    readFromManifest(spark, path,
+      liveEpochs(spark.sparkContext.hadoopConfiguration, path), buckets)
 
   /** A table whose every row was deleted has an empty manifest and no
     * parquet file to carry a schema: it reads as an empty frame of the
@@ -464,13 +415,15 @@ object BucketedSink {
   }
 
   /** The bucket-selective read against an ALREADY-RESOLVED manifest —
-    * shared by [[readBuckets]] and the compaction fold, which must read
-    * fold buckets from the same manifest generation it is replacing. */
+    * shared by [[read]], [[readBuckets]] and the compaction fold, which
+    * must read fold buckets from the same manifest generation it is
+    * replacing. The schema sidecar is read once, and only when some
+    * epoch frame needs aligning to it. */
   private def readFromManifest(
       spark: SparkSession, path: String,
       manifest: Map[Int, String], buckets: Set[Int]): DataFrame = {
     val sel = manifest.filter { case (b, _) => buckets.contains(b) }
-    val align: DataFrame => DataFrame =
+    lazy val align: DataFrame => DataFrame =
       readSchema(spark.sparkContext.hadoopConfiguration, path)
         .fold(identity[DataFrame] _)(s => alignTo(s, _))
     if (manifest.isEmpty) emptyTable(spark, path)

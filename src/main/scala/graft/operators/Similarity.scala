@@ -634,10 +634,10 @@ object Similarity {
     * Shape (r17): one-pass per-row fold in `functions.JlProjectExpr` —
     * no |rows|·dIn·dOut explode, no shuffle — engineered to replay the
     * relational form's DECIMAL quantization bit-for-bit (measured 11×,
-    * 2.41 s → 0.22 s at sf0.1 dOut=8). The explode/aggregate form is
-    * kept as [[jlProjectRelational]]: it is the independent reference
-    * the parity gate (JlProjectionSpec, and q163/q170's shared oracle)
-    * compares the expression against.
+    * 2.41 s → 0.22 s at sf0.1 dOut=8). The explode/aggregate form lives
+    * in the test sources (`graft.operators.JlProjectRelational`): it is
+    * the independent reference the parity gate (JlProjectionSpec, and
+    * q163/q170's shared oracle) compares the expression against.
     */
   def jlProject(
       embeddings: DataFrame,
@@ -648,35 +648,6 @@ object Similarity {
     embeddings.select(id.as("vec_id"),
       posexplode(graft.functions.VectorExpressions.jlProject(
         toDouble(vec), dOut, salt)).as(Seq("j", "y")))
-
-  /** The relational explode/aggregate JL projection: posexplode to
-    * (vec, i, x), broadcast the dOut-row dim list (bounded by
-    * construction), one hash aggregate keyed by (vec, j) with map-side
-    * partials. The |rows|·dIn·dOut intermediate is the honest cost of a
-    * dense projection evaluated relationally — kept as the independent
-    * reference implementation the Expression form is gated against
-    * (bit-identical by construction: HALF_UP is symmetric, terms sum
-    * exactly as scale-10 longs).
-    */
-  private[graft] def jlProjectRelational(
-      embeddings: DataFrame,
-      id: Column,
-      vec: Column,
-      dOut: Int,
-      salt: String = "jl"): DataFrame = {
-    val e = embeddings.select(id.as("vec_id"),
-      posexplode(toDouble(vec)).as(Seq("i", "x")))
-    val dims = e.sparkSession.range(dOut)
-      .select(col("id").cast("int").as("j"))
-    val sign = when(
-      conv(substring(md5(concat_ws("|", lit(salt), col("j"), col("i"))), 1, 1),
-        16, 10).cast("int") < 8, 1).otherwise(-1)
-    e.crossJoin(broadcast(dims))
-      .groupBy(col("vec_id"), col("j"))
-      .agg(round(
-        sum((col("x") * sign).cast("decimal(27,10)")).cast("double"), 6)
-        .as("y"))
-  }
 
   /** Projected vectors as an array column (vec_id, pvec: array<double>)
     * — the shape the search operators consume. Uses the one-pass

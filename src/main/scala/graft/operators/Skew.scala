@@ -6,9 +6,11 @@ import org.apache.spark.sql.functions._
 /** Skew mitigation (SURVEY §4: person-level skew — one patient with
   * thousands of encounters makes a single reducer the straggler).
   *
-  * AQE's skew-join splitting handles the join case at runtime; these
-  * helpers cover the cases AQE doesn't: skewed AGGREGATION keys, and
-  * deterministic pre-planned salting when AQE is off.
+  * AQE's skew-join splitting handles the join case at runtime, and
+  * Catalyst's map-side partial aggregation already absorbs a hot key of
+  * a `collect_list` aggregation such as flat_obs's obs map (measured in
+  * SCALE.md). This object holds the explicit two-phase salted form of
+  * a sorted collect, which the catalog's q152 runs.
   */
 object Skew {
 
@@ -33,60 +35,5 @@ object Skew {
     partial
       .groupBy(keys.map(col): _*)
       .agg(sort_array(flatten(collect_list(col("__partial")))).as("sorted_entries"))
-  }
-
-  /** Generalized two-phase salted aggregation: several sorted collect-lists
-    * (each a `struct(orderKeys…, v)` whose null rows are skipped, exactly
-    * like [[graft.functions.MysqlFunctions.groupConcat]]'s input) plus
-    * associative MAX columns, all in the same two shuffles. Phase 1
-    * aggregates per (keys, salt) so a hot key spreads over `saltBuckets`
-    * reducers; phase 2 merges partials (flatten + final sort, max of
-    * maxes). Output: `keys ++ maxCols.names ++ structCols.names`, the
-    * struct columns holding the globally sorted entry arrays.
-    */
-  def saltedSortedAggs(
-      df: DataFrame,
-      keys: Seq[String],
-      structCols: Seq[(String, Column)],
-      maxCols: Seq[(String, Column)],
-      saltBuckets: Int,
-      minCols: Seq[(String, Column)] = Nil): DataFrame = {
-    val salted = df.withColumn(
-      "__salt", pmod(hash(structCols.head._2), lit(saltBuckets)))
-    val phase1 = maxCols.map { case (n, c) => max(c).as(n) } ++
-      minCols.map { case (n, c) => min(c).as(n) } ++
-      structCols.map { case (n, c) =>
-        sort_array(collect_list(when(c.getField("v").isNotNull, c))).as(n)
-      }
-    val partials = salted
-      .groupBy((keys.map(col) :+ col("__salt")): _*)
-      .agg(phase1.head, phase1.tail: _*)
-    val phase2 = maxCols.map { case (n, _) => max(col(n)).as(n) } ++
-      minCols.map { case (n, _) => min(col(n)).as(n) } ++
-      structCols.map { case (n, _) =>
-        sort_array(flatten(collect_list(col(n)))).as(n)
-      }
-    partials
-      .groupBy(keys.map(col): _*)
-      .agg(phase2.head, phase2.tail: _*)
-  }
-
-  /** Salted equi-join for a skewed left side: left rows get a random-ish
-    * (hash-derived, deterministic) salt in [0, n); the right side is
-    * replicated n× so every salted left partition finds its match.
-    * Correct for inner/left joins on `key`; use when a few hot keys
-    * dominate and broadcast isn't possible.
-    */
-  def saltedJoin(
-      skewed: DataFrame,
-      other: DataFrame,
-      key: String,
-      saltBuckets: Int,
-      joinType: String = "inner"): DataFrame = {
-    val saltedLeft = skewed.withColumn(
-      "__salt", pmod(hash(struct(skewed.columns.toIndexedSeq.map(col): _*)), lit(saltBuckets)))
-    val replicatedRight = other.withColumn(
-      "__salt", explode(sequence(lit(0), lit(saltBuckets - 1))))
-    saltedLeft.join(replicatedRight, Seq(key, "__salt"), joinType).drop("__salt")
   }
 }

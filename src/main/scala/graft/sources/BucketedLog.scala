@@ -72,16 +72,6 @@ object BucketedLog {
     p.getFileSystem(conf).exists(p)
   }
 
-  /** Seed (or re-seed) the log with the full version history — first
-    * arrival only. Overwrite, not append, so a crash-and-replay of the
-    * seeding batch is idempotent. */
-  def overwrite(df: DataFrame, path: String, keyCol: String, nBuckets: Int): Unit =
-    write(df, path, keyCol, nBuckets, "overwrite")
-
-  /** Append one batch of version rows. */
-  def append(df: DataFrame, path: String, keyCol: String, nBuckets: Int): Unit =
-    write(df, path, keyCol, nBuckets, "append")
-
   /** Append `df` if the batch is sparse (its keys touch at most
     * `denseFraction` of the buckets — the regime where bucketed layout
     * buys pruned reads), folding any accumulated residue first; defer it
@@ -98,7 +88,7 @@ object BucketedLog {
       defer(df.sparkSession, path, sourceFiles)
     else {
       fold(df.sparkSession, path, keyCol, nBuckets, schema)
-      write(df, path, keyCol, nBuckets, "append")
+      append(df, path, keyCol, nBuckets)
     }
   }
 
@@ -130,8 +120,8 @@ object BucketedLog {
       schema: StructType): Unit = {
     val files = residueFiles(spark, path)
     if (files.isEmpty) return
-    write(spark.read.schema(schema).parquet(files.map(_._2).flatten: _*),
-      path, keyCol, nBuckets, "append")
+    append(spark.read.schema(schema).parquet(files.map(_._2).flatten: _*),
+      path, keyCol, nBuckets)
     val dir = new Path(new Path(path), ResidueDir)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     files.foreach { case (manifest, _) => fs.delete(manifest, false) }
@@ -154,14 +144,12 @@ object BucketedLog {
       }
   }
 
-  private def write(
-      df: DataFrame, path: String, keyCol: String, nBuckets: Int,
-      mode: String): Unit =
+  private def append(df: DataFrame, path: String, keyCol: String, nBuckets: Int): Unit =
     df.withColumn(BucketCol, BucketedSink.bucketOf(col(keyCol), nBuckets))
       // co-locate each bucket's rows so the write lands one file per
       // touched bucket instead of tasks x buckets slivers
       .repartition(col(BucketCol))
-      .write.partitionBy(BucketCol).mode(mode).parquet(path)
+      .write.partitionBy(BucketCol).mode("append").parquet(path)
 
   /** All version rows of the given buckets — pruned at the DIRECTORY
     * level: bucket directory names are deterministic, so the selected

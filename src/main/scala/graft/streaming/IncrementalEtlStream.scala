@@ -144,22 +144,15 @@ object IncrementalEtlStream {
       spark: SparkSession, checkpointDir: String, batchId: Long): Seq[String] = {
     val p = new org.apache.hadoop.fs.Path(
       new org.apache.hadoop.fs.Path(checkpointDir, "sources/0"), batchId.toString)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return Seq.empty
-    val in = fs.open(p)
-    val body = try {
-      val buf = new java.io.ByteArrayOutputStream()
-      val chunk = new Array[Byte](64 * 1024)
-      var n = in.read(chunk)
-      while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-      buf.toString("UTF-8")
-    } finally in.close()
     val entry = """"path"\s*:\s*"((?:[^"\\]|\\.)*)"""".r
-    entry.findAllMatchIn(body).map { m =>
-      // minimal JSON string unescape — source paths are URIs, where only
-      // these escapes plausibly occur
-      m.group(1).replace("\\/", "/").replace("\\\\", "\\").replace("\\\"", "\"")
-    }.toSeq
+    graft.core.AtomicFile.read(spark.sparkContext.hadoopConfiguration, p)
+      .fold(Seq.empty[String]) { body =>
+        entry.findAllMatchIn(body).map { m =>
+          // minimal JSON string unescape — source paths are URIs, where
+          // only these escapes plausibly occur
+          m.group(1).replace("\\/", "/").replace("\\\\", "\\").replace("\\\"", "\"")
+        }.toSeq
+      }
   }
 
   private[graft] def fsBytesRead: Long = graft.core.IoStats.fsBytesRead
@@ -340,7 +333,7 @@ object IncrementalEtlStream {
       }
       val foQueue = FlatObs.touchedPersons(batch, encounter, person,
         wm, Some(batch), purgeSet = Some(purge))
-      val foD = t("flat_obs queue")(pipeline.stageDelta("flat_obs", foQueue))
+      val foD = t("flat_obs queue")(pipeline.bucketedDelta("flat_obs", foQueue))
       // Touched persons' history from the bucketed log — bytes opened are
       // O(touched buckets' history), not O(accumulated source directory):
       // all versions of an obs_id share a person_id, so the queue's
@@ -359,7 +352,7 @@ object IncrementalEtlStream {
         val labQueue = FlatLabObs.touchedPersons(batch, person, wm,
           Some(batch), purgeSet = Some(purge))
         val labD = t("flat_lab_obs queue")(
-          pipeline.stageDelta("flat_lab_obs", labQueue))
+          pipeline.bucketedDelta("flat_lab_obs", labQueue))
         try t("flat_lab_obs") {
           pipeline.writeBucketedChanged(
             FlatLabObs.incremental(labD.prunedExisting, snapshot, person,
@@ -373,7 +366,7 @@ object IncrementalEtlStream {
         val sumQueue = FlatVisitSummary.touchedPersonsBounded(
           sumScoped, foScoped, foD.queue, snapshot, encounter, wm, Some(batch))
         val sumD = t("flat_visit_summary queue")(
-          pipeline.stageDelta("flat_visit_summary", sumQueue))
+          pipeline.bucketedDelta("flat_visit_summary", sumQueue))
         try {
           val foPruned = pipeline.readFlatBuckets("flat_obs", sumD.buckets)
           val fordPruned = pipeline.readFlatBuckets("flat_orders", sumD.buckets)

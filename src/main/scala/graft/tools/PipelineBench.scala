@@ -38,7 +38,6 @@ object PipelineBench {
 
   def run(spark: SparkSession): Seq[(String, Double)] = {
     val nPersons = sys.env.getOrElse("SPARK_GRAFT_TICK_PERSONS", "2000").toInt
-    val salt = sys.env.getOrElse("SPARK_GRAFT_TICK_SALT", "0")
     // Bucket-count sizing is what makes the O(delta) write claim true:
     // an incremental epoch rewrites WHOLE touched buckets, so expected
     // write fraction ≈ 1 - exp(-deltaKeys/buckets) — buckets must exceed
@@ -53,9 +52,7 @@ object PipelineBench {
     val buckets = sys.env.get("SPARK_GRAFT_TICK_BUCKETS").map(_.toInt)
       .getOrElse(math.max(64, nPersons / 5))
     val root = java.nio.file.Files.createTempDirectory("graft-tickbench")
-    val prevConf = Seq(graft.etl.FlatObs.SaltConfKey).map(k => k -> spark.conf.getOption(k))
     try {
-      if (salt != "0") spark.conf.set(graft.etl.FlatObs.SaltConfKey, salt)
       // SPARK_GRAFT_TICK_DEBUG=1 prints per-phase wall/bytes for every
       // tick (stages + the unlogged phases) — attribution, off by default
       if (sys.env.get("SPARK_GRAFT_TICK_DEBUG").contains("1"))
@@ -230,10 +227,6 @@ object PipelineBench {
                else 0.0))
         }
     } finally {
-      prevConf.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
       // best-effort temp cleanup
       try {
         val s = java.nio.file.Files.walk(root)

@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Every settable knob the library reads — a Spark conf key through
   * `conf.get`/`conf.getOption`, or an environment variable through
   * `sys.env` — must be on the allowed list below. A key read through a
-  * named constant (`val SaltConfKey = "graft.…"`) is resolved to its
+  * named constant (`val SomeConfKey = "graft.…"`) is resolved to its
   * value; an argument the scan cannot resolve fails, so a knob cannot
   * slip in behind a computed name. Adding a knob means editing this
   * list, in the same change, where review sees it.
@@ -15,7 +15,6 @@ class OptionsGuardSpec extends AnyFunSuite {
   private val scanned = Seq("etl", "streaming", "operators", "sources", "functions")
 
   private val allowed = Set(
-    "graft.skew.obsAggSaltBuckets", // salted obs-map aggregation (FlatObs)
     "SPARK_GRAFT_CPUS", // RunPipeline's local master
     // env-gated println timers, to be replaced by per-stage run records
     "graft.debug.tickTiming",

@@ -19,10 +19,10 @@ class JlProjectionSpec extends SparkSuite {
     val df = fixture(40, 32)
     // the relational reference's DECIMAL fold is bit-stable under any
     // partitioning; jlProject (the Expression delegate) must match it
-    val a = Similarity.jlProjectRelational(df.repartition(1), col("vec_id"),
+    val a = JlProjectRelational.jlProjectRelational(df.repartition(1), col("vec_id"),
       col("embedding"), dOut = 8)
       .as[(Long, Int, Double)].collect().sortBy(r => (r._1, r._2)).toSeq
-    val b = Similarity.jlProjectRelational(df.repartition(8), col("vec_id"),
+    val b = JlProjectRelational.jlProjectRelational(df.repartition(8), col("vec_id"),
       col("embedding"), dOut = 8)
       .as[(Long, Int, Double)].collect().sortBy(r => (r._1, r._2)).toSeq
     assert(a == b) // DECIMAL fold: bit-stable under any partitioning
@@ -58,7 +58,7 @@ class JlProjectionSpec extends SparkSuite {
 
   test("Expression form is bit-identical to the relational DECIMAL form") {
     val df = fixture(60, 32)
-    val relational = Similarity.jlProjectRelational(df, col("vec_id"),
+    val relational = JlProjectRelational.jlProjectRelational(df, col("vec_id"),
         col("embedding"), dOut = 8)
       .as[(Long, Int, Double)].collect().sortBy(r => (r._1, r._2)).toSeq
     val viaExpr = df.select(col("vec_id"),
@@ -78,7 +78,7 @@ class JlProjectionSpec extends SparkSuite {
     val df = Seq((1L, Array(9.4e8f, -9.4e8f, 1.5f)),
         (2L, Array(9.3e8f, 2.5f, -3.5f)))
       .toDF("vec_id", "embedding")
-    val relational = Similarity.jlProjectRelational(df, col("vec_id"),
+    val relational = JlProjectRelational.jlProjectRelational(df, col("vec_id"),
         col("embedding"), dOut = 4)
       .as[(Long, Int, Double)].collect().sortBy(r => (r._1, r._2)).toSeq
     val viaExpr = df.select(col("vec_id"),

@@ -19,15 +19,4 @@ class SkewSpec extends SparkSuite {
     val b = plain.orderBy("k").as[(String, Seq[Int])].collect().toSeq
     assert(a == b)
   }
-
-  test("saltedJoin matches plain join results") {
-    import spark.implicits._
-    val big = (1 to 500).map(i => (i % 3, i)).toDF("key", "payload")
-    val dim = Seq((0, "a"), (1, "b"), (2, "c"), (9, "unused")).toDF("key", "label")
-    val salted = Skew.saltedJoin(big, dim, "key", 4)
-      .select("key", "payload", "label")
-    val plain = big.join(dim, Seq("key")).select("key", "payload", "label")
-    assert(salted.orderBy("key", "payload").collect().toSeq ==
-      plain.orderBy("key", "payload").collect().toSeq)
-  }
 }

@@ -8,7 +8,7 @@ binary-with-structure), sizes 0..~1 MiB, and random FLUSH splits — then
 require graft.operators.Brotli to decode every one byte-exactly
 (graft.tools.BrotliDiff). Seeded, so a failure reproduces.
 
-Usage: python3 tools/fuzz_brotli_diff.py [N=200] [seed=1]
+Usage: python3 tools/fuzz_brotli_diff.py [N=200] [seed=1]  (after `sbt Test/compile`)
 """
 import ctypes
 import hashlib

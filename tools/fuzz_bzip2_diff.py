@@ -8,7 +8,7 @@ that stress RUNA/RUNB and the RLE1 count-byte layer, mixed, empty,
 require graft.operators.Bzip2 to decode every one byte-exactly
 (graft.tools.Bzip2Diff). Seeded, so a failure reproduces.
 
-Usage: python3 tools/fuzz_bzip2_diff.py [N=200] [seed=1]
+Usage: python3 tools/fuzz_bzip2_diff.py [N=200] [seed=1]  (after `sbt Test/compile`)
 """
 import bz2
 import os

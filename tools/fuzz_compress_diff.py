@@ -13,7 +13,7 @@ reference DECODER — so the sweep runs both directions through it:
 
 Seeded, so a failure reproduces.
 
-Usage: python3 tools/fuzz_compress_diff.py [N=200] [seed=1]
+Usage: python3 tools/fuzz_compress_diff.py [N=200] [seed=1]  (after `sbt Test/compile`)
 """
 import os
 import random

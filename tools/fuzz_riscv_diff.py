@@ -26,7 +26,7 @@ XzSpec:
   - non-converting AUIPCs still consume positions: failed pair
     advances 6, failed marker 4 — the decoder replays the same skips.
 
-Usage: python3 tools/fuzz_riscv_diff.py [N=200] [seed=1]
+Usage: python3 tools/fuzz_riscv_diff.py [N=200] [seed=1]  (after `sbt Test/compile`)
 """
 import os
 import random

@@ -9,7 +9,7 @@ LZW streams cross every early-change width boundary and the
 one byte-exactly (graft.tools.TiffDiff). Seeded, so a failure
 reproduces.
 
-Usage: python3 tools/fuzz_tiff_diff.py [N=200] [seed=1]
+Usage: python3 tools/fuzz_tiff_diff.py [N=200] [seed=1]  (after `sbt Test/compile`)
 """
 import ctypes
 import os

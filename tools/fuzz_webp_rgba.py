@@ -6,7 +6,7 @@ dims 3..180 incl. odd/prime sizes, with and without alpha), dump
 (Vp8 decode -> fancy upsample -> fixed-point matrix -> ALPH merge) to
 agree sample-exactly (graft.tools.WebpRgbDiff). Seeded.
 
-Usage: python3 tools/fuzz_webp_rgba.py [N=150] [seed=1]
+Usage: python3 tools/fuzz_webp_rgba.py [N=150] [seed=1]  (after `sbt Test/compile`)
 """
 import ctypes
 import os

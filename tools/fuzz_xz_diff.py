@@ -10,7 +10,7 @@ exposes here; ARM64 is xz-java-pinned in XzSpec), plus multi-stream
 concatenation — then require graft.operators.Xz to decode every one
 byte-exactly (graft.tools.XzDiff). Seeded, so a failure reproduces.
 
-Usage: python3 tools/fuzz_xz_diff.py [N=200] [seed=1]
+Usage: python3 tools/fuzz_xz_diff.py [N=200] [seed=1]  (after `sbt Test/compile`)
 """
 import lzma
 import os

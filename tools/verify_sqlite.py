@@ -5,7 +5,7 @@ must open and agree with — schema objects, row counts, row text.
 (The forward half — real-engine databases read by the graft census —
 runs in SqliteSpec.)
 
-Usage: python3 tools/verify_sqlite.py  (after sbt compile)
+Usage: python3 tools/verify_sqlite.py  (after `sbt Test/compile`)
 """
 import os
 import sqlite3

@@ -7,7 +7,7 @@ Vp8InteropSpec proves graft reads real libwebp files bit-exactly; this
 proves libwebp reads graft's files — a self-consistent
 encoder/decoder pair cannot fake either direction.
 
-Usage:
+Usage (after `sbt Test/compile`):
   tools/runjava.sh graft.tools.DumpWebpFixtures /tmp/graft-webp-enc
   python3 tools/verify_webp_encoders.py /tmp/graft-webp-enc
 """
